@@ -83,6 +83,8 @@ object Plans {
     * — writes <outDir>/<query>_<suffix>.txt per query (the per-round
     * before/after plan evidence under plans/rNN/). */
   def dump(args: Array[String]): Unit = {
+    require(args.length >= 3,
+      "usage: PlanDump <outDir> <suffix> <query> [query...]")
     val outDir = args(0)
     val suffix = args(1)
     val names = args.drop(2)

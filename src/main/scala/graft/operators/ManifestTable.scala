@@ -540,9 +540,12 @@ object ManifestTable {
     * hash-set `InSet` above the conversion threshold — O(1) per row);
     * NULL / cast-failed rows are KEPT (membership of NULL in any set is
     * false for deletion purposes, same contract as [[deleteRange]]).
-    * For id sets beyond what a broadcast literal set should carry
-    * (~10⁷), stage the ids as a table and anti-join instead. Returns
-    * the committed version (unchanged when no envelope holds any id). */
+    * The literal `IN` list carries every distinct id and has NO size
+    * cap here — unlike [[upsert]] and [[merge]], which switch to a
+    * broadcast anti-join above [[MaxInSetLiterals]] (8,192 keys). For
+    * large id sets, stage the ids as a table and anti-join instead.
+    * Returns the committed version (unchanged when no envelope holds
+    * any id). */
   def deleteIds(spark: SparkSession, path: String, c: String,
       ids: Seq[Long], statsCols: Seq[String] = Nil): Long = {
     require(ids.nonEmpty, "deleteIds: empty id set")
@@ -1494,15 +1497,20 @@ object ManifestTable {
     // footer opens are independent per file and I/O-bound — read them
     // in parallel on the driver (a 16-file write pays one footer
     // latency, not sixteen in sequence; ~35 stats-carrying writes per
-    // sweep make this a per-gate constant). Any per-file failure —
-    // FooterBail or a transient FS error — falls back to the scan pass
-    // for the WHOLE write, exactly like the sequential shape did.
+    // sweep make this a per-gate constant). Any per-file failure falls
+    // back to the scan pass for the WHOLE write: FooterBail silently
+    // (the footer is untrustworthy by design), any other error — an FS
+    // or footer-read fault — with a stderr line naming the file, so a
+    // degraded stats path is visible.
     import scala.collection.parallel.CollectionConverters._
     val perFile: Seq[Option[(String, String)]] = names.par.map { n =>
       try Some(footerStatsOfFile(dir, n, conf, statsCols))
       catch {
         case FooterBail => None
-        case scala.util.control.NonFatal(_) => None
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[manifest] footer stats of $n failed, " +
+            s"using scan-derived stats: ${e.getMessage}")
+          None
       }
     }.seq
     if (perFile.exists(_.isEmpty)) None
