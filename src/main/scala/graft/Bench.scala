@@ -1,18 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC like Verify/Plans/GraftSession: the unix_micros(cast) paths
-      // (sessionize, f12, w08) are only value-preserving under UTC — a
-      // non-UTC host would bench different session/interval shapes than
-      // the gates verify.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder("graft-bench")
       // the app-status store tracks every job/stage/task/SQL execution
       // even with the UI off; a 160+-gate sweep accumulates tens of
       // thousands of entries. Keep only a token history — a benchmark
@@ -122,17 +112,8 @@ object Bench {
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
         }
         val dt = (System.nanoTime() - t0) / 1e9
-        // storage hygiene OUTSIDE the timed section: iterative gates
-        // leave localCheckpoint RDD blocks behind until GC; 150+ gates
-        // of accumulation inflates later gates via memory pressure
-        // (g01 measured ~1.5s slower mid-sweep than solo). A real
-        // deployment runs one job per session — this restores that
-        // assumption per gate. SweepCache fixtures are the one
-        // deliberate exception: shared across gates by design.
-        spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-          if (!SweepCache.isProtected(id)) rdd.unpersist(blocking = false)
-        }
-        spark.sharedState.cacheManager.clearCache()
+        // storage hygiene OUTSIDE the timed section
+        SweepCache.releaseGateStorage(spark)
         (name, dt, ok)
       }
     }

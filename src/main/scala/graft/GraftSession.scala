@@ -11,6 +11,10 @@ import org.apache.spark.sql.SparkSession
   * engine's working set, and local-mode shuffle parallelism from
   * SPARK_GRAFT_CPUS. On a real cluster, master/memory/shuffle come from
   * spark-submit and everything here still applies.
+  *
+  * This is the only place the engine configures a session: every main,
+  * the spec suite and the benchmark build from [[configure]], so what
+  * ships is what is verified, tested and measured.
   */
 object GraftSession {
 

@@ -78,6 +78,17 @@ object Plans {
     "p29_files_metadata", "p30_shallow_clone", "p31_merge_ingest",
     "p32_compact_small", "p33_check_constraint")
 
+  /** The shipped session over a fixed `local[4]` with 4 shuffle
+    * partitions, so committed plans do not depend on the host's cores. */
+  private def session(): SparkSession = {
+    val s = GraftSession.builder("graft-plans")
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
   /** Dump explain("formatted") of named queries to individual files:
     * runMain graft.PlanDump <outDir> <suffix> <query> [query...]
     * — writes <outDir>/<query>_<suffix>.txt per query (the per-round
@@ -90,13 +101,7 @@ object Plans {
     val names = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
@@ -111,13 +116,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outFile = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of representative queries\n\n")
     sb.append(s"Generated by `graft.Plans` on `$sfDir`. Things to look for:\n")

@@ -1,23 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // µs parquet timestamps: the driver + check.py compare output
-      // TYPES against DuckDB's µs-unit arrow schema — INT96/ns output
-      // reads back as timestamp[ns] and trips the type-drift guard
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the shipped session; its µs parquet timestamps matter here: the
+    // oracle compare (tools/check.py) checks output TYPES against
+    // DuckDB's µs-unit arrow schema — INT96/ns output reads back as
+    // timestamp[ns] and trips the type-drift guard
+    val spark = GraftSession.getOrCreate("graft-verify")
     // same shared fixtures as Bench: frame CONTENT is identical to the
     // per-gate builds (localCheckpoint of the same plan), so the
     // correctness surface is unchanged — only rebuild count drops
@@ -36,14 +28,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // storage hygiene between gates (the Bench discipline): drop
-      // leftover localCheckpoint blocks / persisted frames so 150+
-      // gates of accumulation can't pressure later iterative gates
-      // (SweepCache fixtures excepted — shared by design)
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!SweepCache.isProtected(id)) rdd.unpersist(blocking = false)
-      }
-      spark.sharedState.cacheManager.clearCache()
+      SweepCache.releaseGateStorage(spark)
     }
     // aux fixtures for two-stage oracles (hash-seeded intermediates the
     // oracle SQL reads back via read_parquet on the expanded {OUT} path).

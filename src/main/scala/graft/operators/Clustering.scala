@@ -46,30 +46,16 @@ object Clustering {
     * get exactly one seed per available row). Empty clusters keep their
     * previous centroid. */
   def fit(emb: DataFrame, idCol: String, vecCol: String, k: Int,
-      iters: Int): Seq[Seq[Float]] =
-    fitImpl(emb, idCol, vecCol, k, iters, persistProjection = true)
-
-  /** A/B hook for the Drill harness: `persistProjection = false` lets
-    * every Lloyd job re-derive the projection from the scan instead of
-    * the cache. The r15 matched-group A/B (one session, min-of-4,
-    * sf0.1) read a WASH at bench scale: gate s03 1.35 s persisted vs
-    * 1.34 s lazy — the embeddings projection is so cheap to rebuild
-    * that the cache neither helps nor hurts, which CONFIRMS the
-    * multi-stage-constant classification (iters+1 driver-collect jobs
-    * own the cost, not any data pass; probe α_large 0.68, sublinear).
-    * Persist stays the default for the regime the wash doesn't cover:
-    * an expensive upstream derivation (planted/transformed corpora —
-    * CorpusCurate) re-run iters+1 times is the real blowup. */
-  private[graft] def fitImpl(emb: DataFrame, idCol: String,
-      vecCol: String, k: Int, iters: Int,
-      persistProjection: Boolean): Seq[Seq[Float]] = {
+      iters: Int): Seq[Seq[Float]] = {
     require(k > 0 && iters >= 0, "k and iters must be positive")
     // persisted: init + every Lloyd iteration re-consume the projection;
     // without this each of the iters+1 jobs re-derives the upstream
-    // (possibly a planted/transformed corpus) from the scan. try/finally
-    // so a failed iteration doesn't leave the projection cached forever.
-    val v0 = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val v = if (persistProjection) v0.persist() else v0
+    // (possibly a planted/transformed corpus) from the scan. r15 A/B
+    // (sf0.1, min-of-4) was a wash on a cheap scan (s03 1.35 s persisted
+    // vs 1.34 s lazy); the persist is for expensive upstreams
+    // (CorpusCurate). try/finally so a failed iteration doesn't leave
+    // the projection cached forever.
+    val v = emb.select(col(idCol).as("id"), col(vecCol).as("v")).persist()
     try {
       var centroids: Seq[Seq[Float]] = v
         .orderBy(md5(col("id").cast("string")))

@@ -36,20 +36,7 @@ object CoOccurrence {
     * over unbounded incidence should pass a cap; the OOM rationale is
     * in the body comment). */
   def topK(incidence: DataFrame, group: String, item: String, k: Int,
-      minPairs: Long, maxGroupRows: Long = 0L): DataFrame =
-    topKImpl(incidence, group, item, k, minPairs, maxGroupRows,
-      materialize = false)
-
-  /** A/B hook for the Drill harness: `materialize = true` persists the
-    * per-group item-set frame between its two consumers (pair
-    * expansion, base counts) and checkpoints the result; false leaves
-    * one lazy plan (the set aggregate re-derives once per consumer,
-    * both fusing into one job — the NaiveBayes/g08 size-of-frame rule;
-    * the r12 A/B read 1.02 s lazy vs 1.58 s materialized, min-of-4 at
-    * sf0.1, so lazy is the default). */
-  private[graft] def topKImpl(incidence: DataFrame, group: String,
-      item: String, k: Int, minPairs: Long, maxGroupRows: Long,
-      materialize: Boolean): DataFrame = {
+      minPairs: Long, maxGroupRows: Long = 0L): DataFrame = {
     val inc0 = incidence.select(col(group).as("_g"), col(item).as("_i"))
     // Hot-group guard (opt-in via maxGroupRows):
     // collect_set's aggregation buffer holds a group's whole distinct
@@ -69,12 +56,12 @@ object CoOccurrence {
     // exchanges of the incidence frame): group items are gathered once
     // (collect_set = the old distinct), pairs expand
     // ARRAY-SIDE from the sorted set, and the base counts explode from
-    // the same persisted frame. Measured at sf0.1: 3.3 s → ~1.5 s.
-    val sets0 = inc
+    // the same set frame. Measured at sf0.1: 3.3 s → ~1.5 s.
+    // Feeds the pair expansion AND the base-count explode, left lazy:
+    // both consumers fuse into one job. r12 A/B (sf0.1, min-of-4):
+    // 1.02 s lazy vs 1.58 s persisted + checkpointed.
+    val sets = inc
       .groupBy("_g").agg(array_sort(collect_set(col("_i"))).as("items"))
-    // feeds the pair expansion AND the base-count explode; lazy by
-    // default (see topKImpl scaladoc)
-    val sets = if (materialize) sets0.persist() else sets0
     // a<b pairs straight off the sorted set: for element i, every later
     // element (slice is 1-based; i is 0-based, so start = i+2)
     val pairsAB = sets.select(explode(flatten(transform(col("items"),
@@ -99,14 +86,7 @@ object CoOccurrence {
         expr("(1000000 * pair_cnt) div rec_cnt").as("score_ppm"))
     val w = Window.partitionBy("item")
       .orderBy(col("score_ppm").desc, col("pair_cnt").desc, col("rec"))
-    val ranked = scored.withColumn("rank", row_number().over(w))
+    scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-    if (!materialize) ranked
-    else {
-      val out = ranked
-        .localCheckpoint() // item-k-sized; frees the sets cache below
-      sets.unpersist()
-      out
-    }
   }
 }

@@ -458,8 +458,7 @@ object Dedup {
     sig.select(col("doc"), posexplode(bandArr)).toDF("doc", "band", "bh")
   }
 
-  // private[graft]: graft.Drill times this stage in isolation
-  private[graft] def bandedCandidates(sig: DataFrame, bands: Int, r: Int,
+  private def bandedCandidates(sig: DataFrame, bands: Int, r: Int,
       maxBucket: Int): DataFrame = {
     val banded = bandedFrame(sig, bands, r)
     val pruned =

@@ -145,48 +145,22 @@ object NaiveBayes {
     * classifier labels its own training corpus (resubstitution), counted
     * per (true, predicted) cell. */
   def confusion(docs: DataFrame, idCol: String, textCol: String,
-      labelCol: String): DataFrame =
-    confusionImpl(docs, idCol, textCol, labelCol, materialize = false)
-
-  /** A/B hook for the Drill harness: `materialize = true` persists the
-    * pair spine between its two consumers (train counts, scoring hits)
-    * and checkpoints the cells; false leaves the whole chain one lazy
-    * plan (the spine recomputes once per consumer). Lazy is the
-    * default — the r12 A/B read 1.30 s lazy vs 2.10 s materialized
-    * (min-of-4, sf0.1), and the r15 matched-group re-run confirms the
-    * direction at HEAD (1.49 s lazy vs 1.66 s materialized, same
-    * session — the multi-stage-constant classification stands, probe
-    * α_large 0.61): both consumers' stages run inside ONE job, so
-    * laziness costs one extra pass over the token stream and saves two
-    * job boundaries plus a data-sized cache write — the same
-    * size-of-frame rule as g08's lazy edge frame. Materialize only
-    * when the spine is expensive relative to memory (rare: it is the
-    * corpus's distinct-pair compression). */
-  private[graft] def confusionImpl(docs: DataFrame, idCol: String,
-      textCol: String, labelCol: String,
-      materialize: Boolean): DataFrame = {
+      labelCol: String): DataFrame = {
     // resubstitution scores the SAME corpus it trained on: tokenize
-    // and pre-aggregate ONCE with truth in the key, share the cached
+    // and pre-aggregate ONCE with truth in the key, share the
     // (doc, truth, word, cnt) frame between train and predict — it is
-    // the raw token stream's distinct-pair compression, so the cache
-    // (and every downstream shuffle) is the smaller representation.
+    // the raw token stream's distinct-pair compression, so every
+    // downstream shuffle carries the smaller representation.
     // Truth rides the scoring keys, so the matrix needs no final join.
-    val dwl0 = docWordCounts(docs, idCol, textCol,
-      Seq(labelCol -> "truth"))
-    val dwl = if (materialize) dwl0.persist() else dwl0
+    // The spine stays lazy: both consumers run inside one job. r15 A/B
+    // (sf0.1, min-of-4): 1.49 s lazy vs 1.66 s materialized.
+    val dwl = docWordCounts(docs, idCol, textCol, Seq(labelCol -> "truth"))
     val model = trainFrom(dwl, "truth", docs, textCol, labelCol)
     val docsP = docs
       .select(col(idCol).as("doc"), col(labelCol).as("truth"),
         nD(textCol).cast("long").as("n_d"))
       .filter(col("n_d") > 0)
-    val cells0 = scoreArgmax(model, docsP, dwl, carry = Seq("truth"))
+    scoreArgmax(model, docsP, dwl, carry = Seq("truth"))
       .groupBy("truth", "pred").agg(count(lit(1)).as("n"))
-    if (!materialize) cells0
-    else {
-      val cells = cells0
-        .localCheckpoint() // cells-sized; frees the pair cache below
-      dwl.unpersist()
-      cells
-    }
   }
 }

@@ -54,29 +54,15 @@ object PerplexityFilter {
     * curated training slice. */
   def buckets(docs: DataFrame, idCol: String, textCol: String,
       refPred: Column, nBuckets: Int = 3,
-      ctxBroadcastMaxVocab: Long = CtxBroadcastMaxVocab): DataFrame =
-    bucketsImpl(docs, idCol, textCol, refPred, nBuckets,
-      ctxBroadcastMaxVocab, materialize = true)
-
-  /** A/B hook for the Drill harness: `materialize = false` skips the
-    * token-frame persist and the perDoc localCheckpoint, leaving the
-    * whole chain lazy (each consumer re-derives from the scan).
-    * Materialized is the default and the r15 matched-group A/B (one
-    * session, min-of-4, sf0.1) confirms it: gate t29 1.83 s
-    * materialized vs 2.26 s lazy — toks has THREE consumers (model
-    * counts, V collect, scoring explode) and perDoc two (n = count(),
-    * the rank pass), so laziness pays four extra tokenize passes; the
-    * remaining gate cost is the documented multi-stage constant chain
-    * (probe α_large 0.64, sublinear). */
-  private[graft] def bucketsImpl(docs: DataFrame, idCol: String,
-      textCol: String, refPred: Column, nBuckets: Int,
-      ctxBroadcastMaxVocab: Long, materialize: Boolean): DataFrame = {
+      ctxBroadcastMaxVocab: Long = CtxBroadcastMaxVocab): DataFrame = {
     require(nBuckets >= 2, "need at least 2 quality tiers")
-    val toks0 = docs.select(col(idCol).as("doc"), refPred.as("_ref"),
+    // persisted: toks has three consumers (model counts, V collect,
+    // scoring explode) and perDoc two (n = count(), the rank pass); r15
+    // A/B (sf0.1, min-of-4): t29 1.83 s materialized vs 2.26 s lazy
+    val toks = docs.select(col(idCol).as("doc"), refPred.as("_ref"),
       T.tokens(lower(col(textCol))).as("tk"))
       .filter(size(col("tk")) >= 2)
-    val toks = // feeds the model aggregates AND the scoring explode
-      if (materialize) toks0.persist() else toks0
+      .persist()
     val bi = toks.select(col("doc"), col("_ref"),
       explode(expr("transform(sequence(0, size(tk) - 2), " +
         "i -> struct(tk[i] AS a, tk[i + 1] AS b))")).as("p"))
@@ -108,7 +94,7 @@ object PerplexityFilter {
     // BIGRAM-typed (vocab² worst case) and has no cheap bound, so it is
     // always unhinted.
     val ctxJ = if (v <= ctxBroadcastMaxVocab) broadcast(ctx) else ctx
-    val perDoc0 = bi
+    val perDoc = bi
       .join(cnt, Seq("a", "b"), "left")
       .join(ctxJ, Seq("a"), "left")
       .groupBy("doc")
@@ -116,8 +102,7 @@ object PerplexityFilter {
         s"CAST(coalesce(ctx, 0) + $v AS DOUBLE))"))
         .cast("decimal(28,14)")).cast("double")) / count(lit(1)))
         .as("ce"))
-    val perDoc = // the rank pass and n = count() share it
-      if (materialize) perDoc0.localCheckpoint(true) else perDoc0
+      .localCheckpoint(true)
     toks.unpersist()
     val n = perDoc.count()
     val ranked = SequentialIds.assign(perDoc,

@@ -213,11 +213,13 @@ object AnalyticsQueries {
     val e = events(s, dir)
     val s0 = e.filter(col("event_type") === "signup")
       .groupBy("user_id").agg(min(col("ts")).as("t0"))
+    // purchase side keyed under its own name: both sides derive from
+    // the same events frame, so a shared `user_id` would be one attribute
     val p = e.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts").as("tp"))
-    s0.join(p, s0("user_id") === p("user_id") && col("tp") > col("t0"),
+      .select(col("user_id").as("p_user"), col("ts").as("tp"))
+    s0.join(p, col("user_id") === col("p_user") && col("tp") > col("t0"),
         "left")
-      .groupBy(s0("user_id"), col("t0")).agg(min(col("tp")).as("t1"))
+      .groupBy(col("user_id"), col("t0")).agg(min(col("tp")).as("t1"))
       .select(when(col("t1").isNull, lit(-1))
         .otherwise(datediff(to_date(col("t1")), to_date(col("t0"))))
         .as("days"))

@@ -234,9 +234,10 @@ object CoreQueries {
   // join. The per-group mean is computed as exact-decimal sum / count
   // so both engines agree bit-for-bit regardless of summation order.
   // Scaling (r13 drill): the decorrelated plan stays BroadcastHashJoin
-  // even at the 10× probe corpus (stage table in Drill.q23Variants —
-  // scan, inner agg, and join all sublinear), and the isolated
-  // min-of-4 probe fits alpha(sf0.1→sf1x) = 0.97
+  // even at the 10× probe corpus (stage table: COVERAGE.md, Round-13
+  // summary, "q23's α=1.12 resolved" — scan, inner agg, and join all
+  // sublinear), and the isolated min-of-4 probe fits
+  // alpha(sf0.1→sf1x) = 0.97
   // (scaling_q23_isolated_r13.json); r12's 1.12 was mid-sweep
   // min-of-2 noise, not a plan defect. When the per-key agg outgrows
   // broadcast at true 100 TB, AQE's SMJ/SHJ fallback on the shared

@@ -16,16 +16,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    // the shipped configuration (GraftSession.configure) over a fixed
+    // local[4], so specs test what the engine ships and benchmarks
+    val s = GraftSession.configure(SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the shipped cache size, so specs run with the same codegen
-      // reuse as the engine (see GraftSession.CodegenCacheEntries)
-      .config("spark.sql.codegen.cache.maxEntries",
-        GraftSession.CodegenCacheEntries.toLong)
+      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
