@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dumps formatted physical plans for representative queries to
@@ -89,6 +89,24 @@ object Plans {
     s
   }
 
+  /** The random part of a written data file's name: an optional
+    * ManifestTable commit directory (`c` + the first 12 characters of a
+    * UUID) and the `part-<n>-<uuid>-c<n>` stem before the codec suffix. */
+  private val DataFile = ("""(c[0-9a-f]{8}-[0-9a-f]{3}/)?part-\d+-""" +
+    """[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}(-c\d+)?""").r
+
+  /** `plan` with the random part of every written data file's name
+    * replaced by one fixed token: a gate that writes under a fixed path
+    * gets fresh random names on every run, which would show in every
+    * diff of its plan. */
+  private[graft] def normalize(plan: String): String =
+    DataFile.replaceAllIn(plan, m =>
+      (if (m.group(1) == null) "" else "c<commit>/") + "part-<file>")
+
+  /** The formatted explain of `df`, [[normalize]]d. */
+  private def explain(df: DataFrame): String = normalize(
+    df.queryExecution.explainString(ExplainMode.fromString("formatted")).trim)
+
   /** Dump explain("formatted") of named queries to individual files:
     * runMain graft.PlanDump <outDir> <suffix> <query> [query...]
     * — writes <outDir>/<query>_<suffix>.txt per query (the per-round
@@ -106,8 +124,7 @@ object Plans {
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"),
-        df.queryExecution.explainString(
-          ExplainMode.fromString("formatted")).trim + "\n")
+        explain(df) + "\n")
       println(s"wrote $outDir/${name}_$suffix.txt")
     }
     spark.stop()
@@ -127,8 +144,7 @@ object Plans {
     picks.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       sb.append(s"\n## $name\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        ExplainMode.fromString("formatted")).trim)
+      sb.append(explain(df))
       sb.append("\n```\n")
     }
     Files.writeString(Paths.get(outFile), sb.toString)

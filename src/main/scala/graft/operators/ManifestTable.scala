@@ -3,8 +3,8 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{abs => fabs, col, explode,
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{abs => fabs, broadcast, col, explode,
   input_file_name, lit, max, min, sequence, sum => fsum, when}
 import org.apache.spark.sql.types.StructType
 
@@ -55,8 +55,11 @@ import org.apache.spark.sql.types.StructType
   * until [[vacuum]], and `read(path, version = Some(v))` resolves
   * exactly snapshot v — the "which snapshot trained model X"
   * reproducibility read. Deletes come in both real-world shapes:
-  * [[deleteRange]] (contiguous) and [[deleteIds]] (scattered id sets),
-  * both file-level copy-on-write through the same stats pruning.
+  * [[deleteRange]] (contiguous) and [[deleteIds]] (scattered id sets).
+  * They, [[upsert]], the rewriting [[merge]] corners and
+  * [[replaceRange]] are one copy-on-write step (`rewrite`) over one of
+  * two touch kinds: a key range, or a key set whose survivors are a
+  * left anti join against the set's keys.
   */
 object ManifestTable {
 
@@ -228,6 +231,25 @@ object ManifestTable {
     currentSnapshot(spark, path)
       .map(s => (s.version, s.lines)).getOrElse((0L, Nil))
 
+  /** The current snapshot of an existing table — the ONE manifest read
+    * a write plans against: its version, lines, txn tag (replay check
+    * and carry) and constraints. [[commitLocked]]'s re-read is the
+    * separate OCC check. */
+  private def existing(spark: SparkSession, path: String): Snapshot = {
+    val s = currentSnapshot(spark, path)
+    require(s.isDefined, s"manifest table $path does not exist")
+    s.get
+  }
+
+  /** The parquet files behind manifest paths `rels`, resolved against
+    * the table base — every data-file read of this table goes here. */
+  private def readFiles(spark: SparkSession, path: String,
+      rels: Seq[String], mergeSchema: Boolean): DataFrame = {
+    val base = new Path(path)
+    spark.read.option("mergeSchema", mergeSchema.toString)
+      .parquet(rels.map(f => resolveFile(base, f).toString): _*)
+  }
+
   /** (version, relative data-file paths) of the current snapshot;
     * (0, Nil) when no manifest exists. */
   def currentManifest(spark: SparkSession, path: String): (Long, Seq[String]) = {
@@ -271,16 +293,6 @@ object ManifestTable {
 
   /** Reserved manifest-stat key carrying the file's row count. */
   private val RowsStat = "__rows"
-
-  /** Ceiling on the literal `isin` rewrite filter in [[upsert]]/
-    * [[merge]]: collected key sets up to this size become a codegen'd
-    * InSet anti-filter (no join, no second source pass); past it the
-    * plan-side cost of an N-literal `In` tree (driver construction,
-    * serialization, explain output) outgrows what the broadcast
-    * anti-join costs, so the anti-join path takes over. Exact per-file
-    * ENVELOPE pruning still uses the full collected set either way —
-    * this caps only the filter's literal form. */
-  private val MaxInSetLiterals = 8192
 
   /** The table as a DataFrame. Resolves ONLY manifest-listed files —
     * orphan parquet in the directory (crashed writers, not-yet-
@@ -327,9 +339,7 @@ object ManifestTable {
         java.util.Collections.emptyList[Row](),
         StructType.fromDDL(snap.schemaDdl.get))
     }
-    val base = new Path(path)
-    spark.read.option("mergeSchema", mergeSchema.toString)
-      .parquet(files.map(f => resolveFile(base, f).toString): _*)
+    readFiles(spark, path, files, mergeSchema)
   }
 
   /** Create the table: write `df` as the first snapshot. Refuses if a
@@ -362,10 +372,9 @@ object ManifestTable {
   def append(spark: SparkSession, path: String, df: DataFrame,
       files: Int, statsCols: Seq[String] = Nil,
       txn: Option[String] = None, sortCols: Seq[String] = Nil): Long = {
-    val (v, current) = currentLines(spark, path)
-    require(v > 0, s"manifest table $path does not exist")
-    if (txn.isDefined && lastTxn(spark, path) == txn) return v
-    enforceConstraints(spark, path, df, "append")
+    val snap = existing(spark, path)
+    if (txn.isDefined && snap.txn == txn) return snap.version
+    enforceConstraints(snap.constraints, path, df, "append")
     // sortCols: range-cluster the appended files on the table's key
     // (Iceberg's write.distribution-mode=range) — appends that each
     // span the whole key domain defeat every later envelope-pruned
@@ -374,8 +383,8 @@ object ManifestTable {
     // an untagged write still carries a prior streaming tag forward —
     // same argument as maintenance (see lastTxn): erasing it would let
     // a crash-replay readmit an already-committed batch
-    commit(spark, path, current ++ added, expectedCurrent = v,
-      txn = txn.orElse(lastTxn(spark, path)),
+    commit(spark, path, snap.lines ++ added, expectedCurrent = snap.version,
+      txn = txn.orElse(snap.txn),
       schemaDdl = Some(df.schema.toDDL), op = "append")
   }
 
@@ -397,19 +406,18 @@ object ManifestTable {
   def compact(spark: SparkSession, path: String, files: Int,
       sortCols: Seq[String] = Nil, statsCols: Seq[String] = Nil,
       zOrder: Boolean = false): Long = {
-    val (v, lines) = currentLines(spark, path)
-    require(v > 0, s"manifest table $path does not exist")
+    val snap = existing(spark, path)
     // mergeSchema ALWAYS on the rewrite read: a schema-evolved table
     // whose footer sample missed the new column would otherwise be
     // rewritten WITHOUT it — silent data loss. Compaction reads every
     // file anyway; the per-footer planning cost is already paid.
     val src = read(spark, path, mergeSchema = true)
     val rewritten = writeDataFiles(spark, path, src, files,
-      sortCols, inheritStats(statsCols, lines), zOrder)
+      sortCols, inheritStats(statsCols, snap.lines), zOrder)
     // carry the txn tag forward (see lastTxn): maintenance must not
     // erase a streaming writer's idempotence marker
-    commit(spark, path, rewritten, expectedCurrent = v,
-      txn = lastTxn(spark, path), schemaDdl = Some(src.schema.toDDL), op = "compact")
+    commit(spark, path, rewritten, expectedCurrent = snap.version,
+      txn = snap.txn, schemaDdl = Some(src.schema.toDDL), op = "compact")
   }
 
   /** Stats columns are a TABLE property: maintenance rewrites
@@ -441,22 +449,20 @@ object ManifestTable {
       files: Int = 1, sortCols: Seq[String] = Nil,
       statsCols: Seq[String] = Nil): Long = {
     require(minBytes > 0, "compactSmall: minBytes must be positive")
-    val (v, lines) = currentLines(spark, path)
-    require(v > 0, s"manifest table $path does not exist")
+    val snap = existing(spark, path)
     val (fs, _) = fsOf(spark, path)
     val base = new Path(path)
-    val (small, big) = lines.partition { l =>
+    val (small, big) = snap.lines.partition { l =>
       fs.getFileStatus(resolveFile(base, parseEntry(l).path))
         .getLen < minBytes
     }
-    if (small.size <= 1) return v // already optimal: no-op, no commit
-    val df = spark.read.option("mergeSchema", "true")
-      .parquet(small.map(l =>
-        resolveFile(base, parseEntry(l).path).toString): _*)
+    if (small.size <= 1) return snap.version // already optimal: no commit
+    val df = readFiles(spark, path, small.map(parseEntry(_).path),
+      mergeSchema = true)
     val rewritten = writeDataFiles(spark, path, df, files, sortCols,
-      inheritStats(statsCols, lines))
-    commit(spark, path, big ++ rewritten, expectedCurrent = v,
-      txn = lastTxn(spark, path), schemaDdl = Some(df.schema.toDDL), op = "compact-small")
+      inheritStats(statsCols, snap.lines))
+    commit(spark, path, big ++ rewritten, expectedCurrent = snap.version,
+      txn = snap.txn, schemaDdl = Some(df.schema.toDDL), op = "compact-small")
   }
 
   /** Two-predicate box read through manifest-side pruning: keep only
@@ -474,16 +480,115 @@ object ManifestTable {
     require(lo1 <= hi1 && lo2 <= hi2, "readBox: lo > hi")
     val (v, entries) = entriesOf(spark, path, version)
     require(v > 0, s"manifest table $path does not exist")
-    val base = new Path(path)
-    def hits(e: ManifestEntry, c: String, lo: Long, hi: Long) =
-      e.stats.get(c).forall { case (flo, fhi) => fhi >= lo && flo <= hi }
     val keep = entries.filter(e =>
-      hits(e, c1, lo1, hi1) && hits(e, c2, lo2, hi2))
+      KeyRange(lo1, hi1).touches(e, c1) && KeyRange(lo2, hi2).touches(e, c2))
     if (keep.isEmpty)
       return read(spark, path, version = version).filter(lit(false))
-    spark.read.parquet(keep.map(e => resolveFile(base, e.path).toString): _*)
+    readFiles(spark, path, keep.map(_.path), mergeSchema = false)
       .filter(col(c1).cast("long").between(lo1, hi1) &&
         col(c2).cast("long").between(lo2, hi2))
+  }
+
+  /** What a copy-on-write rewrite removes, on a long-cast key column:
+    * `hits` decides from a file's recorded [min, max] envelope whether
+    * the file may hold a removed key (a file without an envelope always
+    * may — conservative), and `survivors` keeps the rows of the touched
+    * files that are not removed. NULL and cast-failed keys are never
+    * removed: NULL is in no range and equi-joins nothing. */
+  private sealed trait Touch {
+    def hits(flo: Long, fhi: Long): Boolean
+    def survivors(cand: DataFrame, key: Column): DataFrame
+    final def touches(e: ManifestEntry, c: String): Boolean =
+      e.stats.get(c).forall { case (flo, fhi) => hits(flo, fhi) }
+  }
+
+  /** Every key in [lo, hi]: [[deleteRange]], [[replaceRange]] and the
+    * pruned reads. */
+  private final case class KeyRange(lo: Long, hi: Long) extends Touch {
+    def hits(flo: Long, fhi: Long): Boolean = fhi >= lo && flo <= hi
+    // `!between` alone is NULL on a NULL key, which a filter drops: a
+    // bare negation would delete every NULL-key row it rewrites
+    // (schema-evolved tables read old files' new column as NULL)
+    def survivors(cand: DataFrame, key: Column): DataFrame =
+      cand.filter(key.isNull || !key.between(lo, hi))
+  }
+
+  /** A key set: [[deleteIds]], [[upsert]] and [[merge]]. With the
+    * distinct keys collected (`sorted`), a file is touched only when one
+    * of them falls inside its envelope (binary search, driver-side,
+    * O(files · log keys)); without them the set's global `bounds` prune.
+    * Survivors are a left anti join against `keys`, a one-column `__k`
+    * frame of the distinct non-NULL keys: a broadcast local frame of the
+    * collected keys, or the source's own keys past the collect cap. The
+    * join is the only form at every size — a literal `IN` filter was
+    * measured no faster at 1,000 ids and 1.8x slower at 10,000
+    * (`deleteIds` on a 120k-row, 18-file table, `local[3]`). */
+  private final class KeySet(bounds: KeyRange, sorted: Option[Array[Long]],
+      keys: DataFrame) extends Touch {
+    def hits(flo: Long, fhi: Long): Boolean = sorted match {
+      case Some(ks) =>
+        var i = java.util.Arrays.binarySearch(ks, flo)
+        if (i < 0) i = -i - 1
+        i < ks.length && ks(i) <= fhi
+      case None => bounds.hits(flo, fhi)
+    }
+    def survivors(cand: DataFrame, key: Column): DataFrame =
+      cand.join(keys, key === col("__k"), "left_anti")
+  }
+
+  private object KeySet {
+    /** The collected distinct keys `ks`, sorted ascending. */
+    def collected(spark: SparkSession, ks: Array[Long]): KeySet = {
+      import spark.implicits._
+      new KeySet(KeyRange(ks.head, ks.last), Some(ks),
+        broadcast(ks.toSeq.toDF("__k")))
+    }
+  }
+
+  /** Split the snapshot's lines into those `touch` may hit on `c` and
+    * the rest, and read the touched files (None when none is). The read
+    * always merges footer schemas: rewriting evolved files through a
+    * sampled schema would silently drop a new column. */
+  private def classify(spark: SparkSession, path: String, snap: Snapshot,
+      c: String, touch: Touch)
+      : (Seq[String], Seq[String], Option[DataFrame]) = {
+    val (touched, untouched) =
+      snap.lines.partition(l => touch.touches(parseEntry(l), c))
+    val cand =
+      if (touched.isEmpty) None
+      else Some(readFiles(spark, path, touched.map(parseEntry(_).path),
+        mergeSchema = true))
+    (touched, untouched, cand)
+  }
+
+  /** The ONE copy-on-write step of every rewriting write: [[classify]]
+    * the snapshot's files, keep the touched files' survivors, add the
+    * `incoming` rows (built from the candidate rows, where the caller
+    * also enforces constraints), write the result as at least `files`
+    * files and at least one per touched file, with the table's stats
+    * columns, and commit it in place of the touched files, carrying the
+    * snapshot's txn tag unless `txn` is given. Untouched files keep
+    * their exact bytes and manifest lines. With no touched file and
+    * nothing incoming it commits nothing and returns the snapshot's
+    * version. */
+  private def rewrite(spark: SparkSession, path: String, snap: Snapshot,
+      c: String, touch: Touch, files: Int, statsCols: Seq[String],
+      txn: Option[String], op: String)(
+      incoming: Option[DataFrame] => Option[DataFrame]): Long = {
+    val (touched, untouched, cand) = classify(spark, path, snap, c, touch)
+    val survivors = cand.map(touch.survivors(_, col(c).cast("long")))
+    val rewriteDf = (survivors, incoming(cand)) match {
+      case (Some(s), Some(i)) => s.unionByName(i, allowMissingColumns = true)
+      case (Some(s), None)    => s
+      case (None, Some(i))    => i
+      case (None, None)       => return snap.version
+    }
+    val rewritten = writeDataFiles(spark, path, rewriteDf,
+      files = math.max(files, touched.size), Nil,
+      inheritStats(statsCols, snap.lines))
+    commit(spark, path, untouched ++ rewritten,
+      expectedCurrent = snap.version, txn = txn.orElse(snap.txn),
+      schemaDdl = Some(rewriteDf.schema.toDDL), op = op)
   }
 
   /** Copy-on-write range DELETE: remove every row with `c` in
@@ -492,7 +597,8 @@ object ManifestTable {
     * manifest lines (at 100 TB a targeted delete touches the few files
     * holding the range, not the table; the right-to-be-forgotten shape
     * for a training corpus). Files without stats for `c` are rewritten
-    * conservatively. One commit publishes the new snapshot; the old
+    * conservatively, and NULL (or cast-failed) `c` rows in rewritten
+    * files are kept. One commit publishes the new snapshot; the old
     * files serve in-flight readers until [[vacuum]]. Rewritten files
     * get fresh stats for `statsCols` (pass the create-time columns to
     * keep future deletes/reads pruned). Returns the committed version
@@ -503,29 +609,8 @@ object ManifestTable {
   def deleteRange(spark: SparkSession, path: String, c: String,
       lo: Long, hi: Long, statsCols: Seq[String] = Nil): Long = {
     require(lo <= hi, s"deleteRange: lo $lo > hi $hi")
-    val (v, lines) = currentLines(spark, path)
-    require(v > 0, s"manifest table $path does not exist")
-    val base = new Path(path)
-    val (touched, untouched) = lines.partition { l =>
-      parseEntry(l).stats.get(c)
-        .forall { case (flo, fhi) => fhi >= lo && flo <= hi }
-    }
-    if (touched.isEmpty) return v
-    // mergeSchema for the same reason as compact(): rewriting evolved
-    // files through a sampled schema would silently drop a new column.
-    // NULL (and cast-failed) rows are KEPT explicitly: NULL is in no
-    // range, and `!between` alone evaluates to NULL on them — a bare
-    // negation would silently delete every NULL-c row in rewritten
-    // files (schema-evolved tables read old files' new column as NULL).
-    val survivors = spark.read.option("mergeSchema", "true")
-      .parquet(touched.map(l =>
-        resolveFile(base, parseEntry(l).path).toString): _*)
-      .filter(col(c).cast("long").isNull ||
-        !col(c).cast("long").between(lo, hi))
-    val rewritten = writeDataFiles(spark, path, survivors,
-      files = touched.size, Nil, inheritStats(statsCols, lines))
-    commit(spark, path, untouched ++ rewritten, expectedCurrent = v,
-      txn = lastTxn(spark, path), schemaDdl = Some(survivors.schema.toDDL), op = "delete-range")
+    rewrite(spark, path, existing(spark, path), c, KeyRange(lo, hi),
+      files = 1, statsCols, txn = None, "delete-range")(_ => None)
   }
 
   /** Copy-on-write id-set DELETE: remove every row whose `c` is in
@@ -536,42 +621,18 @@ object ManifestTable {
     * search per file over the sorted set — driver-side, O(files · log
     * ids)); files without stats for `c` rewrite conservatively. On an
     * id-clustered layout a scattered-but-local set touches few files.
-    * The survivor filter is an `IN`-set test (Catalyst turns it into a
-    * hash-set `InSet` above the conversion threshold — O(1) per row);
-    * NULL / cast-failed rows are KEPT (membership of NULL in any set is
-    * false for deletion purposes, same contract as [[deleteRange]]).
-    * The literal `IN` list carries every distinct id and has NO size
-    * cap here — unlike [[upsert]] and [[merge]], which switch to a
-    * broadcast anti-join above [[MaxInSetLiterals]] (8,192 keys). For
-    * large id sets, stage the ids as a table and anti-join instead.
-    * Returns the committed version (unchanged when no envelope holds
-    * any id). */
+    * The survivor filter is a broadcast left anti join against a local
+    * frame of the distinct ids, whatever their number; NULL /
+    * cast-failed rows are KEPT (NULL equi-joins nothing, the same
+    * contract as [[deleteRange]]). Returns the committed version
+    * (unchanged when no envelope holds any id). */
   def deleteIds(spark: SparkSession, path: String, c: String,
       ids: Seq[Long], statsCols: Seq[String] = Nil): Long = {
     require(ids.nonEmpty, "deleteIds: empty id set")
-    val (v, lines) = currentLines(spark, path)
-    require(v > 0, s"manifest table $path does not exist")
-    val base = new Path(path)
-    val sorted = ids.distinct.sorted.toArray
-    def anyIn(lo: Long, hi: Long): Boolean = {
-      var i = java.util.Arrays.binarySearch(sorted, lo)
-      if (i < 0) i = -i - 1
-      i < sorted.length && sorted(i) <= hi
-    }
-    val (touched, untouched) = lines.partition { l =>
-      parseEntry(l).stats.get(c)
-        .forall { case (flo, fhi) => anyIn(flo, fhi) }
-    }
-    if (touched.isEmpty) return v
-    val survivors = spark.read.option("mergeSchema", "true")
-      .parquet(touched.map(l =>
-        resolveFile(base, parseEntry(l).path).toString): _*)
-      .filter(col(c).cast("long").isNull ||
-        !col(c).cast("long").isin(sorted.toSeq: _*))
-    val rewritten = writeDataFiles(spark, path, survivors,
-      files = touched.size, Nil, inheritStats(statsCols, lines))
-    commit(spark, path, untouched ++ rewritten, expectedCurrent = v,
-      txn = lastTxn(spark, path), schemaDdl = Some(survivors.schema.toDDL), op = "delete-ids")
+    val snap = existing(spark, path)
+    rewrite(spark, path, snap, c,
+      KeySet.collected(spark, ids.distinct.sorted.toArray),
+      files = 1, statsCols, txn = None, "delete-ids")(_ => None)
   }
 
   /** Copy-on-write MERGE (upsert) keyed on long-castable `c`: rows of
@@ -579,16 +640,16 @@ object ManifestTable {
     * from the table are inserted. One commit publishes the result.
     *
     * File pruning is two-tier: when the update key set is small enough
-    * to collect (`<= maxCollectedKeys` distinct keys — one countDistinct
-    * scalar decides), pruning is EXACT per file (binary search of the
-    * sorted set against each envelope, the [[deleteIds]] discipline);
-    * a larger update prunes by the updates' global [min, max] envelope
-    * only — coarser (an envelope-intersecting file may hold no update
-    * key) but never incorrect, because the survivor filter is a
-    * LEFT ANTI JOIN against the update keys, not a literal set: it
-    * scales to arbitrarily large updates and keeps NULL-keyed rows
-    * (NULL never equi-joins — the same NULL contract as the deletes).
-    * Files without stats for `c` rewrite conservatively.
+    * to collect (`<= maxCollectedKeys` distinct keys), pruning is EXACT
+    * per file (binary search of the sorted set against each envelope,
+    * the [[deleteIds]] discipline) and the survivor filter is a
+    * broadcast LEFT ANTI JOIN against those keys; a larger update
+    * prunes by the updates' global [min, max] envelope only — coarser
+    * (an envelope-intersecting file may hold no update key) but never
+    * incorrect — and anti-joins against the updates' own distinct keys.
+    * Either way NULL-keyed rows survive (NULL never equi-joins — the
+    * same NULL contract as the deletes). Files without stats for `c`
+    * rewrite conservatively.
     *
     * The rewrite unions survivors with the updates and writes them as
     * `files` fresh files; untouched files keep their exact bytes and
@@ -601,55 +662,13 @@ object ManifestTable {
       updates: DataFrame, files: Int, statsCols: Seq[String] = Nil,
       txn: Option[String] = None,
       maxCollectedKeys: Long = 100000L): Long = {
-    val (v, lines) = currentLines(spark, path)
-    require(v > 0, s"manifest table $path does not exist")
-    if (txn.isDefined && lastTxn(spark, path) == txn) return v
-    enforceConstraints(spark, path, updates, "upsert")
-    val base = new Path(path)
-    val keyCol = col(c).cast("long")
-    val (kLo, kHi, exactKeys) = keyProfile(updates, keyCol,
-      maxCollectedKeys, "upsert: updates carry no non-NULL keys")
-    def fileTouched(stats: Option[(Long, Long)]): Boolean = stats match {
-      case None => true // no envelope: conservative
-      case Some((flo, fhi)) => exactKeys match {
-        case Some(ks) =>
-          var i = java.util.Arrays.binarySearch(ks, flo)
-          if (i < 0) i = -i - 1
-          i < ks.length && ks(i) <= fhi
-        case None => fhi >= kLo && flo <= kHi
-      }
-    }
-    val (touched, untouched) = lines.partition(l =>
-      fileTouched(parseEntry(l).stats.get(c)))
-    // With the exact key set already collected (keyProfile), the
-    // delete-matched step is a codegen'd InSet anti-filter — the
-    // deleteIds shape: no join, no shuffle, and no re-computation of
-    // the updates frame for its key side. Past the cap it stays the
-    // anti-join. NULL keys survive either way (NULL is in no set).
-    val survivors =
-      if (touched.isEmpty) None
-      else {
-        val cand = spark.read.option("mergeSchema", "true")
-          .parquet(touched.map(l =>
-            resolveFile(base, parseEntry(l).path).toString): _*)
-        Some(exactKeys match {
-          case Some(ks) if ks.length <= MaxInSetLiterals =>
-            cand.filter(keyCol.isNull || !keyCol.isin(ks.toSeq: _*))
-          case _ => cand.join(updates.select(keyCol.as("__k"))
-            .where(col("__k").isNotNull).distinct(),
-            keyCol === col("__k"), "left_anti")
-        })
-      }
-    val rewriteDf = survivors match {
-      case Some(s) => s.unionByName(updates, allowMissingColumns = true)
-      case None    => updates
-    }
-    val rewritten = writeDataFiles(spark, path, rewriteDf,
-      files = math.max(files, touched.size), Nil,
-      inheritStats(statsCols, lines))
-    commit(spark, path, untouched ++ rewritten, expectedCurrent = v,
-      txn = txn.orElse(lastTxn(spark, path)),
-      schemaDdl = Some(rewriteDf.schema.toDDL), op = "upsert")
+    val snap = existing(spark, path)
+    if (txn.isDefined && snap.txn == txn) return snap.version
+    enforceConstraints(snap.constraints, path, updates, "upsert")
+    val keys = keyProfile(updates, col(c).cast("long"), maxCollectedKeys,
+      "upsert: updates carry no non-NULL keys")
+    rewrite(spark, path, snap, c, keys, files, statsCols, txn, "upsert")(
+      _ => Some(updates))
   }
 
   /** Generalized copy-on-write MERGE keyed on long-castable `c` —
@@ -670,8 +689,8 @@ object ManifestTable {
     * DataFrame-keyed delete — [[deleteIds]] without the driver-side id
     * list, for id sets that only exist distributed. (replace, ignore)
     * updates existing keys only. Pruning (exact key set when
-    * collectable, envelope otherwise), NULL-row survival, and txn
-    * replay no-ops are [[upsert]]'s. */
+    * collectable, envelope otherwise), the anti-join survivor filter,
+    * NULL-row survival, and txn replay no-ops are [[upsert]]'s. */
   def merge(spark: SparkSession, path: String, c: String,
       source: DataFrame, files: Int,
       whenMatched: String = "replace", whenNotMatched: String = "insert",
@@ -686,112 +705,65 @@ object ManifestTable {
     if (whenMatched == "replace" && whenNotMatched == "insert")
       return upsert(spark, path, c, source, files, statsCols, txn,
         maxCollectedKeys)
-    val (v, lines) = currentLines(spark, path)
-    require(v > 0, s"manifest table $path does not exist")
-    if (txn.isDefined && lastTxn(spark, path) == txn) return v
-    val base = new Path(path)
+    val snap = existing(spark, path)
+    if (txn.isDefined && snap.txn == txn) return snap.version
     val keyCol = col(c).cast("long")
-    val (kLo, kHi, exactKeys) = keyProfile(source, keyCol,
-      maxCollectedKeys, "merge: source carries no non-NULL keys")
-    def fileTouched(stats: Option[(Long, Long)]): Boolean = stats match {
-      case None => true
-      case Some((flo, fhi)) => exactKeys match {
-        case Some(ks) =>
-          var i = java.util.Arrays.binarySearch(ks, flo)
-          if (i < 0) i = -i - 1
-          i < ks.length && ks(i) <= fhi
-        case None => fhi >= kLo && flo <= kHi
-      }
-    }
-    val (touched, untouched) = lines.partition(l =>
-      fileTouched(parseEntry(l).stats.get(c)))
-    val candidates: Option[DataFrame] =
-      if (touched.isEmpty) None
-      else Some(spark.read.option("mergeSchema", "true")
-        .parquet(touched.map(l =>
-          resolveFile(base, parseEntry(l).path).toString): _*))
+    val keys = keyProfile(source, keyCol, maxCollectedKeys,
+      "merge: source carries no non-NULL keys")
     // the candidate slice's distinct keys classify the source rows;
     // keys outside every envelope are new by construction
-    def tgtKeys(cand: DataFrame): DataFrame =
-      cand.select(keyCol.as("__tk")).where(col("__tk").isNotNull)
-        .distinct()
-    def notMatchedSrc: DataFrame = candidates match {
-      case None       => source
-      case Some(cand) =>
-        source.join(tgtKeys(cand), keyCol === col("__tk"), "left_anti")
-    }
-    def matchedSrc: DataFrame = candidates match {
-      case None       => source.limit(0)
-      case Some(cand) =>
-        source.join(tgtKeys(cand), keyCol === col("__tk"), "left_semi")
-    }
-    val carriedTxn = txn.orElse(lastTxn(spark, path))
-    whenMatched match {
-      case "keep" => // insert-only: never rewrite, possibly no-op
-        // Write-first, decide-after: the pre-r15 shape ran the
-        // not-matched anti-join TWICE (`ins.isEmpty`, then the write
-        // recomputed it). Writing once and reading emptiness off the
-        // committed-to-be lines' row counts (free with footer stats)
-        // halves the source passes; an empty or refused write leaves
-        // only invisible staging debris (the crash contract), which is
-        // deleted here anyway.
-        val ins = notMatchedSrc
-        val added = writeDataFiles(spark, path, ins, files, Nil,
-          inheritStats(statsCols, lines))
-        val (fs, _) = fsOf(spark, path)
-        def dropStaged(): Unit = added.headOption
-          .map(l => parseEntry(l).path.split('/').head)
-          .foreach(sub => fs.delete(new Path(base, sub), true))
-        // best-effort cleanup that must NOT mask the refusal it follows:
-        // a failing filesystem delete is recorded as suppressed, the
-        // original constraint violation still propagates
-        def dropStagedQuietly(cause: Throwable): Unit =
-          try dropStaged()
-          catch { case scala.util.control.NonFatal(e) =>
-            cause.addSuppressed(e) }
-        if (writtenRows(spark, path, added) == 0L) {
-          dropStaged() // no new keys: metadata no-op, same version back
-          return v
-        }
-        // constraints check the WRITTEN slice (cheaper than re-running
-        // the anti-join on the source); a violation drops the staged
-        // files and refuses before anything commits
-        try enforceConstraints(spark, path,
-          spark.read.parquet(added.map(l =>
-            resolveFile(base, parseEntry(l).path).toString): _*), "merge")
-        catch { case e: Throwable => dropStagedQuietly(e); throw e }
-        commit(spark, path, lines ++ added, expectedCurrent = v,
-          txn = carriedTxn, schemaDdl = Some(ins.schema.toDDL), op = "merge")
-      case m => // delete | replace(+ignore): CoW rewrite of candidates
-        if (touched.isEmpty && whenNotMatched == "ignore") return v
-        // InSet anti-filter when the exact keys are in hand (see
-        // upsert): removes the anti-join AND the source re-scan that
-        // built its key side
-        val survivors = candidates.map(cand => exactKeys match {
-          case Some(ks) if ks.length <= MaxInSetLiterals =>
-            cand.filter(keyCol.isNull || !keyCol.isin(ks.toSeq: _*))
-          case _ => cand.join(source.select(keyCol.as("__k"))
-            .where(col("__k").isNotNull).distinct(),
-            keyCol === col("__k"), "left_anti")
-        })
-        val incoming =
-          if (m == "replace") Some(matchedSrc)
-          else if (whenNotMatched == "insert") Some(notMatchedSrc)
-          else None
-        incoming.foreach(enforceConstraints(spark, path, _, "merge"))
-        val rewriteDf = (survivors, incoming) match {
-          case (Some(s), Some(i)) =>
-            s.unionByName(i, allowMissingColumns = true)
-          case (Some(s), None) => s
-          case (None, Some(i)) => i
-          case (None, None)    => return v // nothing to do
-        }
-        val rewritten = writeDataFiles(spark, path, rewriteDf,
-          files = math.max(files, touched.size), Nil,
-          inheritStats(statsCols, lines))
-        commit(spark, path, untouched ++ rewritten, expectedCurrent = v,
-          txn = carriedTxn, schemaDdl = Some(rewriteDf.schema.toDDL), op = "merge")
-    }
+    def bySlice(cand: DataFrame, how: String): DataFrame =
+      source.join(cand.select(keyCol.as("__tk")).where(col("__tk").isNotNull)
+        .distinct(), keyCol === col("__tk"), how)
+    def notMatched(cand: Option[DataFrame]): DataFrame =
+      cand.fold(source)(bySlice(_, "left_anti"))
+    if (whenMatched == "keep") { // insert-only: never rewrite, maybe no-op
+      // Write-first, decide-after: the pre-r15 shape ran the
+      // not-matched anti-join TWICE (`ins.isEmpty`, then the write
+      // recomputed it). Writing once and reading emptiness off the
+      // committed-to-be lines' row counts (free with footer stats)
+      // halves the source passes; an empty or refused write leaves
+      // only invisible staging debris (the crash contract), which is
+      // deleted here anyway.
+      val ins = notMatched(classify(spark, path, snap, c, keys)._3)
+      val added = writeDataFiles(spark, path, ins, files, Nil,
+        inheritStats(statsCols, snap.lines))
+      val (fs, _) = fsOf(spark, path)
+      val base = new Path(path)
+      def dropStaged(): Unit = added.headOption
+        .map(l => parseEntry(l).path.split('/').head)
+        .foreach(sub => fs.delete(new Path(base, sub), true))
+      // best-effort cleanup that must NOT mask the refusal it follows:
+      // a failing filesystem delete is recorded as suppressed, the
+      // original constraint violation still propagates
+      def dropStagedQuietly(cause: Throwable): Unit =
+        try dropStaged()
+        catch { case scala.util.control.NonFatal(e) =>
+          cause.addSuppressed(e) }
+      if (writtenRows(spark, path, added) == 0L) {
+        dropStaged() // no new keys: metadata no-op, same version back
+        return snap.version
+      }
+      // constraints check the WRITTEN slice (cheaper than re-running
+      // the anti-join on the source); a violation drops the staged
+      // files and refuses before anything commits
+      try enforceConstraints(snap.constraints, path,
+        readFiles(spark, path, added.map(parseEntry(_).path),
+          mergeSchema = false), "merge")
+      catch { case e: Throwable => dropStagedQuietly(e); throw e }
+      commit(spark, path, snap.lines ++ added,
+        expectedCurrent = snap.version, txn = txn.orElse(snap.txn),
+        schemaDdl = Some(ins.schema.toDDL), op = "merge")
+    } else // delete | replace(+ignore): CoW rewrite of the candidates
+      rewrite(spark, path, snap, c, keys, files, statsCols, txn, "merge") {
+        cand =>
+          val in =
+            if (whenMatched == "replace") cand.map(bySlice(_, "left_semi"))
+            else if (whenNotMatched == "insert") Some(notMatched(cand))
+            else None
+          in.foreach(enforceConstraints(snap.constraints, path, _, "merge"))
+          in
+      }
   }
 
   /** ATOMIC BACKFILL: replace every row with `c` in [lo, hi] by
@@ -811,32 +783,11 @@ object ManifestTable {
       lo: Long, hi: Long, replacement: DataFrame, files: Int,
       statsCols: Seq[String] = Nil, txn: Option[String] = None): Long = {
     require(lo <= hi, s"replaceRange: lo $lo > hi $hi")
-    val (v, lines) = currentLines(spark, path)
-    require(v > 0, s"manifest table $path does not exist")
-    if (txn.isDefined && lastTxn(spark, path) == txn) return v
-    enforceConstraints(spark, path, replacement, "replaceRange")
-    val base = new Path(path)
-    val (touched, untouched) = lines.partition { l =>
-      parseEntry(l).stats.get(c)
-        .forall { case (flo, fhi) => fhi >= lo && flo <= hi }
-    }
-    val survivors =
-      if (touched.isEmpty) None
-      else Some(spark.read.option("mergeSchema", "true")
-        .parquet(touched.map(l =>
-          resolveFile(base, parseEntry(l).path).toString): _*)
-        .filter(col(c).cast("long").isNull ||
-          !col(c).cast("long").between(lo, hi)))
-    val rewriteDf = survivors match {
-      case Some(s) => s.unionByName(replacement, allowMissingColumns = true)
-      case None    => replacement
-    }
-    val rewritten = writeDataFiles(spark, path, rewriteDf,
-      files = math.max(files, touched.size), Nil,
-      inheritStats(statsCols, lines))
-    commit(spark, path, untouched ++ rewritten, expectedCurrent = v,
-      txn = txn.orElse(lastTxn(spark, path)),
-      schemaDdl = Some(rewriteDf.schema.toDDL), op = "replace-range")
+    val snap = existing(spark, path)
+    if (txn.isDefined && snap.txn == txn) return snap.version
+    enforceConstraints(snap.constraints, path, replacement, "replaceRange")
+    rewrite(spark, path, snap, c, KeyRange(lo, hi), files, statsCols, txn,
+      "replace-range")(_ => Some(replacement))
   }
 
   /** Incremental scan: the rows ADDED between snapshot `fromVersion`
@@ -875,9 +826,7 @@ object ManifestTable {
     val added = toFiles.filterNot(fromFiles)
     if (added.isEmpty)
       return read(spark, path, version = Some(toVersion)).limit(0)
-    val base = new Path(path)
-    spark.read.option("mergeSchema", "true")
-      .parquet(added.map(f => resolveFile(base, f).toString): _*)
+    readFiles(spark, path, added, mergeSchema = true)
   }
 
   /** Incremental-consumer checkpoint: run `process` over the delta
@@ -949,10 +898,8 @@ object ManifestTable {
     val toFiles = to.lines.map(parseEntry(_).path)
     val removed = fromFiles.filterNot(toFiles.toSet)
     val added = toFiles.filterNot(fromFiles.toSet)
-    val base = new Path(path)
     def slice(fs: Seq[String], tag: String): DataFrame =
-      spark.read.option("mergeSchema", "true")
-        .parquet(fs.map(f => resolveFile(base, f).toString): _*)
+      readFiles(spark, path, fs, mergeSchema = true)
         .withColumn("_change", lit(tag))
     val tagged = (removed, added) match {
       case (Nil, Nil) =>
@@ -1118,9 +1065,7 @@ object ManifestTable {
       s"constraint name '$name' must match $TagPattern")
     require(sqlExpr.nonEmpty && !sqlExpr.contains('\n'),
       "constraint expression must be non-empty and single-line")
-    val (v, _) = currentLines(spark, path)
-    require(v > 0, s"manifest table $path does not exist")
-    val snap = snapshotAt(spark, path, v)
+    val snap = existing(spark, path)
     require(!snap.constraints.exists(_._1 == name),
       s"constraint '$name' already exists on $path")
     val bad = read(spark, path, mergeSchema = true)
@@ -1130,21 +1075,19 @@ object ManifestTable {
     require(bad == 0L,
       s"cannot add constraint '$name' ($sqlExpr): $bad existing row(s) " +
         "violate it — clean the table first")
-    commit(spark, path, snap.lines, expectedCurrent = v, txn = snap.txn,
-      schemaDdl = snap.schemaDdl, op = "add-constraint",
+    commit(spark, path, snap.lines, expectedCurrent = snap.version,
+      txn = snap.txn, schemaDdl = snap.schemaDdl, op = "add-constraint",
       constraintsOverride = Some(snap.constraints :+ (name -> sqlExpr)))
   }
 
   /** Drop a CHECK constraint; later writes stop validating it. */
   def dropConstraint(spark: SparkSession, path: String,
       name: String): Long = {
-    val (v, _) = currentLines(spark, path)
-    require(v > 0, s"manifest table $path does not exist")
-    val snap = snapshotAt(spark, path, v)
+    val snap = existing(spark, path)
     require(snap.constraints.exists(_._1 == name),
       s"manifest table $path has no constraint '$name'")
-    commit(spark, path, snap.lines, expectedCurrent = v, txn = snap.txn,
-      schemaDdl = snap.schemaDdl, op = "drop-constraint",
+    commit(spark, path, snap.lines, expectedCurrent = snap.version,
+      txn = snap.txn, schemaDdl = snap.schemaDdl, op = "drop-constraint",
       constraintsOverride = Some(snap.constraints.filterNot(_._1 == name)))
   }
 
@@ -1153,17 +1096,16 @@ object ManifestTable {
     currentSnapshot(spark, path).map(_.constraints.toMap)
       .getOrElse(Map.empty)
 
-  /** Refuse the write when any incoming row violates a table
-    * constraint — called by every data-adding write on its NEW rows
-    * only ([[addConstraint]] validated everything older). */
-  private def enforceConstraints(spark: SparkSession, path: String,
+  /** Refuse the write when any incoming row violates one of `cs`, the
+    * constraints of the snapshot the write planned against — called by
+    * every data-adding write on its NEW rows only ([[addConstraint]]
+    * validated everything older). */
+  private def enforceConstraints(cs: Seq[(String, String)], path: String,
       df: => DataFrame, op: String): Unit = {
     // by-name `df`: constraint-free tables (the common case) never pay
     // for constructing the frame — merge(keep)'s check reads back the
     // just-written slice, whose plain construction costs footer-based
     // schema inference even when there is nothing to enforce
-    val cs = currentSnapshot(spark, path).map(_.constraints)
-      .getOrElse(Nil)
     if (cs.isEmpty) return
     // ALL constraints validate in ONE aggregate pass over the incoming
     // rows (the pre-r15 shape ran one count() job per constraint — k
@@ -1274,15 +1216,13 @@ object ManifestTable {
     require(lo <= hi, s"readRange: lo $lo > hi $hi")
     val (v, entries) = entriesOf(spark, path, version)
     require(v > 0, s"manifest table $path does not exist")
-    val base = new Path(path)
-    val keep = entries.filter(e =>
-      e.stats.get(c).forall { case (flo, fhi) => fhi >= lo && flo <= hi })
+    val keep = entries.filter(KeyRange(lo, hi).touches(_, c))
     if (keep.isEmpty) {
       // empty by stats: derive the (empty) frame with the same schema
       // from one file rather than inventing a schema
       return read(spark, path, version = version).filter(lit(false))
     }
-    spark.read.parquet(keep.map(e => resolveFile(base, e.path).toString): _*)
+    readFiles(spark, path, keep.map(_.path), mergeSchema = false)
       .filter(col(c).cast("long").between(lo, hi))
   }
 
@@ -1410,28 +1350,26 @@ object ManifestTable {
     names.map(n => s"$sub/$n" + statsByFile.getOrElse(n, ""))
   }
 
-  /** ONE-pass key profile of an upsert/merge source: (kLo, kHi,
-    * exact distinct keys when they fit `maxCollectedKeys` — sorted, for
-    * exact per-file envelope pruning; None past the cap). The pre-r15
-    * shape paid TWO full passes over the source — a min/max/
+  /** ONE-pass key profile of an upsert/merge source as a [[KeySet]]:
+    * the collected distinct keys when they fit `maxCollectedKeys`, else
+    * the source's [min, max] bounds and its own distinct-key frame. The
+    * pre-r15 shape paid TWO full passes over the source — a min/max/
     * count_distinct aggregate, then the distinct-keys collect — for the
     * same information; here the bounds fall out of the collected key
     * set, and only the rare past-the-cap path pays a second (bounds
     * only) pass. `emptyMsg` preserves each caller's refusal message. */
-  private def keyProfile(df: DataFrame,
-      keyCol: org.apache.spark.sql.Column, maxCollectedKeys: Long,
-      emptyMsg: String): (Long, Long, Option[Array[Long]]) = {
+  private def keyProfile(df: DataFrame, keyCol: Column,
+      maxCollectedKeys: Long, emptyMsg: String): KeySet = {
     val cap = math.min(maxCollectedKeys, (Int.MaxValue - 2).toLong).toInt
-    val collected = df.select(keyCol.as("__k"))
-      .where(col("__k").isNotNull)
-      .distinct().limit(cap + 1).collect().map(_.getLong(0))
+    val keys = df.select(keyCol.as("__k")).where(col("__k").isNotNull)
+      .distinct()
+    val collected = keys.limit(cap + 1).collect().map(_.getLong(0))
     require(collected.nonEmpty, emptyMsg)
-    if (collected.length <= cap) {
-      val ks = collected.sorted
-      (ks.head, ks.last, Some(ks))
-    } else {
+    if (collected.length <= cap)
+      KeySet.collected(df.sparkSession, collected.sorted)
+    else {
       val b = df.agg(min(keyCol), max(keyCol)).head()
-      (b.getLong(0), b.getLong(1), None)
+      new KeySet(KeyRange(b.getLong(0), b.getLong(1)), None, keys)
     }
   }
 

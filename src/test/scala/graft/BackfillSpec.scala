@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 
 import graft.operators.SalesSink
@@ -13,7 +11,7 @@ class BackfillSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(): String = {
-    val dir = Files.createTempDirectory("backfill").toString
+    val dir = tempDir("backfill").toString
     val sales = Seq(
       ("Latte", 1, "2025-10", 1),
       ("Mocha", 2, "2025-11", 1),
@@ -38,7 +36,7 @@ class BackfillSpec extends SparkSpec {
       out.contains(""""rows_now_in_slice":0"""))
     assert(spark.read.parquet(dir).count() === 2)
 
-    val repl = Files.createTempDirectory("backfill_repl").toString
+    val repl = tempDir("backfill_repl").toString
     Seq(("Cortado", 9, "2025-11", 1))
       .toDF("item_name", "qty", "month", "location_id")
       .write.mode(SaveMode.Overwrite).parquet(repl)

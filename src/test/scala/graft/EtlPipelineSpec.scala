@@ -42,7 +42,7 @@ class EtlPipelineSpec extends SparkSpec {
     val located = SquareOrders.fromJson(spark, spark.createDataset(docs))
     val (lo, hi) = EtlPipeline.utcWindow(
       LocalDate.of(2025, 11, 1), LocalDate.of(2025, 11, 30))
-    val out = java.nio.file.Files.createTempDirectory("etl-obs").toString
+    val out = tempDir("etl-obs").toString
 
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new SparkListener {
@@ -94,7 +94,7 @@ class EtlPipelineSpec extends SparkSpec {
     val located = SquareOrders.fromJson(spark, spark.createDataset(docs))
     val (lo, hi) = EtlPipeline.utcWindow(
       LocalDate.of(2020, 1, 1), LocalDate.of(2020, 1, 31))
-    val out = java.nio.file.Files.createTempDirectory("etl-empty").toString
+    val out = tempDir("etl-empty").toString
     val stats = EtlPipeline.runPipeline(located, locations, lo, hi, out,
       testLimit = Some(1000))
     assert(stats.orders === 0)
@@ -107,7 +107,7 @@ class EtlPipelineSpec extends SparkSpec {
     val located = SquareOrders.fromJson(spark, spark.createDataset(docs))
     val (lo, hi) = EtlPipeline.utcWindow(
       LocalDate.of(2025, 11, 1), LocalDate.of(2025, 11, 30))
-    val out = java.nio.file.Files.createTempDirectory("etl-cap").toString
+    val out = tempDir("etl-cap").toString
     val stats = EtlPipeline.runPipeline(located, locations, lo, hi, out,
       testLimit = Some(1))
     assert(stats.orders === 1)

@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,9 +11,27 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
+  /** This suite's parent of every [[tempDir]]; made on first use. */
+  private var tempRoot: Option[Path] = None
+
+  /** A new empty directory named `<prefix><random>` for a test's files.
+    * It lives under this suite's own parent directory, which [[afterAll]]
+    * deletes recursively — so a test may also delete the directory to
+    * get a path that does not exist yet (a table path to create) and
+    * whatever it writes there is still removed. */
+  protected def tempDir(prefix: String): Path = synchronized {
+    val root = tempRoot.getOrElse {
+      val r = Files.createTempDirectory("graft-spec-")
+      tempRoot = Some(r)
+      r
+    }
+    Files.createTempDirectory(root, prefix)
+  }
+
   override def afterAll(): Unit = {
     // session is shared across suites; do not stop it here
-    super.afterAll()
+    try tempRoot.foreach(r => FileUtils.deleteQuietly(r.toFile))
+    finally super.afterAll()
   }
 }
 

@@ -153,7 +153,7 @@ class ClusteringSpec extends SparkSpec {
   test("assignment plan stays codegen (native cosine, no shuffle)") {
     // parquet-backed input: a purely-local relation would be constant-
     // folded away and show nothing of the real scan-side plan
-    val dirF = java.nio.file.Files.createTempDirectory("clus").toFile
+    val dirF = tempDir("clus").toFile
     dirF.deleteOnExit()
     val path = s"${dirF.getAbsolutePath}/emb"
     vecs.write.mode("overwrite").parquet(path)

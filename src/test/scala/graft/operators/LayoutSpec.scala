@@ -13,7 +13,7 @@ class LayoutSpec extends SparkSpec {
 
   test("writeRangeClustered is content-transparent and yields narrow, " +
     "near-disjoint per-file key spans (hash layout does not)") {
-    val path = java.nio.file.Files.createTempDirectory("clustered").toString
+    val path = tempDir("clustered").toString
     Layout.writeRangeClustered(corpus, Seq("k"), path, files = 8)
     val back = spark.read.parquet(path)
     // content contract: nothing lost, duplicated, or altered
@@ -34,7 +34,7 @@ class LayoutSpec extends SparkSpec {
     assert(sumSpan <= (global * 1.2).toLong,
       s"clustered layout not disjoint: Σ spans $sumSpan vs global $global")
     // contrast: the same data written hash-scattered
-    val scattered = java.nio.file.Files.createTempDirectory("hash").toString
+    val scattered = tempDir("hash").toString
     corpus.repartition(8).write.mode("overwrite").parquet(scattered)
     val (sumScat, globScat, _) = spanStats(scattered)
     assert(sumScat > globScat * 4,
@@ -43,7 +43,7 @@ class LayoutSpec extends SparkSpec {
 
   test("compact: in-place swap preserves content, hits the file target, " +
     "clusters when asked, and leaves no backup dirs") {
-    val path = java.nio.file.Files.createTempDirectory("compact").toString
+    val path = tempDir("compact").toString
     corpus.repartition(16).write.mode("overwrite").parquet(path)
     assert(new java.io.File(path).listFiles()
       .count(_.getName.endsWith(".parquet")) >= 16)
@@ -69,7 +69,7 @@ class LayoutSpec extends SparkSpec {
     // crash-between-renames state: live dir moved aside to _precompact,
     // new dir never installed — _precompact is the ONLY copy. A re-run
     // must refuse (not clean up the backup and then fail on the read).
-    val path = java.nio.file.Files.createTempDirectory("compactcr").toString
+    val path = tempDir("compactcr").toString
     corpus.repartition(4).write.mode("overwrite").parquet(path)
     val live = new java.io.File(path)
     val bak = new java.io.File(path + "_precompact")
@@ -82,7 +82,7 @@ class LayoutSpec extends SparkSpec {
     assert(bak.renameTo(live))
     assert(spark.read.parquet(path).count() === 10000L)
     // a missing live dir without a backup also refuses loudly
-    val ghost = java.nio.file.Files.createTempDirectory("ghost").toString
+    val ghost = tempDir("ghost").toString
     assert(new java.io.File(ghost).delete())
     val e2 = intercept[IllegalArgumentException] {
       Layout.compact(spark, ghost, files = 2)
@@ -92,7 +92,7 @@ class LayoutSpec extends SparkSpec {
 
   test("compact normalizes a trailing-slash path (staging dirs are " +
     "siblings, never children of the live table)") {
-    val path = java.nio.file.Files.createTempDirectory("compactsl").toString
+    val path = tempDir("compactsl").toString
     corpus.repartition(4).write.mode("overwrite").parquet(path)
     Layout.compact(spark, path + "/", files = 2, sortCols = Seq("k"))
     assert(spark.read.parquet(path).count() === 10000L)

@@ -1,6 +1,13 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 
@@ -8,7 +15,7 @@ class ManifestTableSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshDir(): String = {
-    val d = java.nio.file.Files.createTempDirectory("manifest").toString
+    val d = tempDir("manifest").toString
     new java.io.File(d).delete()
     d
   }
@@ -1215,5 +1222,81 @@ class ManifestTableSpec extends SparkSpec {
     assert(ManifestTable.tags(spark, path).isEmpty) // invisible to refs
     ManifestTable.vacuum(spark, path, keepVersions = 1)
     assert(!staged.exists())
+  }
+
+  /** The optimized plans of the queries `body` ran against `path`. A
+    * marker query after `body` flushes the listener bus: listener events
+    * arrive in order, so once the marker is seen every earlier one is. */
+  private def plansOf(path: String)(body: => Unit): Seq[LogicalPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe.optimizedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add(qe.optimizedPlan)
+    }
+    val marker = s"plan-marker-${java.util.UUID.randomUUID}"
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.sql(s"SELECT '$marker'").collect()
+      val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(_.toString.contains(marker))) {
+        assert(System.nanoTime < deadline, "listener never saw the marker")
+        Thread.sleep(20)
+      }
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq.filter(_.toString.contains(path))
+  }
+
+  test("key sets past the old literal cap rewrite through a left anti " +
+    "join: deleteIds of 20,000 scattered ids and merge(delete, ignore) " +
+    "of 10,000 keys equal an anti-filter of the snapshot, keep NULL keys " +
+    "and untouched lines, and plan no IN list") {
+    val rows = (1 to 40000).map(i => (Option(i.toLong), i * 7L % 1000)) ++
+      (1 to 100).map(i => (Option.empty[Long], i.toLong))
+    def check(keys: Seq[Long])(op: String => Long): Unit = {
+      val path = freshDir()
+      ManifestTable.create(spark, path, rows.toDF("k", "v"), files = 8,
+        sortCols = Seq("k"), statsCols = Seq("k"))
+      val (v1, before) = ManifestTable.currentEntries(spark, path)
+      val plans = plansOf(path)(assert(op(path) === v1 + 1))
+      def content(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getLong(1)))
+        .sorted.toSeq
+      val keySet = keys.toSet
+      val expected = content(ManifestTable.read(spark, path,
+        version = Some(v1))).filterNot(_._1.exists(keySet))
+      val got = content(ManifestTable.read(spark, path))
+      assert(got === expected)
+      assert(got.count(_._1.isEmpty) === 100)
+      val (_, after) = ManifestTable.currentEntries(spark, path)
+      val untouched = before.filter { e =>
+        val (lo, hi) = e.stats("k"); !keys.exists(k => k >= lo && k <= hi)
+      }
+      assert(untouched.nonEmpty)
+      assert(untouched.forall(after.contains))
+      assert(plans.nonEmpty, "no query of the rewrite was captured")
+      assert(plans.exists(_.exists {
+        case j: Join => j.joinType == LeftAnti
+        case _       => false
+      }), "no left anti join in the rewrite: " +
+        plans.mkString("\n").take(2000))
+      val literalLists = plans.flatMap(_.flatMap(_.expressions))
+        .flatMap(_.collect { case e @ (_: In | _: InSet) => e })
+      assert(literalLists.isEmpty,
+        "IN literal list in the rewrite: " +
+          literalLists.take(1).map(_.toString.take(300)))
+    }
+    val ids = new scala.util.Random(7)
+      .shuffle((1L to 30000L).filter(_ % 3 != 0))
+    assert(ids.size === 20000)
+    check(ids)(path => ManifestTable.deleteIds(spark, path, "k", ids,
+      statsCols = Seq("k")))
+    val keys = 1L to 30000L by 3L
+    assert(keys.size === 10000)
+    check(keys)(path => ManifestTable.merge(spark, path, "k",
+      keys.toDF("k"), files = 1, whenMatched = "delete",
+      whenNotMatched = "ignore", statsCols = Seq("k")))
   }
 }

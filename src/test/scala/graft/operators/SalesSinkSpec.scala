@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
@@ -20,7 +18,7 @@ class SalesSinkSpec extends SparkSpec {
     .toDF("item_name", "qty", "month", "location_id")
 
   test("layout: location dirs (LIST parity) x month dirs (pruning)") {
-    val dir = Files.createTempDirectory("sales_sink").toString
+    val dir = tempDir("sales_sink").toString
     SalesSink.writePartitioned(sampleSales, dir, SaveMode.Overwrite)
     val locs = new java.io.File(dir).listFiles().map(_.getName)
       .filter(_.startsWith("location_id=")).sorted
@@ -35,7 +33,7 @@ class SalesSinkSpec extends SparkSpec {
   }
 
   test("overwriteMonth deletes one (location, month) slice, leaves the rest") {
-    val dir = Files.createTempDirectory("sales_del").toString
+    val dir = tempDir("sales_del").toString
     SalesSink.writePartitioned(sampleSales, dir, SaveMode.Overwrite)
     SalesSink.overwriteMonth(spark, dir, locationId = 1, month = "2025-11")
     val left = spark.read.parquet(dir)
@@ -46,7 +44,7 @@ class SalesSinkSpec extends SparkSpec {
 
   test("overwriteMonth on a location's only month empties it for real " +
     "(regression: dynamic-overwrite silently no-ops on empty survivors)") {
-    val dir = Files.createTempDirectory("sales_only").toString
+    val dir = tempDir("sales_only").toString
     val one = Seq(("Solo", 1, "2025-11", 7), ("Other", 1, "2025-11", 8))
       .toDF("item_name", "qty", "month", "location_id")
     SalesSink.writePartitioned(one, dir, SaveMode.Overwrite)
@@ -57,7 +55,7 @@ class SalesSinkSpec extends SparkSpec {
   }
 
   test("overwriteMonth with replacement backfills the slice") {
-    val dir = Files.createTempDirectory("sales_bf").toString
+    val dir = tempDir("sales_bf").toString
     SalesSink.writePartitioned(sampleSales, dir, SaveMode.Overwrite)
     val repl = Seq(("Cortado", 9, "2025-11", 1))
       .toDF("item_name", "qty", "month", "location_id")

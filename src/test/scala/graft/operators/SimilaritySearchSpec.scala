@@ -136,7 +136,7 @@ class SimilaritySearchSpec extends SparkSpec {
 
   test("persisted IVF index: probes are partition-pruned reads with " +
     "identical results to the in-memory path") {
-    val path = java.nio.file.Files.createTempDirectory("ivf_idx").toString
+    val path = tempDir("ivf_idx").toString
     SimilaritySearch.writeIndex(emb, "vec_id", "embedding", path,
       dim = 64, planes = 6, tables = 4)
     val persisted = SimilaritySearch.annTopKPersisted(spark, path, queryVec,
@@ -172,8 +172,8 @@ class SimilaritySearchSpec extends SparkSpec {
 
   test("appendIndex: append-then-probe == full rebuild; refuses param " +
     "drift and non-index paths") {
-    val appPath = java.nio.file.Files.createTempDirectory("ivf_app").toString
-    val fullPath = java.nio.file.Files.createTempDirectory("ivf_full").toString
+    val appPath = tempDir("ivf_app").toString
+    val fullPath = tempDir("ivf_full").toString
     val batchA = emb.filter(col("vec_id") % 3 =!= 0)
     val batchB = emb.filter(col("vec_id") % 3 === 0)
     SimilaritySearch.writeIndex(batchA, "vec_id", "embedding", appPath,
@@ -196,7 +196,7 @@ class SimilaritySearchSpec extends SparkSpec {
     assert(e1.getMessage.contains("params"))
     // appending to a path that was never writeIndex-built would create
     // a sidecar-less (checkless) index — must refuse
-    val bare = java.nio.file.Files.createTempDirectory("not_idx").toString
+    val bare = tempDir("not_idx").toString
     val e2 = intercept[IllegalArgumentException] {
       SimilaritySearch.appendIndex(batchB, "vec_id", "embedding", bare,
         dim = 64, planes = 6, tables = 4)
@@ -206,7 +206,7 @@ class SimilaritySearchSpec extends SparkSpec {
 
   test("compactIndex: probe results identical, per-dir files collapse " +
     "to one, sidecar survives, appending afterwards still works") {
-    val path = java.nio.file.Files.createTempDirectory("ivf_cpt").toString
+    val path = tempDir("ivf_cpt").toString
     val batches = (0 to 2).map(r => emb.filter(col("vec_id") % 3 === r))
     SimilaritySearch.writeIndex(batches(0), "vec_id", "embedding", path,
       dim = 64, planes = 6, tables = 4)
@@ -234,7 +234,7 @@ class SimilaritySearchSpec extends SparkSpec {
     SimilaritySearch.appendIndex(batches(1), "vec_id", "embedding", path,
       dim = 64, planes = 6, tables = 4) // would throw if sidecar drifted
     // a non-index dir refuses
-    val bare = java.nio.file.Files.createTempDirectory("not_idx2").toString
+    val bare = tempDir("not_idx2").toString
     val e = intercept[IllegalArgumentException] {
       SimilaritySearch.compactIndex(spark, bare)
     }

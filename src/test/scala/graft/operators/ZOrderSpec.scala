@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -41,7 +39,7 @@ class ZOrderSpec extends SparkSpec {
   test("writeZOrdered contracts per-file ranges in BOTH dimensions") {
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .select("l_orderkey", "l_partkey", "l_suppkey")
-    val base = Files.createTempDirectory("zorder").toString
+    val base = tempDir("zorder").toString
     // natural layout: same file count, same within-file sort discipline,
     // but clustered by arrival (orderkey) — the fair baseline
     li.repartitionByRange(16, col("l_orderkey"))
@@ -72,7 +70,7 @@ class ZOrderSpec extends SparkSpec {
       "and loses no rows") {
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .select("l_orderkey", "l_partkey", "l_suppkey")
-    val dir = Files.createTempDirectory("zbox").toString
+    val dir = tempDir("zbox").toString
     ZOrder.writeZOrdered(li, "l_partkey", "l_suppkey", dir, 16)
     val written = spark.read.parquet(dir)
     val index = ZOrder.statsIndex(written, "l_partkey", "l_suppkey")
@@ -92,7 +90,7 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("fileRanges accounts for every row") {
-    val dir = Files.createTempDirectory("zr").toString
+    val dir = tempDir("zr").toString
     spark.range(100).select(col("id"), (col("id") % 7).as("k"))
       .repartition(4).write.mode("overwrite").parquet(dir)
     val fr = ZOrder.fileRanges(spark.read.parquet(dir), "id")

@@ -37,7 +37,7 @@ class PlanLintSpec extends SparkSpec {
 
   test("UDF predicate over parquet flags unpushed-filter; plain " +
       "predicate does not") {
-    val dir = java.nio.file.Files.createTempDirectory("lint").toString
+    val dir = tempDir("lint").toString
     spark.range(1000).select(col("id"), (col("id") % 7).as("k"))
       .write.mode("overwrite").parquet(dir)
     val scan = spark.read.parquet(dir)
@@ -49,7 +49,7 @@ class PlanLintSpec extends SparkSpec {
   test("filtered scan joined to an unfiltered dimension scan is clean") {
     // precision: the dimension scan legitimately pushes nothing (no
     // predicate on it); the fact-side Filter must not be blamed for it
-    val dir = java.nio.file.Files.createTempDirectory("lint2").toString
+    val dir = tempDir("lint2").toString
     spark.range(1000).select(col("id"), (col("id") % 7).as("k"))
       .write.mode("overwrite").parquet(s"$dir/fact")
     spark.range(7).select(col("id").as("k"), (col("id") * 10).as("v"))

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
@@ -17,7 +15,7 @@ class ManifestStreamSourceSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshDir(): String =
-    Files.createTempDirectory("manifest_src").toString
+    tempDir("manifest_src").toString
 
   private def part(lo: Int, hi: Int) =
     (lo to hi).map(i => (i.toLong, ((i * 2654435761L) % 1000L)))

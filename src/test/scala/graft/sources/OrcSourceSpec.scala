@@ -14,7 +14,7 @@ class OrcSourceSpec extends SparkSpec {
 
   test("ORC round-trip: partition pruning + pushed row predicate " +
     "visible in the scan, content preserved") {
-    val path = java.nio.file.Files.createTempDirectory("orc_rt").toString
+    val path = tempDir("orc_rt").toString
     val src = (1 to 3000).map { i =>
       (i.toLong, 1995 + i % 3, (i % 50).toDouble, i * 1.5)
     }.toDF("id", "y", "qty", "price")

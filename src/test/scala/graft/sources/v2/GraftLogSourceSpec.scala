@@ -1,7 +1,5 @@
 package graft.sources.v2
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -11,7 +9,7 @@ class GraftLogSourceSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   private def recs(partition: Int, from: Int, n: Int) =
     (from until from + n).map(i =>

@@ -17,7 +17,7 @@ class SquareOrdersSourceSpec extends SparkSpec {
       .stripMargin.replace("\n", "")
 
   private lazy val dir: Path = {
-    val d = Files.createTempDirectory("square_src")
+    val d = tempDir("square_src")
     Files.writeString(d.resolve("LWRIG000000001.jsonl"),
       Seq(
         order("w1", "LWRIG000000001", "2025-11-01T10:00:00Z"),

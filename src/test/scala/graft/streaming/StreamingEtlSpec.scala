@@ -11,9 +11,9 @@ class StreamingEtlSpec extends SparkSpec {
   import spark.implicits._
 
   test("file-stream orders -> same sales rows as batch, incrementally") {
-    val ordersDir = Files.createTempDirectory("stream_orders")
-    val outDir = Files.createTempDirectory("stream_out").toString
-    val ckpt = Files.createTempDirectory("stream_ckpt").toString
+    val ordersDir = tempDir("stream_orders")
+    val outDir = tempDir("stream_out").toString
+    val ckpt = tempDir("stream_ckpt").toString
     val locations = Seq((2, "Current", "L5WST6KFZBT10"))
       .toDF("id", "name", "square_id")
 
@@ -48,7 +48,7 @@ class StreamingEtlSpec extends SparkSpec {
   }
 
   test("replayed batchId overwrites, never duplicates (exactly-once sink)") {
-    val outDir = Files.createTempDirectory("stream_replay").toString
+    val outDir = tempDir("stream_replay").toString
     val batch = Seq(("Latte", 1, "2025-11", 2), ("Mocha", 2, "2025-11", 2))
       .toDF("item_name", "qty", "month", "location_id")
     StreamingEtl.writeBatch(batch, outDir, batchId = 7)
@@ -60,7 +60,7 @@ class StreamingEtlSpec extends SparkSpec {
     assert(spark.read.parquet(outDir).count() === 3)
 
     // compaction folds batch dirs into the plain batch-table layout
-    val dest = Files.createTempDirectory("stream_compact").toString
+    val dest = tempDir("stream_compact").toString
     StreamingEtl.compactStream(spark, outDir, dest)
     val compacted = spark.read.parquet(dest)
     assert(compacted.count() === 3)
@@ -73,7 +73,7 @@ class StreamingEtlSpec extends SparkSpec {
   test("manifest sink: replayed batchId no-ops by txn tag; readers see " +
     "whole committed batches only") {
     import graft.operators.ManifestTable
-    val table = Files.createTempDirectory("stream_mani").toString
+    val table = tempDir("stream_mani").toString
     new java.io.File(table).delete()
     val b0 = Seq(("Latte", 1), ("Mocha", 2)).toDF("item_name", "qty")
     val b1 = Seq(("Drip", 3)).toDF("item_name", "qty")
@@ -92,7 +92,7 @@ class StreamingEtlSpec extends SparkSpec {
   test("upsert sink: a batch's corrected keys replace earlier rows, " +
     "new keys insert, replayed batchId no-ops — even after maintenance") {
     import graft.operators.ManifestTable
-    val table = Files.createTempDirectory("stream_upsert").toString
+    val table = tempDir("stream_upsert").toString
     new java.io.File(table).delete()
     val b0 = Seq((1L, "Latte", 1), (2L, "Mocha", 2), (3L, "Drip", 1))
       .toDF("order_id", "item_name", "qty")
@@ -120,10 +120,10 @@ class StreamingEtlSpec extends SparkSpec {
 
   test("startManifest: end-to-end file-stream -> manifest table equals " +
     "the batch transform; checkpoint restart appends only the new file") {
-    val ordersDir = Files.createTempDirectory("mani_orders")
-    val table = Files.createTempDirectory("mani_table").toString
+    val ordersDir = tempDir("mani_orders")
+    val table = tempDir("mani_table").toString
     new java.io.File(table).delete()
-    val ckpt = Files.createTempDirectory("mani_ckpt").toString
+    val ckpt = tempDir("mani_ckpt").toString
     val locations = Seq((2, "Current", "L5WST6KFZBT10"))
       .toDF("id", "name", "square_id")
     def orderJson(id: String, cents: Long) =

@@ -17,7 +17,9 @@
 # gate, each side's min seconds over the pairs, the B/A ratio of those
 # mins and each side's spread ((max - min) / min), then each run's
 # subset total and any budget breach. This replaces the hand-run
-# stash/pop A/Bs of earlier rounds.
+# stash/pop A/Bs of earlier rounds. It exits 1 when any run left no
+# record or a requested gate has no time on one side (the table is still
+# printed first).
 set -euo pipefail
 if [ $# -lt 3 ]; then
   echo "usage: tools/ab.sh <revA> <revB> <gates> [pairs]" >&2
@@ -45,9 +47,10 @@ for i in $(seq 1 "$pairs"); do
   done
 done
 
-python3 - "$work" "$pairs" "$revA" "$revB" <<'PY'
+python3 - "$work" "$pairs" "$revA" "$revB" "$gates" <<'PY'
 import json, sys
 work, pairs, rev = sys.argv[1], int(sys.argv[2]), {"a": sys.argv[3], "b": sys.argv[4]}
+requested = [g for g in sys.argv[5].split(",") if g]
 runs = {}
 for side in "ab":
     runs[side] = []
@@ -56,15 +59,19 @@ for side in "ab":
             runs[side].append(json.load(open(f"{work}/{side}.{i}.json")))
         except (OSError, ValueError):
             runs[side].append({"error": f"no record (log {side}.{i}.log)"})
-gates = sorted({g for side in "ab" for r in runs[side] for g in r.get("queries", {})})
+gates = sorted({g for side in "ab" for r in runs[side] for g in r.get("queries", {})}
+               | set(requested))
 def times(side, g):
     return [r["queries"][g] for r in runs[side] if g in r.get("queries", {})]
+problems = [f"side {side.upper()} run {i} left no record"
+            for side in "ab" for i, r in enumerate(runs[side], 1) if "error" in r]
 print(f"A = {rev['a']}   B = {rev['b']}   pairs = {pairs}")
 print(f"{'gate':24} {'A_min':>8} {'B_min':>8} {'B/A':>6} {'A_sprd':>7} {'B_sprd':>7}")
 for g in gates:
     a, b = times("a", g), times("b", g)
     if not a or not b:
         print(f"{g:24} missing on side {'A' if not a else 'B'}")
+        problems.append(f"gate {g} has no time on side {'A' if not a else 'B'}")
         continue
     sprd = lambda v: (max(v) - min(v)) / min(v) if min(v) > 0 else 0.0
     print(f"{g:24} {min(a):8.3f} {min(b):8.3f} {min(b) / min(a):6.3f} "
@@ -74,4 +81,7 @@ for side in "ab":
         print(f"{side.upper()} run {i}: total {r.get('value')} s, "
               f"failed {r.get('failed', '-')}, over_budget {r.get('over_budget', '-')}"
               + (f", {r['error']}" if "error" in r else ""))
+if problems:
+    print("[ab] FAILED: " + "; ".join(problems), file=sys.stderr)
+    sys.exit(1)
 PY
