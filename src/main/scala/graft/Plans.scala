@@ -95,13 +95,26 @@ object Plans {
   private val DataFile = ("""(c[0-9a-f]{8}-[0-9a-f]{3}/)?part-\d+-""" +
     """[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}(-c\d+)?""").r
 
-  /** `plan` with the random part of every written data file's name
-    * replaced by one fixed token: a gate that writes under a fixed path
-    * gets fresh random names on every run, which would show in every
-    * diff of its plan. */
-  private[graft] def normalize(plan: String): String =
-    DataFile.replaceAllIn(plan, m =>
+  /** An expression id (`k#61L` carries `#61`), an Exchange's
+    * `plan_id=<n>` and a typed operator's lambda class and address
+    * (`Lambda$5541/0x00007f94b9524578@597050fa`): JVM-wide counters and
+    * addresses, so anything that runs before a gate builds its plan
+    * renumbers them. */
+  private val ExprId = """#\d+""".r
+  private val PlanId = """plan_id=\d+""".r
+  private val Lambda = """Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+""".r
+
+  /** `plan` with every run-dependent token replaced by a fixed one: the
+    * random part of written data-file names (a gate that writes under a
+    * fixed path gets fresh names on every run), expression ids, Exchange
+    * plan ids and lambda names. Two dumps of the same plan then diff
+    * clean. */
+  private[graft] def normalize(plan: String): String = {
+    val files = DataFile.replaceAllIn(plan, m =>
       (if (m.group(1) == null) "" else "c<commit>/") + "part-<file>")
+    Seq(ExprId -> "#<id>", PlanId -> "plan_id=<n>", Lambda -> "Lambda<fn>")
+      .foldLeft(files) { case (p, (re, token)) => re.replaceAllIn(p, token) }
+  }
 
   /** The formatted explain of `df`, [[normalize]]d. */
   private def explain(df: DataFrame): String = normalize(

@@ -353,9 +353,7 @@ object ScalingProbe {
           val t0 = System.nanoTime()
           fn(spark, d).count()
           val dt = (System.nanoTime() - t0) / 1e9
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-          spark.sharedState.cacheManager.clearCache()
+          SweepCache.releaseGateStorage(spark)
           dt
         }.min
         println(f"[scaling] $gate%-20s $label%-7s ${t}%7.2f s")

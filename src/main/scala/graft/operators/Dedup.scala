@@ -95,7 +95,7 @@ object Dedup {
     * occur in more than `maxBucket` docs (skew guard; 0 = no cap). */
   private def docShingles(docs: DataFrame, idCol: String, textCol: String,
       n: Int, maxBucket: Int): DataFrame =
-    capShingleBuckets(shingleTable(docs, idCol, textCol, n), maxBucket)
+    capBuckets(shingleTable(docs, idCol, textCol, n), Seq("sh"), maxBucket)
 
   /** The materializable inverted index: distinct (doc, sh) rows of
     * case-normalized shingles ("THE Quick" == "the quick", matching
@@ -146,15 +146,8 @@ object Dedup {
     // ONE physical shingle pass (the prefixJoinCore idiom): an explicit
     // hash-by-`sh` exchange both self-join sides and the cap's window
     // hang off — ReuseExchange computes it once, so the interpreted
-    // HOF shingling runs once per plan, not three times. The window
-    // count replaces the old hot-list groupBy + anti-join; 0 = no cap,
-    // like every other maxBucket in this file.
-    val base = sh0.repartition(col("sh"))
-    val sh =
-      if (maxBucket <= 0) base
-      else base.withColumn("dfc", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("sh")))
-        .filter(col("dfc") <= maxBucket).drop("dfc")
+    // HOF shingling runs once per plan, not three times.
+    val sh = capBuckets(sh0.repartition(col("sh")), Seq("sh"), maxBucket)
     val m = sh.select(col("doc").as("a"), col("spos").as("pa"), col("sh"))
       .join(sh.select(col("doc").as("b"), col("spos").as("pb"), col("sh")),
         "sh")
@@ -172,15 +165,54 @@ object Dedup {
       .select(col("a").as("doc_a"), col("b").as("doc_b"), col("max_run"))
   }
 
+  /** The hot-bucket cap of every banded path in this package: drop the
+    * rows of each bucket (one `keys` tuple) that holds more than
+    * `maxBucket` rows; 0 = no cap. One window count partitioned by the
+    * bucket keys — the distribution the caller's bucket join needs
+    * anyway, so the join reads the window's exchange instead of adding
+    * its own, and the upstream signature or shingle pass runs once per
+    * plan rather than once more for a separate hot-bucket list. */
+  private[operators] def capBuckets(frame: DataFrame, keys: Seq[String],
+      maxBucket: Int): DataFrame =
+    if (maxBucket <= 0) frame
+    else frame
+      .withColumn("_bucket_n", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy(keys.map(col): _*)))
+      .filter(col("_bucket_n") <= maxBucket).drop("_bucket_n")
+
+  /** Distinct pairs of ids that share a [[capBuckets]]-capped bucket.
+    * `frame` holds one id column beside the bucket `keys`; the result is
+    * (`<id>_a`, `<id>_b`) with `<id>_a < <id>_b`. */
+  private[operators] def bucketPairs(frame: DataFrame, keys: Seq[String],
+      maxBucket: Int): DataFrame = {
+    val ids = frame.columns.filterNot(keys.contains)
+    require(ids.length == 1,
+      s"one id column beside ${keys.mkString(", ")}, got ${ids.mkString(", ")}")
+    val (a, b) = (s"${ids.head}_a", s"${ids.head}_b")
+    val capped = capBuckets(frame, keys, maxBucket)
+    capped.withColumnRenamed(ids.head, a)
+      .join(capped.withColumnRenamed(ids.head, b), keys)
+      .filter(col(a) < col(b))
+      .select(a, b).distinct()
+  }
+
+  /** Exact set Jaccard |A ∩ B| / |A ∪ B| of two arrays of distinct
+    * elements: the verification every banded candidate set runs. */
+  private[operators] def setJaccard(a: Column, b: Column): Column = {
+    val inter = size(array_intersect(a, b))
+    inter.cast(DoubleType) / (size(a) + size(b) - inter)
+  }
+
   /** One-row audit of what a hot-bucket cap drops: bucket keys whose
     * frequency exceeds `maxBucket`, the rows they carry, and the hottest
-    * frequency seen. The caps themselves ([[ngramJaccardPairsPrefix]]'s
-    * df filter, [[minHashLshPairs]]' band prune) drop SILENTLY by
-    * design — the join must not stall on a mega-bucket — but at 100 TB
-    * an unnoticed hot-bucket drop is a silent recall loss, so every
-    * capped path has a matching audit a pipeline can run (and alert on)
+    * frequency seen. The caps themselves ([[capBuckets]] and
+    * [[ngramJaccardPairsPrefix]]'s df filter) drop SILENTLY by design —
+    * the join must not stall on a mega-bucket — but at 100 TB an
+    * unnoticed hot-bucket drop is a silent recall loss, so every capped
+    * path has a matching audit a pipeline can run (and alert on)
     * against the same frame (r2 judge item #4). */
-  private def capAuditCore(buckets: DataFrame, keys: Seq[String],
+  private[operators] def capAuditCore(buckets: DataFrame, keys: Seq[String],
       maxBucket: Int): DataFrame = {
     require(maxBucket > 0, "audit needs a positive cap")
     buckets.groupBy(keys.map(col): _*).agg(count(lit(1)).as("df"))
@@ -210,12 +242,16 @@ object Dedup {
     * production default is `maxBucket = autoMaxBucket(n)` and the
     * matching `*CapAudit` on the same frame).
     *
-    * Per-family levers: d02 prefix join — cap on shingle df (this
-    * knob); d03 MinHash — bands/rows set the similarity threshold
-    * (s-curve), this knob caps band-bucket width against mega-dup
-    * clusters; d05/s14 LSH — plane count via `autoPlanes` (bucket
-    * CARDINALITY) plus this cap (bucket POPULATION); mm08–10 Hamming
-    * bands — same pair, via `nearestByHamming(maxBucket)`. */
+    * Per-family levers: bucket POPULATION is this knob everywhere, fed
+    * to the one [[capBuckets]] window count (d02's prefix join filters
+    * its own window count instead, because its rarity rank reads that
+    * same shingle df). d03/d06 MinHash — bands/rows
+    * set the similarity threshold (s-curve), the cap bounds band-bucket
+    * width against mega-dup clusters; d07/d11 shingle joins — the cap
+    * drops boilerplate shingles; mm08–10 Hamming bands — bandBits sets
+    * bucket CARDINALITY, the cap arrives via `nearestByHamming(maxBucket)`;
+    * d05/s14 cosine LSH — plane count via `autoPlanes` (CARDINALITY)
+    * only, [[cosinePairsLsh]] takes no cap. */
   def autoMaxBucket(n: Long, ppm: Long = 400L, floor: Int = 2000): Int =
     math.max(floor.toLong, n * ppm / 1000000L).toInt
 
@@ -241,21 +277,6 @@ object Dedup {
     capAuditCore(bandedFrame(sig, bands, numHashes / bands),
       Seq("band", "bh"), maxBucket)
   }
-
-  /** Skew guard over a (doc, sh) frame: drop shingles appearing in more
-    * than `maxBucket` docs (0 = no cap). */
-  private def capShingleBuckets(sh: DataFrame, maxBucket: Int): DataFrame =
-    if (maxBucket <= 0) sh
-    else {
-      // the hot-list derives from `sh` itself — rename its columns so the
-      // anti-join cannot resolve ambiguously against the shared lineage
-      // (an ambiguous self-join here silently degenerates and can drop
-      // EVERYTHING; regression-tested)
-      val hot = sh.groupBy("sh").agg(count(lit(1)).as("df"))
-        .filter(col("df") > maxBucket)
-        .select(col("sh").as("hot_sh"))
-      sh.join(hot, sh("sh") === hot("hot_sh"), "left_anti")
-    }
 
   /** Exact n-gram Jaccard similarity for every pair sharing >= 1 shingle.
     * Returns (doc_a, doc_b, jaccard) with doc_a < doc_b. */
@@ -325,14 +346,6 @@ object Dedup {
         col("ratio_ppm"))
   }
 
-  /** Per-doc distinct shingle-hash arrays — the compact set
-    * representation used for candidate verification. */
-  private def shingleSets(docs: DataFrame, idCol: String, textCol: String,
-      n: Int): DataFrame =
-    docs.select(col(idCol).as("doc"),
-      array_distinct(transform(wordShingles(lower(col(textCol)), n),
-        s => xxhash64(s))).as("shs"))
-
   /** EXACT n-gram Jaccard pairs at a threshold, via prefix filtering
     * (AllPairs/PPJoin family, Bayardo et al., WWW'07) — the scale path
     * for exact similarity joins.
@@ -368,9 +381,10 @@ object Dedup {
     * the rarity-ranked prefix, the set sizes, and the verification sets
     * ALL derive from one windowed pass over the (doc, sh) frame —
     * `count().over(partitionBy(sh))` replaces the dfreq groupBy+join,
-    * and `df <= maxBucket` IS the skew cap (no separate hot-list
-    * anti-join). The three plan references that remain (prefix side,
-    * index side, verification sets) share the frame's single
+    * and `df <= maxBucket` IS the skew cap (inline rather than
+    * [[capBuckets]]: the rarity rank reads the same df column). The
+    * three plan references that remain (prefix side, index side,
+    * verification sets) share the frame's single
     * shuffle-by-`sh` via Spark's ReuseExchange, so the corpus is
     * shingled once per plan instead of three-to-five times (r2 judge
     * item #3: d02 gate 8.0 s → measured below 4 s at sf0.1).
@@ -413,36 +427,14 @@ object Dedup {
       .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
         greatest(col("doc_a"), col("doc_b")).as("doc_b"))
       .distinct()
-    val inter = size(array_intersect(col("shs_a"), col("shs_b")))
     cand
       .join(sets.toDF("doc_a", "shs_a"), Seq("doc_a"))
       .join(sets.toDF("doc_b", "shs_b"), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
-        (inter.cast(DoubleType) /
-          (size(col("shs_a")) + size(col("shs_b")) - inter)).as("jaccard"))
+        setJaccard(col("shs_a"), col("shs_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
-  /** Near-duplicate pairs by MinHash + banded LSH.
-    *
-    * Signature of `numHashes` minhashes over n-gram shingles, split into
-    * `bands` bands; docs sharing any band hash become candidates
-    * (equi-join on (band, bandHash) — no cross join); candidates are
-    * verified with exact Jaccard computed from the two docs' shingle-hash
-    * SETS via array_intersect — verify cost is O(|candidates| × set
-    * size), independent of corpus shingle density. (Verifying through a
-    * full shingle self-join instead melts down on dense corpora: a
-    * 30-word vocabulary at 50k docs yields ~500M shingle-sharing pairs.)
-    * With r = numHashes/bands rows per band, catch probability is
-    * 1-(1-j^r)^bands — r=2, bands=32 gives ~0.9999 at j=0.5. */
-  /** Banded-LSH candidate pairs from `(doc, sig)` signature rows: docs
-    * sharing any band hash pair up via an equi-join on (band, bh).
-    * `maxBucket` is the skew guard: buckets holding more than that many
-    * docs are dropped before pairing. Hot-list columns are RENAMED
-    * before the anti-join — joining a frame against an aggregate of
-    * itself on same-named columns resolves ambiguously and silently
-    * drops everything (found at 50k: maxBucket=2000 with zero
-    * actually-hot buckets returned 0 pairs). */
   /** (doc, band, bh) rows of `sig`'s banded signature — the LSH bucket
     * frame both candidate generation and the cap audit derive from. */
   private def bandedFrame(sig: DataFrame, bands: Int, r: Int): DataFrame = {
@@ -458,24 +450,13 @@ object Dedup {
     sig.select(col("doc"), posexplode(bandArr)).toDF("doc", "band", "bh")
   }
 
+  /** Banded-LSH candidate pairs (doc_a < doc_b) from `(doc, sig)`
+    * signature rows: docs sharing any band hash pair up via an
+    * equi-join on (band, bh), with buckets holding more than
+    * `maxBucket` docs dropped before pairing (0 = no cap). */
   private def bandedCandidates(sig: DataFrame, bands: Int, r: Int,
-      maxBucket: Int): DataFrame = {
-    val banded = bandedFrame(sig, bands, r)
-    val pruned =
-      if (maxBucket <= 0) banded
-      else {
-        val hot = banded.groupBy("band", "bh").agg(count(lit(1)).as("c"))
-          .filter(col("c") > maxBucket)
-          .select(col("band").as("hot_band"), col("bh").as("hot_bh"))
-        banded.join(hot,
-          banded("band") === hot("hot_band") && banded("bh") === hot("hot_bh"),
-          "left_anti")
-      }
-    pruned.toDF("doc_a", "band", "bh")
-      .join(pruned.toDF("doc_b", "band", "bh"), Seq("band", "bh"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-  }
+      maxBucket: Int): DataFrame =
+    bucketPairs(bandedFrame(sig, bands, r), Seq("band", "bh"), maxBucket)
 
   /** RAW banded candidate pairs (doc_a < doc_b), BEFORE verification —
     * the d18 audit surface: what the banding geometry alone surfaces,
@@ -517,8 +498,22 @@ object Dedup {
     * extra rows are inert in staged use). */
   def verificationSets(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3): DataFrame =
-    shingleSets(docs, idCol, textCol, n)
+    docs.select(col(idCol).as("doc"),
+      array_distinct(transform(wordShingles(lower(col(textCol)), n),
+        s => xxhash64(s))).as("shs"))
 
+  /** Near-duplicate pairs by MinHash + banded LSH.
+    *
+    * Signature of `numHashes` minhashes over n-gram shingles, split into
+    * `bands` bands; docs sharing any band hash become candidates
+    * (equi-join on (band, bandHash) — no cross join); candidates are
+    * verified with exact Jaccard computed from the two docs' shingle-hash
+    * SETS via array_intersect — verify cost is O(|candidates| × set
+    * size), independent of corpus shingle density. (Verifying through a
+    * full shingle self-join instead melts down on dense corpora: a
+    * 30-word vocabulary at 50k docs yields ~500M shingle-sharing pairs.)
+    * With r = numHashes/bands rows per band, catch probability is
+    * 1-(1-j^r)^bands — r=2, bands=32 gives ~0.9999 at j=0.5. */
   def minHashLshPairs(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3, numHashes: Int = 64, bands: Int = 32,
       threshold: Double = 0.5, maxBucket: Int = 0): DataFrame = {
@@ -534,14 +529,11 @@ object Dedup {
     * bit-identical to the text-side variant, which delegates here. */
   def minHashLshPairsStaged(sig: DataFrame, sets: DataFrame, bands: Int,
       r: Int, threshold: Double, maxBucket: Int = 0): DataFrame = {
-    val cand = bandedCandidates(sig, bands, r, maxBucket)
-    val inter = size(array_intersect(col("shs_a"), col("shs_b")))
-    cand
+    bandedCandidates(sig, bands, r, maxBucket)
       .join(sets.toDF("doc_a", "shs_a"), Seq("doc_a"))
       .join(sets.toDF("doc_b", "shs_b"), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
-        (inter.cast(DoubleType) /
-          (size(col("shs_a")) + size(col("shs_b")) - inter)).as("jaccard"))
+        setJaccard(col("shs_a"), col("shs_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -565,42 +557,24 @@ object Dedup {
       bands: Int = 32, threshold: Double = 0.5,
       maxBucket: Int = 0): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    // same shingle-less guard as minHashLshPairs: sentinel signatures
-    // co-bucket in every band — cross-corpus that is |empty_ex| ×
-    // |empty_in| candidates
-    def banded(side: DataFrame) = bandedFrame(
-      side.filter(size(graft.functions.TextFunctions
-          .tokens(lower(col(textCol)))) >= n)
-        .select(col(idCol).as("doc"),
-          minHashSignature(lower(col(textCol)), n, numHashes).as("sig")),
-      bands, r)
-    val exBand = banded(existing)
-    val inBand = banded(incoming)
-    val (exPruned, inPruned) =
-      if (maxBucket <= 0) (exBand, inBand)
-      else {
-        val hot = exBand.unionByName(inBand)
-          .groupBy("band", "bh").agg(count(lit(1)).as("c"))
-          .filter(col("c") > maxBucket)
-          .select(col("band").as("hot_band"), col("bh").as("hot_bh"))
-        def drop(b: DataFrame) = b.join(hot,
-          b("band") === hot("hot_band") && b("bh") === hot("hot_bh"),
-          "left_anti")
-        (drop(exBand), drop(inBand))
-      }
-    val cand = exPruned.toDF("doc_ex", "band", "bh")
-      .join(inPruned.toDF("doc_in", "band", "bh"), Seq("band", "bh"))
+    // one side-tagged banded frame, so the cap counts each bucket over
+    // both sides; the two join sides are its tag-filtered halves
+    def banded(side: DataFrame, tag: Int) = bandedFrame(
+      eligibleSignatures(side, idCol, textCol, n, numHashes), bands,
+      numHashes / bands).withColumn("side", lit(tag))
+    val capped = capBuckets(
+      banded(existing, 0).unionByName(banded(incoming, 1)),
+      Seq("band", "bh"), maxBucket)
+    def half(tag: Int, doc: String) = capped.filter(col("side") === tag)
+      .select(col("doc").as(doc), col("band"), col("bh"))
+    half(0, "doc_ex").join(half(1, "doc_in"), Seq("band", "bh"))
       .select("doc_ex", "doc_in").distinct()
-    val exSets = shingleSets(existing, idCol, textCol, n)
-    val inSets = shingleSets(incoming, idCol, textCol, n)
-    val inter = size(array_intersect(col("shs_a"), col("shs_b")))
-    cand
-      .join(exSets.toDF("doc_ex", "shs_a"), Seq("doc_ex"))
-      .join(inSets.toDF("doc_in", "shs_b"), Seq("doc_in"))
+      .join(verificationSets(existing, idCol, textCol, n)
+        .toDF("doc_ex", "shs_a"), Seq("doc_ex"))
+      .join(verificationSets(incoming, idCol, textCol, n)
+        .toDF("doc_in", "shs_b"), Seq("doc_in"))
       .select(col("doc_ex"), col("doc_in"),
-        (inter.cast(DoubleType) /
-          (size(col("shs_a")) + size(col("shs_b")) - inter)).as("jaccard"))
+        setJaccard(col("shs_a"), col("shs_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -631,14 +605,11 @@ object Dedup {
       .filter(size(col("fps")) > 0)
     val sig = sets.select(col("doc"),
       minHashSignatureOfHashes(col("fps"), numHashes).as("sig"))
-    val cand = bandedCandidates(sig, bands, numHashes / bands, maxBucket)
-    val inter = size(array_intersect(col("fps_a"), col("fps_b")))
-    cand
+    bandedCandidates(sig, bands, numHashes / bands, maxBucket)
       .join(sets.toDF("doc_a", "fps_a"), Seq("doc_a"))
       .join(sets.toDF("doc_b", "fps_b"), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
-        (inter.cast(DoubleType) /
-          (size(col("fps_a")) + size(col("fps_b")) - inter)).as("resemblance"))
+        setJaccard(col("fps_a"), col("fps_b")).as("resemblance"))
       .filter(col("resemblance") >= threshold)
   }
 
@@ -696,10 +667,7 @@ object Dedup {
       tables: Int = 4, seed: Long = 42L): DataFrame = {
     val sigs = VectorOps.hyperplaneSignatures(emb, idCol, vecCol, dim,
       planes, tables, seed) // (id, table, bucket)
-    val cand = sigs.toDF("id_a", "table", "bucket")
-      .join(sigs.toDF("id_b", "table", "bucket"), Seq("table", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+    val cand = bucketPairs(sigs, Seq("table", "bucket"), maxBucket = 0)
     val a = emb.select(col(idCol).as("id_a"), col(vecCol).as("v_a"))
     val b = emb.select(col(idCol).as("id_b"), col(vecCol).as("v_b"))
     cand.join(a, Seq("id_a")).join(b, Seq("id_b"))

@@ -698,20 +698,17 @@ object Multimodal {
     * grow with the corpus — 16-bit bands give 65k values per band
     * (the r6 8-bit layout topped out at 1,024 (band, value) buckets,
     * which goes quadratic once n >> 1k) — and bucket POPULATION is
-    * frequency-capped: `maxBucket > 0` drops hot (band, value) buckets
-    * (flat/monochrome payloads that aHash collapses onto one value)
-    * before the self-join, silently by design; run
-    * [[hammingCapAudit]] on the same frame to observe what a cap
-    * drops. At billions of payloads the band join is the only shuffle
-    * and carries (id, band-value) pairs, not pixels. */
+    * frequency-capped by the text paths' one cap, [[Dedup.capBuckets]]:
+    * `maxBucket > 0` drops hot (band, value) buckets (flat/monochrome
+    * payloads that aHash collapses onto one value) before the
+    * self-join, silently by design; run [[hammingCapAudit]] on the same
+    * frame to observe what a cap drops. At billions of payloads the
+    * band join is the only shuffle and carries (id, band-value) pairs,
+    * not pixels. */
   def nearestByHamming(hashes: DataFrame, bandBits: Int = 8,
       numBands: Int = 4, maxBucket: Int = 0): DataFrame = {
-    val bands0 = bandedHashes(hashes, bandBits, numBands)
-    val bands =
-      if (maxBucket <= 0) bands0
-      else bands0.withColumn("_bf", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("band", "v")))
-        .filter(col("_bf") <= maxBucket).drop("_bf")
+    val bands = Dedup.capBuckets(bandedHashes(hashes, bandBits, numBands),
+      Seq("band", "v"), maxBucket)
     val cand = bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.v") === col("b.v") &&
           col("a.doc_id") =!= col("b.doc_id"))
@@ -752,20 +749,9 @@ object Multimodal {
     * caps drop silently so the join never stalls; pipelines run this
     * against the same hash frame and alert on recall loss). */
   def hammingCapAudit(hashes: DataFrame, bandBits: Int, numBands: Int,
-      maxBucket: Int): DataFrame = {
-    require(maxBucket > 0, "audit needs a positive cap")
-    bandedHashes(hashes, bandBits, numBands)
-      .groupBy("band", "v").agg(count(lit(1)).as("df"))
-      .select(
-        sum(when(col("df") > maxBucket, 1L).otherwise(0L))
-          .as("hot_buckets"),
-        sum(when(col("df") > maxBucket, col("df")).otherwise(0L))
-          .as("dropped_rows"),
-        max(col("df")).as("max_df"))
-      .select(coalesce(col("hot_buckets"), lit(0L)).as("hot_buckets"),
-        coalesce(col("dropped_rows"), lit(0L)).as("dropped_rows"),
-        coalesce(col("max_df"), lit(0L)).as("max_df"))
-  }
+      maxBucket: Int): DataFrame =
+    Dedup.capAuditCore(bandedHashes(hashes, bandBits, numBands),
+      Seq("band", "v"), maxBucket)
 
   case class AudioHash(doc_id: Long, n_samples: Int, phash: Long)
 

@@ -25,7 +25,27 @@ class PlanDumpSpec extends AnyFunSuite {
     assert(Plans.normalize(a) === Plans.normalize(b))
     assert(Plans.normalize(a).contains(
       "graft_p25_upsert/c<commit>/part-<file>.snappy.parquet, ... 15 entries]"))
-    val plain = "(2) Filter [codegen id : 1]\nInput [2]: [k#0L, v#1L]\n" +
+    // expression ids and Exchange plan ids come from JVM-wide counters:
+    // the same plan built after other work carries other numbers
+    def exchange(k: Int, v: Int, plan: Int) =
+      s"(3) Exchange\nInput [2]: [k#${k}L, v#$v]\n" +
+        s"Arguments: hashpartitioning(k#${k}L, 4), ENSURE_REQUIREMENTS, " +
+        s"[plan_id=$plan]"
+    assert(exchange(0, 1, 12) !== exchange(61, 7, 26712))
+    assert(Plans.normalize(exchange(0, 1, 12)) ===
+      Plans.normalize(exchange(61, 7, 26712)))
+    assert(Plans.normalize(exchange(61, 7, 26712)) ===
+      "(3) Exchange\nInput [2]: [k#<id>L, v#<id>]\n" +
+        "Arguments: hashpartitioning(k#<id>L, 4), ENSURE_REQUIREMENTS, " +
+        "[plan_id=<n>]")
+    def mapped(fn: String) = "(4) MapElements\nArguments: " +
+      s"graft.operators.Multimodal$$$$$$Lambda$fn, obj#7: scala.Tuple3"
+    assert(Plans.normalize(mapped("$5541/0x00007f94b9524578@597050fa")) ===
+      "(4) MapElements\nArguments: " +
+        "graft.operators.Multimodal$$$Lambda<fn>, obj#<id>: scala.Tuple3")
+    assert(Plans.normalize(mapped("$5465/0x00007f46b94f72a0@2f7432f3")) ===
+      Plans.normalize(mapped("$5541/0x00007f94b9524578@597050fa")))
+    val plain = "(2) Filter [codegen id : 1]\n" +
       "Location: InMemoryFileIndex [file:/data/sf0.01/orders.parquet]"
     assert(Plans.normalize(plain) === plain)
   }

@@ -2,8 +2,13 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,6 +31,32 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       r
     }
     Files.createTempDirectory(root, prefix)
+  }
+
+  /** The optimized plans of the queries `body` ran whose text contains
+    * `tag`. A marker query after `body` flushes the listener bus:
+    * listener events arrive in order, so once the marker is seen every
+    * earlier one is. */
+  protected def plansOf(tag: String)(body: => Unit): Seq[LogicalPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe.optimizedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add(qe.optimizedPlan)
+    }
+    val marker = s"plan-marker-${java.util.UUID.randomUUID}"
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.sql(s"SELECT '$marker'").collect()
+      val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(_.toString.contains(marker))) {
+        assert(System.nanoTime < deadline, "listener never saw the marker")
+        Thread.sleep(20)
+      }
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq.filter(_.toString.contains(tag))
   }
 
   override def afterAll(): Unit = {

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.catalyst.plans.logical.{Join, Window}
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
@@ -356,6 +358,56 @@ class DedupSpec extends SparkSpec {
       case (a, b) if b % 5 != 0 && a % 5 == 0 => (b, a)
     }
     assert(across === crossFromFull)
+  }
+
+  test("minHashLshPairsAcross counts its cap over both sides: a bucket " +
+    "of 3 existing + 3 incoming docs is dropped at 5, kept at 6") {
+    val hot = "one planted document text that both corpora carry"
+    val cold = "a separate near duplicate outside the planted bucket"
+    val existing = Seq((1L, hot), (2L, hot), (3L, hot), (10L, cold))
+      .toDF("doc_id", "text")
+    val incoming = Seq((101L, hot), (102L, hot), (103L, hot), (110L, cold))
+      .toDF("doc_id", "text")
+    def pairs(cap: Int) = Dedup.minHashLshPairsAcross(existing, incoming,
+        "doc_id", "text", maxBucket = cap)
+      .select($"doc_ex", $"doc_in").as[(Long, Long)].collect().toSet
+    val planted = for (e <- Set(1L, 2L, 3L); i <- Set(101L, 102L, 103L))
+      yield (e, i)
+    // each side alone holds 3 <= 5 docs per planted bucket; together 6
+    assert(pairs(5) === Set((10L, 110L)))
+    assert(pairs(6) === planted + ((10L, 110L)))
+    assert(pairs(0) === pairs(6))
+  }
+
+  test("capped winnow and contamination plans count the cap in one " +
+    "Window over the bucket key and plan no left anti join") {
+    // a Range-based corpus: its text literal tags the plans to inspect
+    // (a local relation would be folded away by the optimizer)
+    val corpus = spark.range(1, 41).select(col("id").as("doc_id"),
+      concat(lit("planshape boilerplate opening words then doc "),
+        (col("id") % 7).cast("string"), lit(" body "),
+        (col("id") % 5).cast("string")).as("text"))
+    val bench = Seq((900L, "planshape boilerplate opening words then doc 3"))
+      .toDF("doc_id", "text")
+    def check(keys: Seq[String])(run: => Long): Unit = {
+      val plans = plansOf("planshape boilerplate")(assert(run > 0L))
+      assert(plans.nonEmpty)
+      plans.foreach { p =>
+        assert(p.collect { case j: Join if j.joinType == LeftAnti => j }
+          .isEmpty, s"left anti join in\n$p")
+        val windows = p.collect { case w: Window => w }
+        assert(windows.map(_.canonicalized).distinct.size === 1,
+          s"expected one distinct Window in\n$p")
+        windows.foreach(w => assert(
+          w.partitionSpec.map(_.references.head.name) === keys))
+      }
+    }
+    check(Seq("band", "bh"))(Dedup.winnowOverlapPairs(corpus,
+      "doc_id", "text", k = 8, w = 6, threshold = 0.5,
+      maxBucket = 500, numHashes = 64, bands = 16).count())
+    check(Seq("sh"))(Dedup.contaminationPairs(corpus, bench,
+      "doc_id", "text", n = 3, minOverlap = 3,
+      maxBucket = 2000).count())
   }
 
   test("autoMaxBucket: small-corpus floor, ppm-proportional past it") {

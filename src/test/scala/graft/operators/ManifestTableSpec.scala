@@ -1,13 +1,9 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.catalyst.expressions.{In, InSet}
 import org.apache.spark.sql.catalyst.plans.LeftAnti
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 
@@ -1222,31 +1218,6 @@ class ManifestTableSpec extends SparkSpec {
     assert(ManifestTable.tags(spark, path).isEmpty) // invisible to refs
     ManifestTable.vacuum(spark, path, keepVersions = 1)
     assert(!staged.exists())
-  }
-
-  /** The optimized plans of the queries `body` ran against `path`. A
-    * marker query after `body` flushes the listener bus: listener events
-    * arrive in order, so once the marker is seen every earlier one is. */
-  private def plansOf(path: String)(body: => Unit): Seq[LogicalPlan] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        seen.add(qe.optimizedPlan)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
-        seen.add(qe.optimizedPlan)
-    }
-    val marker = s"plan-marker-${java.util.UUID.randomUUID}"
-    spark.listenerManager.register(listener)
-    try {
-      body
-      spark.sql(s"SELECT '$marker'").collect()
-      val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
-      while (!seen.asScala.exists(_.toString.contains(marker))) {
-        assert(System.nanoTime < deadline, "listener never saw the marker")
-        Thread.sleep(20)
-      }
-    } finally spark.listenerManager.unregister(listener)
-    seen.asScala.toSeq.filter(_.toString.contains(path))
   }
 
   test("key sets past the old literal cap rewrite through a left anti " +
