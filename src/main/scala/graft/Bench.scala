@@ -83,11 +83,9 @@ object Bench {
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] operator warmup skipped: ${e.getMessage}")
     }
-    // optional comma-separated subset filter for local iteration
+    // optional SPARK_GRAFT_ONLY subset for local iteration
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only.fold(SparkEntry.queries)(names =>
-      SparkEntry.queries.filter { case (k, _) => names(k) })
+    val selected = SparkEntry.selected(only)
     // a failed query must NOT bench as a (tiny) timing: record ok/failed
     // per query, list failures explicitly, and only sum successful runs.
     // Sorted order: Map iteration order is arbitrary, which silently
@@ -102,7 +100,7 @@ object Bench {
     // (r5/r6 A-B sweeps showed 1.5-2x single-gate swings with identical
     // code); the third run costs ~2 min and pins the steady-state floor
     // the baseline comparison is defined over.
-    val iters = sys.env.get("SPARK_GRAFT_ITERS").map(_.toInt).getOrElse(3)
+    val iters = SparkEntry.sweepIters(default = 3)
     val names = selected.toSeq.sortBy(_._1)
     val runs: Seq[Seq[(String, Double, Boolean)]] = (1 to iters).map { _ =>
       names.map { case (name, fn) =>

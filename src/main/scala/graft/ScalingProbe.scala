@@ -341,14 +341,9 @@ object ScalingProbe {
       val fn = SparkEntry.queries.getOrElse(gate, probeOnly(gate))
       val timesOpt = try Some(dirs.map { case (label, d) =>
         // min of 2 by default: one-off GC/codegen noise must not set an
-        // exponent. SPARK_GRAFT_PROBE_ITERS raises it for isolated
+        // exponent. SPARK_GRAFT_ITERS raises it for isolated
         // single-gate evidence runs (the min-of-4 floors discipline).
-        // tolerant parse with a floor of 1: a typo'd or zero value must
-        // not crash a multi-hour sweep on its first gate (bare toInt
-        // threw; 0 made (1 to 0).min throw)
-        val iters = sys.env.get("SPARK_GRAFT_PROBE_ITERS")
-          .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-          .filter(_ >= 1).getOrElse(2)
+        val iters = SparkEntry.sweepIters(default = 2)
         val t = (1 to iters).map { _ =>
           val t0 = System.nanoTime()
           fn(spark, d).count()

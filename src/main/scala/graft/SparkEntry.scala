@@ -27,6 +27,26 @@ object SparkEntry {
       WindowQueries.queries ++ JoinQueries.queries ++
       PipelineQueries.queries ++ AnalyticsQueries.queries
 
+  /** The gates a sweep main (Bench, Verify) runs: every gate, or with
+    * `only` (`SPARK_GRAFT_ONLY=a,b`) those whose name starts with a
+    * listed entry. No gate name is a proper prefix of another, so a
+    * full name selects exactly its gate and a short id (`p2`) a family. */
+  def selected(only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY"))
+      : Map[String, (SparkSession, String) => DataFrame] = {
+    val prefixes = only.map(_.split(",").map(_.trim).filter(_.nonEmpty))
+    queries.filter { case (name, _) =>
+      prefixes.forall(_.exists(name.startsWith)) }
+  }
+
+  /** Timed runs per gate of a sweep main: `SPARK_GRAFT_ITERS`, or
+    * `default` when it is unset, not a number or below 1 — a typo must
+    * not throw after a long warm-up, and 0 runs would record every gate
+    * as failed. */
+  def sweepIters(default: Int): Int =
+    sys.env.get("SPARK_GRAFT_ITERS")
+      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
+      .filter(_ >= 1).getOrElse(default)
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. A literal
     * `{OUT}` in the SQL is expanded by Verify to its output dir — used by

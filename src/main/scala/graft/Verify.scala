@@ -15,14 +15,10 @@ object Verify {
     // correctness surface is unchanged — only rebuild count drops
     SweepCache.enable()
     new java.io.File(outDir).mkdirs()
-    // local-iteration subset (mirrors Bench): SPARK_GRAFT_ONLY=f06,f07
-    // runs and records only matching gates; unset = full contract (the
-    // driver never sets it)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def keep(name: String): Boolean =
-      only.forall(_.exists(p => name == p || name.startsWith(p)))
-    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
+    // local-iteration subset (Bench's rule): SPARK_GRAFT_ONLY=f06,f07
+    // runs and records only matching gates; unset = full contract
+    val selected = SparkEntry.selected()
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -61,7 +57,7 @@ object Verify {
     val outAbs = Paths.get(outDir).toAbsolutePath.toString
     val auxAbs = Paths.get(auxDir).toAbsolutePath.toString
     val json = SparkEntry.oracleSql
-      .filter(kv => keep(kv._1))
+      .filter(kv => selected.contains(kv._1))
       .map { case (k, v) =>
         s"${q(k)}: ${q(v.replace("{OUT}/aux", auxAbs).replace("{OUT}", outAbs))}"
       }

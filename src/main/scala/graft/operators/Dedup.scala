@@ -267,15 +267,17 @@ object Dedup {
     capAuditCore(shingles, Seq("sh"), maxBucket)
 
   /** Audit of [[minHashLshPairs]]' band-bucket cap: what `maxBucket`
-    * drops from this corpus' (band, bandHash) buckets. */
+    * drops from this corpus' (band, bandHash) buckets. It bands the
+    * same [[eligibleSignatures]] the pairing bands, so docs too short
+    * to shingle (one shared sentinel signature, never paired) report no
+    * hot bucket. */
   def minHashBandCapAudit(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3, numHashes: Int = 64, bands: Int = 32,
       maxBucket: Int = 2000): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val sig = docs.select(col(idCol).as("doc"),
-      minHashSignature(lower(col(textCol)), n, numHashes).as("sig"))
-    capAuditCore(bandedFrame(sig, bands, numHashes / bands),
-      Seq("band", "bh"), maxBucket)
+    capAuditCore(bandedFrame(
+      eligibleSignatures(docs, idCol, textCol, n, numHashes),
+      bands, numHashes / bands), Seq("band", "bh"), maxBucket)
   }
 
   /** Exact n-gram Jaccard similarity for every pair sharing >= 1 shingle.

@@ -37,16 +37,18 @@ import org.apache.spark.sql.types.StructType
   * Atomicity contract: publish is `FileSystem.rename` of a fully-written
   * file within one directory — atomic on HDFS and POSIX. HDFS rename
   * also refuses an existing target, making concurrent commits safe
-  * there; raw-local rename(2) REPLACES the target, so [[commit]] adds a
-  * per-table JVM mutex that CLOSES the two-writer race for every writer
-  * in one process (the normal single-driver topology — and all of
-  * `local[*]`); losers surface as [[ConcurrentCommitException]] for
-  * [[retryOnConflict]]. Only separate PROCESSES racing on a raw local
-  * FS remain narrowed-not-closed (exact on HDFS) — single-writer
+  * there. The local FileSystem refuses an existing target FILE too
+  * (ManifestTableSpec pins it), but by a check before rename(2), which
+  * itself replaces: two writers can both pass the check. So [[commit]]
+  * adds a per-table JVM mutex that CLOSES the two-writer race for every
+  * writer in one process (the normal single-driver topology — and all
+  * of `local[*]`); losers surface as [[ConcurrentCommitException]] for
+  * [[retryOnConflict]]. Only separate PROCESSES racing on a local FS
+  * remain narrowed-not-closed (exact on HDFS) — single-writer
   * maintenance windows are exact everywhere, and readers are always
   * safe: a reader that catches a non-atomic local replace mid-read
   * detects it by the header's file count (the torn-manifest self-check
-  * in [[readSnapshot]]) and fails loudly. Scale shape: a
+  * in [[snapshot]]) and fails loudly. Scale shape: a
   * manifest is one line per file — a 100 TB table at healthy file
   * sizes is ~10⁵ lines, a driver-side read; the data plane never moves
   * through the manifest.
@@ -134,56 +136,82 @@ object ManifestTable {
     if (p.isAbsolute) p else new Path(base, file)
   }
 
-  /** One fully-parsed manifest: entry lines, the idempotence tag it
-    * committed under, and the snapshot's schema DDL (recorded since r15
-    * so an EMPTY snapshot — a delete that removed every row — still
-    * reads as a typed empty frame instead of bricking the table). */
+  /** One retained manifest, read and parsed once: its serialized entry
+    * lines (what a commit carries forward) and those lines parsed, the
+    * idempotence tag it committed under, the op that wrote it, its
+    * CHECK constraints and the schema DDL (recorded since r15 so an
+    * EMPTY snapshot — a delete that removed every row — still reads as
+    * a typed empty frame instead of bricking the table). */
   private final case class Snapshot(version: Long, lines: Seq[String],
-      txn: Option[String], schemaDdl: Option[String],
-      op: Option[String] = None,
-      constraints: Seq[(String, String)] = Nil)
+      txn: Option[String], schemaDdl: Option[String], op: Option[String],
+      constraints: Seq[(String, String)]) {
+    val entries: Seq[ManifestEntry] = lines.map(parseEntry)
+    def files: Seq[String] = entries.map(_.path)
+    /** Metadata row count: the sum of the files' `__rows` stats, None
+      * when the snapshot is empty or any file predates the stat. */
+    val rows: Option[Long] = {
+      val counts = entries.map(_.stats.get(RowsStat).map(_._1))
+      if (counts.nonEmpty && counts.forall(_.isDefined))
+        Some(counts.flatten.sum)
+      else None
+    }
+  }
 
   private val HeaderCount = """# graft manifest v\d+, (\d+) files""".r
+  private val HeaderField = """# (txn|schema|op|constraint) (.*)""".r
 
-  /** Parse `_manifest.<v>` with the torn-manifest self-check: the
-    * header records the file count at write, so a reader that opens a
-    * manifest a non-atomic local-FS writer replaced mid-read (rename(2)
-    * REPLACES the target — the documented local-FS corner) detects the
-    * truncation by count and fails loudly instead of silently serving a
-    * partial snapshot. Headerless manifests (hand-written/foreign) skip
-    * the check — there is nothing to validate against. */
-  private def readSnapshot(fs: FileSystem, p: Path, v: Long): Snapshot = {
-    val m = new Path(p, s"_manifest.$v")
-    val in = fs.open(m)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    val all = body.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-    val entries = all.filterNot(_.startsWith("#"))
+  /** THE snapshot resolver every read and write goes through: snapshot
+    * `version`, or the newest when None. Fails loudly when the table
+    * does not exist, and when the version was vacuumed or never
+    * committed (the reproducibility contract: a caller asking for a
+    * specific historical snapshot must never silently get another).
+    *
+    * The parse keeps the torn-manifest self-check: the header records
+    * the file count at write, so a reader that opens a manifest a
+    * non-atomic local-FS writer replaced mid-read (the local FS checks
+    * for the target before rename(2), which replaces — the documented
+    * local-FS corner) detects the truncation by count and fails loudly
+    * instead of silently serving a partial snapshot. Headerless
+    * manifests (hand-written/foreign) skip the check — there is
+    * nothing to validate against. */
+  private def snapshot(spark: SparkSession, path: String,
+      version: Option[Long]): Snapshot = {
+    val v = version.orElse(versions(spark, path).lastOption)
+    require(v.isDefined, s"manifest table $path does not exist")
+    val (fs, p) = fsOf(spark, path)
+    val m = new Path(p, s"_manifest.${v.get}")
+    val text =
+      try Some(readText(fs, m))
+      catch { case _: java.io.FileNotFoundException => None }
+    require(text.isDefined,
+      s"manifest table $path: version ${v.get} is not retained " +
+        s"(vacuumed or never committed); retained: " +
+        s"${versions(spark, path).mkString(", ")}")
+    val all = text.get.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
+    val (headers, lines) = all.partition(_.startsWith("#"))
     all.headOption match {
       case Some(HeaderCount(n)) =>
-        require(entries.size == n.toInt,
+        require(lines.size == n.toInt,
           s"manifest $m is torn/truncated: header declares $n files, " +
-            s"found ${entries.size} — a non-atomic writer replaced it " +
+            s"found ${lines.size} — a non-atomic writer replaced it " +
             "mid-read; retry the read or restore the manifest")
       case _ => // no header: nothing to validate against
     }
-    val txn = all.collectFirst {
-      case l if l.startsWith("# txn ") => l.stripPrefix("# txn ").trim
+    val fields = headers.collect { case HeaderField(k, x) => (k, x.trim) }
+      .groupMap(_._1)(_._2)
+    def field(k: String): Option[String] = fields.get(k).map(_.head)
+    val constraints = fields.getOrElse("constraint", Nil).map { body =>
+      val cut = body.indexOf(' ')
+      (body.substring(0, cut), body.substring(cut + 1).trim)
     }
-    val schema = all.collectFirst {
-      case l if l.startsWith("# schema ") => l.stripPrefix("# schema ").trim
-    }
-    val op = all.collectFirst {
-      case l if l.startsWith("# op ") => l.stripPrefix("# op ").trim
-    }
-    val constraints = all.collect {
-      case l if l.startsWith("# constraint ") =>
-        val body = l.stripPrefix("# constraint ").trim
-        val cut = body.indexOf(' ')
-        (body.substring(0, cut), body.substring(cut + 1).trim)
-    }
-    Snapshot(v, entries, txn, schema, op, constraints)
+    Snapshot(v.get, lines, field("txn"), field("schema"), field("op"),
+      constraints)
   }
+
+  /** The newest snapshot, None when no manifest exists — the one form
+    * for callers that accept a missing table. */
+  private def latest(spark: SparkSession, path: String): Option[Snapshot] =
+    versions(spark, path).lastOption.map(v => snapshot(spark, path, Some(v)))
 
   /** Retained manifest versions, ascending; Nil when the table does
     * not exist. The lower end moves up as [[vacuum]] reclaims. */
@@ -198,47 +226,12 @@ object ManifestTable {
     }.toSeq.sorted
   }
 
-  /** The newest snapshot; None when no manifest exists. */
-  private def currentSnapshot(spark: SparkSession,
-      path: String): Option[Snapshot] = {
-    val vs = versions(spark, path)
-    if (vs.isEmpty) None
-    else {
-      val (fs, p) = fsOf(spark, path)
-      Some(readSnapshot(fs, p, vs.max))
-    }
-  }
-
-  /** The snapshot at `version`, failing loudly when it was vacuumed or
-    * never committed (the reproducibility contract: a caller asking for
-    * a specific historical snapshot must never silently get another). */
-  private def snapshotAt(spark: SparkSession, path: String,
-      version: Long): Snapshot = {
-    val (fs, p) = fsOf(spark, path)
-    val m = new Path(p, s"_manifest.$version")
-    require(fs.exists(m),
-      s"manifest table $path: version $version is not retained " +
-        s"(vacuumed or never committed); retained: " +
-        s"${versions(spark, path).mkString(", ")}")
-    readSnapshot(fs, p, version)
-  }
-
-  /** (version, raw manifest lines) of the current snapshot; (0, Nil)
-    * when no manifest exists. Lines are the serialized [[ManifestEntry]]
-    * form — [[currentManifest]]/[[currentEntries]] are the parsed views. */
-  private def currentLines(spark: SparkSession,
-      path: String): (Long, Seq[String]) =
-    currentSnapshot(spark, path)
-      .map(s => (s.version, s.lines)).getOrElse((0L, Nil))
-
-  /** The current snapshot of an existing table — the ONE manifest read
-    * a write plans against: its version, lines, txn tag (replay check
-    * and carry) and constraints. [[commitLocked]]'s re-read is the
-    * separate OCC check. */
-  private def existing(spark: SparkSession, path: String): Snapshot = {
-    val s = currentSnapshot(spark, path)
-    require(s.isDefined, s"manifest table $path does not exist")
-    s.get
+  /** A small UTF-8 file's whole text: a manifest, a tag, a consumer
+    * state. */
+  private def readText(fs: FileSystem, f: Path): String = {
+    val in = fs.open(f)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
   }
 
   /** The parquet files behind manifest paths `rels`, resolved against
@@ -252,28 +245,15 @@ object ManifestTable {
 
   /** (version, relative data-file paths) of the current snapshot;
     * (0, Nil) when no manifest exists. */
-  def currentManifest(spark: SparkSession, path: String): (Long, Seq[String]) = {
-    val (v, lines) = currentLines(spark, path)
-    (v, lines.map(parseEntry(_).path))
-  }
+  def currentManifest(spark: SparkSession, path: String): (Long, Seq[String]) =
+    latest(spark, path).fold((0L, Seq.empty[String]))(s => (s.version, s.files))
 
   /** (version, parsed entries with per-file stats) of the current
     * snapshot — the input to manifest-side pruning ([[readRange]]). */
   def currentEntries(spark: SparkSession,
-      path: String): (Long, Seq[ManifestEntry]) = {
-    val (v, lines) = currentLines(spark, path)
-    (v, lines.map(parseEntry))
-  }
-
-  /** Entries of the requested snapshot (current when `version` is
-    * None) — the pruned reads are version-aware like [[read]]. */
-  private def entriesOf(spark: SparkSession, path: String,
-      version: Option[Long]): (Long, Seq[ManifestEntry]) =
-    version match {
-      case Some(ver) =>
-        (ver, snapshotAt(spark, path, ver).lines.map(parseEntry))
-      case None => currentEntries(spark, path)
-    }
+      path: String): (Long, Seq[ManifestEntry]) =
+    latest(spark, path)
+      .fold((0L, Seq.empty[ManifestEntry]))(s => (s.version, s.entries))
 
   /** Metadata-only row count: every write that records stats also
     * records the file's row count (`__rows`), so counting a
@@ -283,12 +263,8 @@ object ManifestTable {
     * the stat or the table never carried stats. */
   def countRows(spark: SparkSession, path: String,
       version: Option[Long] = None): Long = {
-    val (v, entries) = entriesOf(spark, path, version)
-    require(v > 0, s"manifest table $path does not exist")
-    val counts = entries.map(_.stats.get(RowsStat).map(_._1))
-    if (counts.nonEmpty && counts.forall(_.isDefined))
-      counts.flatten.sum
-    else read(spark, path, version = version).count()
+    val snap = snapshot(spark, path, version)
+    snap.rows.getOrElse(scan(spark, path, snap, mergeSchema = false).count())
   }
 
   /** Reserved manifest-stat key carrying the file's row count. */
@@ -321,26 +297,27 @@ object ManifestTable {
     * tables — or compact once and the schema is uniform again. */
   def read(spark: SparkSession, path: String,
       mergeSchema: Boolean = false,
-      version: Option[Long] = None): DataFrame = {
-    val snap = version match {
-      case Some(ver) => snapshotAt(spark, path, ver)
-      case None =>
-        val s = currentSnapshot(spark, path)
-        require(s.isDefined,
-          s"manifest table $path does not exist (no _manifest.N)")
-        s.get
-    }
-    val files = snap.lines.map(parseEntry(_).path)
-    if (files.isEmpty) {
+      version: Option[Long] = None): DataFrame =
+    scan(spark, path, snapshot(spark, path, version), mergeSchema)
+
+  /** Every file of `snap` as one DataFrame ([[read]]'s body). */
+  private def scan(spark: SparkSession, path: String, snap: Snapshot,
+      mergeSchema: Boolean): DataFrame =
+    if (snap.lines.nonEmpty) readFiles(spark, path, snap.files, mergeSchema)
+    else {
       require(snap.schemaDdl.isDefined,
         s"manifest table $path: v${snap.version} lists no files and " +
           "records no schema (pre-r15 manifest) — cannot type an empty read")
-      return spark.createDataFrame(
-        java.util.Collections.emptyList[Row](),
+      spark.createDataFrame(java.util.Collections.emptyList[Row](),
         StructType.fromDDL(snap.schemaDdl.get))
     }
-    readFiles(spark, path, files, mergeSchema)
-  }
+
+  /** No rows, typed as [[read]] types `snap` — what a read that selects
+    * no file returns. The optimizer folds the zero limit into an empty
+    * relation, so no data file is scanned. */
+  private def noRows(spark: SparkSession, path: String,
+      snap: Snapshot): DataFrame =
+    scan(spark, path, snap, mergeSchema = false).limit(0)
 
   /** Create the table: write `df` as the first snapshot. Refuses if a
     * manifest already exists (use [[append]]/[[compact]] to evolve).
@@ -350,8 +327,9 @@ object ManifestTable {
       files: Int, sortCols: Seq[String] = Nil,
       statsCols: Seq[String] = Nil, txn: Option[String] = None,
       zOrder: Boolean = false): Long = {
-    val (v0, _) = currentLines(spark, path)
-    require(v0 == 0L, s"manifest table $path already exists (v$v0)")
+    val prior = latest(spark, path)
+    require(prior.isEmpty,
+      s"manifest table $path already exists (v${prior.get.version})")
     val added = writeDataFiles(spark, path, df, files, sortCols, statsCols,
       zOrder)
     commit(spark, path, added, expectedCurrent = 0L, txn = txn,
@@ -372,7 +350,7 @@ object ManifestTable {
   def append(spark: SparkSession, path: String, df: DataFrame,
       files: Int, statsCols: Seq[String] = Nil,
       txn: Option[String] = None, sortCols: Seq[String] = Nil): Long = {
-    val snap = existing(spark, path)
+    val snap = snapshot(spark, path, None)
     if (txn.isDefined && snap.txn == txn) return snap.version
     enforceConstraints(snap.constraints, path, df, "append")
     // sortCols: range-cluster the appended files on the table's key
@@ -396,7 +374,7 @@ object ManifestTable {
     * rows; the exactly-once contract of
     * [[graft.streaming.StreamingEtl.writeBatchManifest]]). */
   def lastTxn(spark: SparkSession, path: String): Option[String] =
-    currentSnapshot(spark, path).flatMap(_.txn)
+    latest(spark, path).flatMap(_.txn)
 
   /** Rewrite the current snapshot as `files` larger files (range-
     * clustered on `sortCols` when given) and commit the replacement
@@ -406,14 +384,14 @@ object ManifestTable {
   def compact(spark: SparkSession, path: String, files: Int,
       sortCols: Seq[String] = Nil, statsCols: Seq[String] = Nil,
       zOrder: Boolean = false): Long = {
-    val snap = existing(spark, path)
+    val snap = snapshot(spark, path, None)
     // mergeSchema ALWAYS on the rewrite read: a schema-evolved table
     // whose footer sample missed the new column would otherwise be
     // rewritten WITHOUT it — silent data loss. Compaction reads every
     // file anyway; the per-footer planning cost is already paid.
-    val src = read(spark, path, mergeSchema = true)
+    val src = scan(spark, path, snap, mergeSchema = true)
     val rewritten = writeDataFiles(spark, path, src, files,
-      sortCols, inheritStats(statsCols, snap.lines), zOrder)
+      sortCols, inheritStats(statsCols, snap), zOrder)
     // carry the txn tag forward (see lastTxn): maintenance must not
     // erase a streaming writer's idempotence marker
     commit(spark, path, rewritten, expectedCurrent = snap.version,
@@ -426,9 +404,9 @@ object ManifestTable {
     * must not silently degrade every future pruned read to
     * conservative full-list scans. */
   private def inheritStats(statsCols: Seq[String],
-      lines: Seq[String]): Seq[String] =
+      snap: Snapshot): Seq[String] =
     if (statsCols.nonEmpty) statsCols
-    else lines.flatMap(parseEntry(_).stats.keys)
+    else snap.entries.flatMap(_.stats.keys)
       .filterNot(_ == RowsStat).distinct.sorted
 
   /** INCREMENTAL compaction: fold only the files smaller than
@@ -449,20 +427,20 @@ object ManifestTable {
       files: Int = 1, sortCols: Seq[String] = Nil,
       statsCols: Seq[String] = Nil): Long = {
     require(minBytes > 0, "compactSmall: minBytes must be positive")
-    val snap = existing(spark, path)
+    val snap = snapshot(spark, path, None)
     val (fs, _) = fsOf(spark, path)
     val base = new Path(path)
-    val (small, big) = snap.lines.partition { l =>
-      fs.getFileStatus(resolveFile(base, parseEntry(l).path))
+    val (small, big) = snap.lines.zip(snap.entries).partition {
+      case (_, e) => fs.getFileStatus(resolveFile(base, e.path))
         .getLen < minBytes
     }
     if (small.size <= 1) return snap.version // already optimal: no commit
-    val df = readFiles(spark, path, small.map(parseEntry(_).path),
-      mergeSchema = true)
+    val df = readFiles(spark, path, small.map(_._2.path), mergeSchema = true)
     val rewritten = writeDataFiles(spark, path, df, files, sortCols,
-      inheritStats(statsCols, snap.lines))
-    commit(spark, path, big ++ rewritten, expectedCurrent = snap.version,
-      txn = snap.txn, schemaDdl = Some(df.schema.toDDL), op = "compact-small")
+      inheritStats(statsCols, snap))
+    commit(spark, path, big.map(_._1) ++ rewritten,
+      expectedCurrent = snap.version, txn = snap.txn,
+      schemaDdl = Some(df.schema.toDDL), op = "compact-small")
   }
 
   /** Two-predicate box read through manifest-side pruning: keep only
@@ -478,15 +456,24 @@ object ManifestTable {
       c2: String, lo2: Long, hi2: Long,
       version: Option[Long] = None): DataFrame = {
     require(lo1 <= hi1 && lo2 <= hi2, "readBox: lo > hi")
-    val (v, entries) = entriesOf(spark, path, version)
-    require(v > 0, s"manifest table $path does not exist")
-    val keep = entries.filter(e =>
-      KeyRange(lo1, hi1).touches(e, c1) && KeyRange(lo2, hi2).touches(e, c2))
-    if (keep.isEmpty)
-      return read(spark, path, version = version).filter(lit(false))
-    readFiles(spark, path, keep.map(_.path), mergeSchema = false)
-      .filter(col(c1).cast("long").between(lo1, hi1) &&
-        col(c2).cast("long").between(lo2, hi2))
+    readPruned(spark, path, version,
+      Seq(c1 -> KeyRange(lo1, hi1), c2 -> KeyRange(lo2, hi2)))
+  }
+
+  /** THE pruned read behind [[readRange]] and [[readBox]]: keep the
+    * files of the snapshot whose envelopes intersect every (column,
+    * range) pair (a missing stat keeps the file — conservative per
+    * axis) and apply the exact predicates to just those; no kept file
+    * reads as [[noRows]]. */
+  private def readPruned(spark: SparkSession, path: String,
+      version: Option[Long], ranges: Seq[(String, KeyRange)]): DataFrame = {
+    val snap = snapshot(spark, path, version)
+    val keep = snap.entries.filter(e =>
+      ranges.forall { case (c, r) => r.touches(e, c) })
+    if (keep.isEmpty) noRows(spark, path, snap)
+    else readFiles(spark, path, keep.map(_.path), mergeSchema = false)
+      .filter(ranges.map { case (c, r) =>
+        col(c).cast("long").between(r.lo, r.hi) }.reduce(_ && _))
   }
 
   /** What a copy-on-write rewrite removes, on a long-cast key column:
@@ -553,12 +540,12 @@ object ManifestTable {
       c: String, touch: Touch)
       : (Seq[String], Seq[String], Option[DataFrame]) = {
     val (touched, untouched) =
-      snap.lines.partition(l => touch.touches(parseEntry(l), c))
+      snap.lines.zip(snap.entries).partition(le => touch.touches(le._2, c))
     val cand =
       if (touched.isEmpty) None
-      else Some(readFiles(spark, path, touched.map(parseEntry(_).path),
+      else Some(readFiles(spark, path, touched.map(_._2.path),
         mergeSchema = true))
-    (touched, untouched, cand)
+    (touched.map(_._1), untouched.map(_._1), cand)
   }
 
   /** The ONE copy-on-write step of every rewriting write: [[classify]]
@@ -585,7 +572,7 @@ object ManifestTable {
     }
     val rewritten = writeDataFiles(spark, path, rewriteDf,
       files = math.max(files, touched.size), Nil,
-      inheritStats(statsCols, snap.lines))
+      inheritStats(statsCols, snap))
     commit(spark, path, untouched ++ rewritten,
       expectedCurrent = snap.version, txn = txn.orElse(snap.txn),
       schemaDdl = Some(rewriteDf.schema.toDDL), op = op)
@@ -609,7 +596,7 @@ object ManifestTable {
   def deleteRange(spark: SparkSession, path: String, c: String,
       lo: Long, hi: Long, statsCols: Seq[String] = Nil): Long = {
     require(lo <= hi, s"deleteRange: lo $lo > hi $hi")
-    rewrite(spark, path, existing(spark, path), c, KeyRange(lo, hi),
+    rewrite(spark, path, snapshot(spark, path, None), c, KeyRange(lo, hi),
       files = 1, statsCols, txn = None, "delete-range")(_ => None)
   }
 
@@ -629,7 +616,7 @@ object ManifestTable {
   def deleteIds(spark: SparkSession, path: String, c: String,
       ids: Seq[Long], statsCols: Seq[String] = Nil): Long = {
     require(ids.nonEmpty, "deleteIds: empty id set")
-    val snap = existing(spark, path)
+    val snap = snapshot(spark, path, None)
     rewrite(spark, path, snap, c,
       KeySet.collected(spark, ids.distinct.sorted.toArray),
       files = 1, statsCols, txn = None, "delete-ids")(_ => None)
@@ -662,7 +649,7 @@ object ManifestTable {
       updates: DataFrame, files: Int, statsCols: Seq[String] = Nil,
       txn: Option[String] = None,
       maxCollectedKeys: Long = 100000L): Long = {
-    val snap = existing(spark, path)
+    val snap = snapshot(spark, path, None)
     if (txn.isDefined && snap.txn == txn) return snap.version
     enforceConstraints(snap.constraints, path, updates, "upsert")
     val keys = keyProfile(updates, col(c).cast("long"), maxCollectedKeys,
@@ -705,7 +692,7 @@ object ManifestTable {
     if (whenMatched == "replace" && whenNotMatched == "insert")
       return upsert(spark, path, c, source, files, statsCols, txn,
         maxCollectedKeys)
-    val snap = existing(spark, path)
+    val snap = snapshot(spark, path, None)
     if (txn.isDefined && snap.txn == txn) return snap.version
     val keyCol = col(c).cast("long")
     val keys = keyProfile(source, keyCol, maxCollectedKeys,
@@ -727,11 +714,12 @@ object ManifestTable {
       // deleted here anyway.
       val ins = notMatched(classify(spark, path, snap, c, keys)._3)
       val added = writeDataFiles(spark, path, ins, files, Nil,
-        inheritStats(statsCols, snap.lines))
+        inheritStats(statsCols, snap))
+      val addedFiles = added.map(parseEntry)
       val (fs, _) = fsOf(spark, path)
       val base = new Path(path)
-      def dropStaged(): Unit = added.headOption
-        .map(l => parseEntry(l).path.split('/').head)
+      def dropStaged(): Unit = addedFiles.headOption
+        .map(_.path.split('/').head)
         .foreach(sub => fs.delete(new Path(base, sub), true))
       // best-effort cleanup that must NOT mask the refusal it follows:
       // a failing filesystem delete is recorded as suppressed, the
@@ -740,7 +728,7 @@ object ManifestTable {
         try dropStaged()
         catch { case scala.util.control.NonFatal(e) =>
           cause.addSuppressed(e) }
-      if (writtenRows(spark, path, added) == 0L) {
+      if (writtenRows(spark, path, addedFiles) == 0L) {
         dropStaged() // no new keys: metadata no-op, same version back
         return snap.version
       }
@@ -748,7 +736,7 @@ object ManifestTable {
       // the anti-join on the source); a violation drops the staged
       // files and refuses before anything commits
       try enforceConstraints(snap.constraints, path,
-        readFiles(spark, path, added.map(parseEntry(_).path),
+        readFiles(spark, path, addedFiles.map(_.path),
           mergeSchema = false), "merge")
       catch { case e: Throwable => dropStagedQuietly(e); throw e }
       commit(spark, path, snap.lines ++ added,
@@ -783,7 +771,7 @@ object ManifestTable {
       lo: Long, hi: Long, replacement: DataFrame, files: Int,
       statsCols: Seq[String] = Nil, txn: Option[String] = None): Long = {
     require(lo <= hi, s"replaceRange: lo $lo > hi $hi")
-    val snap = existing(spark, path)
+    val snap = snapshot(spark, path, None)
     if (txn.isDefined && snap.txn == txn) return snap.version
     enforceConstraints(snap.constraints, path, replacement, "replaceRange")
     rewrite(spark, path, snap, c, KeyRange(lo, hi), files, statsCols, txn,
@@ -812,21 +800,26 @@ object ManifestTable {
       ignoreRewrites: Boolean = false): DataFrame = {
     require(fromVersion <= toVersion,
       s"readChanges: from $fromVersion > to $toVersion")
-    val from = snapshotAt(spark, path, fromVersion)
-    val to = snapshotAt(spark, path, toVersion)
-    val fromFiles = from.lines.map(parseEntry(_).path).toSet
-    val toFiles = to.lines.map(parseEntry(_).path)
-    val removed = fromFiles -- toFiles.toSet
+    val (removed, added, to) = fileDelta(spark, path, fromVersion, toVersion)
     require(ignoreRewrites || removed.isEmpty,
       s"manifest table $path: v$fromVersion..v$toVersion is not " +
         s"append-only (${removed.size} file(s) rewritten/removed, e.g. " +
         s"${removed.head}) — added files would double-count rewritten " +
         "rows; re-read the snapshot, diffSnapshots, or pass " +
         "ignoreRewrites = true to accept duplicates")
-    val added = toFiles.filterNot(fromFiles)
-    if (added.isEmpty)
-      return read(spark, path, version = Some(toVersion)).limit(0)
-    readFiles(spark, path, added, mergeSchema = true)
+    if (added.isEmpty) noRows(spark, path, to)
+    else readFiles(spark, path, added, mergeSchema = true)
+  }
+
+  /** The file delta of two retained snapshots, in manifest order: the
+    * files `fromVersion` lists that `toVersion` does not (removed), the
+    * reverse (added), and the `toVersion` snapshot — the one input of
+    * [[readChanges]] and [[diffSnapshots]]. */
+  private def fileDelta(spark: SparkSession, path: String, fromVersion: Long,
+      toVersion: Long): (Seq[String], Seq[String], Snapshot) = {
+    val from = snapshot(spark, path, Some(fromVersion)).files
+    val to = snapshot(spark, path, Some(toVersion))
+    (from.filterNot(to.files.toSet), to.files.filterNot(from.toSet), to)
   }
 
   /** Incremental-consumer checkpoint: run `process` over the delta
@@ -845,26 +838,18 @@ object ManifestTable {
   def processChanges(spark: SparkSession, path: String,
       stateFile: String)(process: DataFrame => Unit): Long = {
     val (fs, sp) = fsOf(spark, stateFile)
-    val from: Long =
-      if (!fs.exists(sp)) 0L
-      else {
-        val in = fs.open(sp)
-        val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        s.trim.toLong
-      }
-    val (cur, _) = currentManifest(spark, path)
-    require(cur > 0, s"manifest table $path does not exist")
+    val from = if (fs.exists(sp)) readText(fs, sp).trim.toLong else 0L
+    val cur = snapshot(spark, path, None).version
     if (cur == from) return from // nothing new — no read, no state churn
     val delta =
-      if (from == 0L) read(spark, path)
+      if (from == 0L) read(spark, path, version = Some(cur))
       else readChanges(spark, path, from, cur)
     process(delta)
     val staged = new Path(sp.getParent,
-      s".${sp.getName}.staged.${java.util.UUID.randomUUID.toString.take(8)}")
+      s".${sp.getName}.staged.${stageId()}")
     val out = fs.create(staged, false)
     try out.write(s"$cur\n".getBytes("UTF-8")) finally out.close()
-    fs.delete(sp, false) // raw-local rename refuses an existing target
+    fs.delete(sp, false) // rename refuses an existing target (local FS too)
     require(fs.rename(staged, sp),
       s"could not record consumer state at $stateFile")
     cur
@@ -892,20 +877,14 @@ object ManifestTable {
       fromVersion: Long, toVersion: Long): DataFrame = {
     require(fromVersion <= toVersion,
       s"diffSnapshots: from $fromVersion > to $toVersion")
-    val from = snapshotAt(spark, path, fromVersion)
-    val to = snapshotAt(spark, path, toVersion)
-    val fromFiles = from.lines.map(parseEntry(_).path)
-    val toFiles = to.lines.map(parseEntry(_).path)
-    val removed = fromFiles.filterNot(toFiles.toSet)
-    val added = toFiles.filterNot(fromFiles.toSet)
+    val (removed, added, to) = fileDelta(spark, path, fromVersion, toVersion)
     def slice(fs: Seq[String], tag: String): DataFrame =
       readFiles(spark, path, fs, mergeSchema = true)
         .withColumn("_change", lit(tag))
     val tagged = (removed, added) match {
       case (Nil, Nil) =>
         // identical file lists (e.g. a no-op commit): typed empty feed
-        return read(spark, path, version = Some(toVersion)).limit(0)
-          .withColumn("_change", lit(""))
+        return noRows(spark, path, to).withColumn("_change", lit(""))
       case (Nil, a) => slice(a, "insert")
       case (r, Nil) => slice(r, "delete")
       case (r, a) => slice(a, "insert") // unionByName aligns evolved
@@ -932,8 +911,8 @@ object ManifestTable {
     * restoring a file list. */
   def rollback(spark: SparkSession, path: String,
       toVersion: Long): Long = {
-    val target = snapshotAt(spark, path, toVersion)
-    val (cur, _) = currentLines(spark, path)
+    val target = snapshot(spark, path, Some(toVersion))
+    val cur = snapshot(spark, path, None).version
     require(toVersion <= cur,
       s"rollback: v$toVersion is ahead of current v$cur")
     commit(spark, path, target.lines, expectedCurrent = cur,
@@ -952,9 +931,7 @@ object ManifestTable {
     * drift from the files they describe. */
   def filesDf(spark: SparkSession, path: String,
       version: Option[Long] = None): DataFrame = {
-    val (v, entries) = entriesOf(spark, path, version)
-    require(v > 0, s"manifest table $path does not exist")
-    val rows = entries.flatMap { e =>
+    val rows = snapshot(spark, path, version).entries.flatMap { e =>
       val nRows: java.lang.Long =
         e.stats.get(RowsStat).map(s => java.lang.Long.valueOf(s._1)).orNull
       val dataStats = e.stats.view.filterKeys(_ != RowsStat).toSeq
@@ -977,17 +954,11 @@ object ManifestTable {
     * file predates `__rows`), txn tag, and the tag names pinning it.
     * Driver-side (a read per retained manifest, no data I/O). */
   def history(spark: SparkSession, path: String): DataFrame = {
-    val (fs, p) = fsOf(spark, path)
     val byVersion = tags(spark, path).toSeq.groupBy(_._2)
     val rows = versions(spark, path).map { v =>
-      val snap = readSnapshot(fs, p, v)
-      val entries = snap.lines.map(parseEntry)
-      val counts = entries.map(_.stats.get(RowsStat).map(_._1))
-      val nRows: java.lang.Long =
-        if (counts.nonEmpty && counts.forall(_.isDefined))
-          java.lang.Long.valueOf(counts.flatten.sum)
-        else null
-      Row(v, snap.op.orNull, entries.size.toLong, nRows, snap.txn.orNull,
+      val snap = snapshot(spark, path, Some(v))
+      Row(v, snap.op.orNull, snap.lines.size.toLong,
+        snap.rows.map(java.lang.Long.valueOf).orNull, snap.txn.orNull,
         byVersion.getOrElse(v, Nil).map(_._1).sorted)
     }
     spark.createDataFrame(
@@ -1017,14 +988,8 @@ object ManifestTable {
   def shallowClone(spark: SparkSession, src: String, dst: String,
       version: Option[Long] = None, pinSource: Boolean = true): Long = {
     val (sfs, sp) = fsOf(spark, src)
-    val snap = version match {
-      case Some(ver) => snapshotAt(spark, src, ver)
-      case None =>
-        val s = currentSnapshot(spark, src)
-        require(s.isDefined, s"manifest table $src does not exist")
-        s.get
-    }
-    require(currentLines(spark, dst)._1 == 0L,
+    val snap = snapshot(spark, src, version)
+    require(latest(spark, dst).isEmpty,
       s"shallowClone: $dst is already a manifest table")
     val qualified = sfs.makeQualified(sp)
     val absLines = snap.lines.map { l =>
@@ -1065,10 +1030,10 @@ object ManifestTable {
       s"constraint name '$name' must match $TagPattern")
     require(sqlExpr.nonEmpty && !sqlExpr.contains('\n'),
       "constraint expression must be non-empty and single-line")
-    val snap = existing(spark, path)
+    val snap = snapshot(spark, path, None)
     require(!snap.constraints.exists(_._1 == name),
       s"constraint '$name' already exists on $path")
-    val bad = read(spark, path, mergeSchema = true)
+    val bad = scan(spark, path, snap, mergeSchema = true)
       .filter(!org.apache.spark.sql.functions.coalesce(
         org.apache.spark.sql.functions.expr(sqlExpr).cast("boolean"),
         lit(true))).count()
@@ -1083,7 +1048,7 @@ object ManifestTable {
   /** Drop a CHECK constraint; later writes stop validating it. */
   def dropConstraint(spark: SparkSession, path: String,
       name: String): Long = {
-    val snap = existing(spark, path)
+    val snap = snapshot(spark, path, None)
     require(snap.constraints.exists(_._1 == name),
       s"manifest table $path has no constraint '$name'")
     commit(spark, path, snap.lines, expectedCurrent = snap.version,
@@ -1093,7 +1058,7 @@ object ManifestTable {
 
   /** The table's CHECK constraints, name -> SQL expression. */
   def constraints(spark: SparkSession, path: String): Map[String, String] =
-    currentSnapshot(spark, path).map(_.constraints.toMap)
+    latest(spark, path).map(_.constraints.toMap)
       .getOrElse(Map.empty)
 
   /** Refuse the write when any incoming row violates one of `cs`, the
@@ -1143,25 +1108,14 @@ object ManifestTable {
       version: Option[Long] = None): Long = {
     require(name.matches(TagPattern),
       s"tag name '$name' must match $TagPattern")
+    val v = snapshot(spark, path, version).version
     val (fs, p) = fsOf(spark, path)
-    val v = version.getOrElse {
-      val (cur, _) = currentManifest(spark, path)
-      require(cur > 0, s"manifest table $path does not exist")
-      cur
-    }
-    require(fs.exists(new Path(p, s"_manifest.$v")),
-      s"manifest table $path: cannot tag version $v — not retained " +
-        s"(vacuumed or never committed); retained: " +
-        s"${versions(spark, path).mkString(", ")}")
     val t = new Path(p, s"_tag.$name")
     require(!fs.exists(t),
       s"tag '$name' already exists on $path — dropTag it first " +
         "(tags never silently move)")
-    val staged = new Path(p,
-      s".tag.staged.${java.util.UUID.randomUUID.toString.take(12)}")
-    val out = fs.create(staged, false)
-    try out.write(s"$v\n".getBytes("UTF-8")) finally out.close()
-    require(fs.rename(staged, t), s"could not publish tag $t")
+    publish(fs, new Path(p, s".tag.staged.${stageId()}"), t, s"$v\n",
+      s"could not publish tag $t")
     v
   }
 
@@ -1171,11 +1125,7 @@ object ManifestTable {
     if (!fs.exists(p)) return Map.empty
     fs.listStatus(p).iterator.flatMap { st =>
       st.getPath.getName match {
-        case TagName(n) =>
-          val in = fs.open(st.getPath)
-          val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-          Some(n -> s.trim.toLong)
+        case TagName(n) => Some(n -> readText(fs, st.getPath).trim.toLong)
         case _ => None
       }
     }.toMap
@@ -1214,16 +1164,7 @@ object ManifestTable {
   def readRange(spark: SparkSession, path: String, c: String,
       lo: Long, hi: Long, version: Option[Long] = None): DataFrame = {
     require(lo <= hi, s"readRange: lo $lo > hi $hi")
-    val (v, entries) = entriesOf(spark, path, version)
-    require(v > 0, s"manifest table $path does not exist")
-    val keep = entries.filter(KeyRange(lo, hi).touches(_, c))
-    if (keep.isEmpty) {
-      // empty by stats: derive the (empty) frame with the same schema
-      // from one file rather than inventing a schema
-      return read(spark, path, version = version).filter(lit(false))
-    }
-    readFiles(spark, path, keep.map(_.path), mergeSchema = false)
-      .filter(col(c).cast("long").between(lo, hi))
+    readPruned(spark, path, version, Seq(c -> KeyRange(lo, hi)))
   }
 
   /** Delete data files referenced by NONE of the newest `keepVersions`
@@ -1239,8 +1180,7 @@ object ManifestTable {
       keepVersions: Int = 2): Seq[String] = {
     require(keepVersions >= 1, "keepVersions must be >= 1")
     val (fs, p) = fsOf(spark, path)
-    val (v, _) = currentManifest(spark, path)
-    require(v > 0, s"manifest table $path does not exist")
+    val v = snapshot(spark, path, None).version
     // keep only versions that still EXIST: an earlier vacuum with a
     // smaller keepVersions may already have reclaimed _manifest.(v-1) —
     // keep-what-exists, never throw on the gap. TAGGED versions are
@@ -1249,9 +1189,8 @@ object ManifestTable {
       ((0 until keepVersions).map(v - _) ++ tags(spark, path).values)
         .distinct
         .filter(kv => kv > 0 && fs.exists(new Path(p, s"_manifest.$kv")))
-    val live: Set[String] = keepManifests.flatMap { kv =>
-      readSnapshot(fs, p, kv).lines.map(parseEntry(_).path)
-    }.toSet
+    val live: Set[String] =
+      keepManifests.flatMap(kv => snapshot(spark, path, Some(kv)).files).toSet
     val deleted = scala.collection.mutable.ArrayBuffer.empty[String]
     fs.listStatus(p).foreach { st =>
       val name = st.getPath.getName
@@ -1377,11 +1316,10 @@ object ManifestTable {
     * stat when the write recorded stats, else a driver-side footer read
     * per file — never a data scan. */
   private def writtenRows(spark: SparkSession, path: String,
-      lines: Seq[String]): Long = {
+      entries: Seq[ManifestEntry]): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
     val base = new Path(path)
-    lines.map { l =>
-      val e = parseEntry(l)
+    entries.map { e =>
       e.stats.get(RowsStat).map(_._1).getOrElse {
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
@@ -1498,14 +1436,15 @@ object ManifestTable {
 
   /** Per-table commit mutex (qualified path -> lock). The OCC
     * check-then-rename in [[commit]] is safe cross-process on HDFS
-    * (rename refuses an existing target) but raw-local rename(2)
-    * REPLACES the target — two same-version committers in one process
-    * could silently lose an update. Serializing the critical section
-    * per table CLOSES that race for every writer in this JVM — which
+    * (rename refuses an existing target atomically) but the local FS
+    * refuses by a check before rename(2), which replaces — two
+    * same-version committers could both pass it and silently lose an
+    * update. Serializing the critical section per table CLOSES that
+    * race for every writer in this JVM — which
     * on `local[*]` (and any single-driver deployment, the normal
     * manifest-writer topology) is every writer, period; losers surface
     * as [[ConcurrentCommitException]] for [[retryOnConflict]]. Only
-    * separate PROCESSES on a raw local FS remain narrowed-not-closed
+    * separate PROCESSES on a local FS remain narrowed-not-closed
     * (the documented corner; HDFS is exact there). */
   private val commitLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
@@ -1541,7 +1480,7 @@ object ManifestTable {
       fs: FileSystem, p: Path, files: Seq[String], expectedCurrent: Long,
       txn: Option[String], schemaDdl: Option[String], op: String,
       constraintsOverride: Option[Seq[(String, String)]]): Long = {
-    val snap = currentSnapshot(spark, path)
+    val snap = latest(spark, path)
     val cur = snap.map(_.version).getOrElse(0L)
     if (cur != expectedCurrent) throw new ConcurrentCommitException(
       s"manifest table $path moved (v$cur, expected v$expectedCurrent) — " +
@@ -1554,22 +1493,31 @@ object ManifestTable {
     val target = new Path(p, s"_manifest.$next")
     if (fs.exists(target)) throw new ConcurrentCommitException(
       s"manifest table $path: $target already exists — concurrent writer")
-    val staged = new Path(p,
-      s"_manifest.staged.${java.util.UUID.randomUUID.toString.take(12)}")
-    val out = fs.create(staged, false)
-    try {
-      val header = s"# graft manifest v$next, ${files.size} files\n" +
-        s"# op $op\n" +
-        txn.map(t => s"# txn $t\n").getOrElse("") +
-        schemaDdl.map(s => s"# schema $s\n").getOrElse("") +
-        constraints.sortBy(_._1)
-          .map { case (n, e) => s"# constraint $n $e\n" }.mkString
-      val body = (header +
-        files.sorted.mkString("\n") + "\n").getBytes("UTF-8")
-      out.write(body)
-    } finally out.close()
-    require(fs.rename(staged, target),
+    val header = s"# graft manifest v$next, ${files.size} files\n" +
+      s"# op $op\n" +
+      txn.map(t => s"# txn $t\n").getOrElse("") +
+      schemaDdl.map(s => s"# schema $s\n").getOrElse("") +
+      constraints.sortBy(_._1)
+        .map { case (n, e) => s"# constraint $n $e\n" }.mkString
+    publish(fs, new Path(p, s"_manifest.staged.${stageId()}"), target,
+      header + files.sorted.mkString("\n") + "\n",
       s"manifest table $path: could not publish $target")
     next
+  }
+
+  /** A fresh random suffix for a staged file name. */
+  private def stageId(): String = java.util.UUID.randomUUID.toString.take(12)
+
+  /** THE publish step of manifests and tags: write `text` to the fresh
+    * name `staged` (`create` with overwrite off refuses a collision),
+    * then ONE rename to `target` — readers see no file or the whole
+    * file, and a crash in between leaves only staged debris that
+    * [[vacuum]] deletes. `failure` is the refusal when the rename
+    * fails. */
+  private def publish(fs: FileSystem, staged: Path, target: Path,
+      text: String, failure: => String): Unit = {
+    val out = fs.create(staged, false)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+    require(fs.rename(staged, target), failure)
   }
 }

@@ -186,6 +186,15 @@ class DedupSpec extends SparkSpec {
       maxBucket = 2000).head()
     assert(b.getAs[Long]("hot_buckets") === 32L)
     assert(b.getAs[Long]("max_df") === 2500L)
+    // docs too short to shingle share the sentinel signature but are
+    // never banded by the pairing, so the audit reports nothing either
+    val short = spark.range(2500).selectExpr("id AS doc_id", "'word' AS text")
+    val sb = Dedup.minHashBandCapAudit(short, "doc_id", "text",
+      maxBucket = 2000).head()
+    assert(sb.getAs[Long]("hot_buckets") === 0L)
+    assert(sb.getAs[Long]("dropped_rows") === 0L)
+    assert(Dedup.minHashLshCandidates(short, "doc_id", "text",
+      maxBucket = 2000).count() === 0L)
     // the bench corpus has no bucket anywhere near the production cap
     val real = graft.Tables(spark, "/root/testdata/sf0.001", "documents")
     val ra = Dedup.shingleCapAudit(real, "doc_id", "text", n = 3,

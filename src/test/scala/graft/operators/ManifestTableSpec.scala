@@ -1270,4 +1270,92 @@ class ManifestTableSpec extends SparkSpec {
       keys.toDF("k"), files = 1, whenMatched = "delete",
       whenNotMatched = "ignore", statsCols = Seq("k")))
   }
+
+  test("rename through the table's local FileSystem refuses an existing " +
+    "target file: it returns false and leaves both files as they were") {
+    val dir = new org.apache.hadoop.fs.Path(tempDir("rename").toString)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def put(p: org.apache.hadoop.fs.Path, text: String): Unit = {
+      val out = fs.create(p, false)
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+    }
+    def text(p: org.apache.hadoop.fs.Path): String = {
+      val in = fs.open(p)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+    }
+    val target = new org.apache.hadoop.fs.Path(dir, "_manifest.7")
+    val staged = new org.apache.hadoop.fs.Path(dir, "_manifest.staged.x")
+    put(target, "old\n")
+    put(staged, "new\n")
+    assert(!fs.rename(staged, target))
+    assert(text(target) === "old\n")
+    assert(text(staged) === "new\n")
+  }
+
+  test("pruned reads at a time-travel version: an excluded range is zero " +
+    "rows typed as that snapshot, planned as an empty relation; a hitting " +
+    "range equals a filter of read(version)") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val path = freshDir()
+    ManifestTable.create(spark, path, part(1, 4000), files = 8,
+      sortCols = Seq("k", "v"), statsCols = Seq("k", "v"), zOrder = true)
+    // later snapshots: a schema-evolving append and a CoW delete
+    ManifestTable.append(spark, path, (4001 to 4100)
+      .map(i => (i.toLong, i % 1000L, s"w$i")).toDF("k", "v", "w"),
+      files = 1, statsCols = Seq("k", "v"))
+    ManifestTable.deleteRange(spark, path, "k", 1000L, 3000L,
+      statsCols = Seq("k", "v"))
+    val v1 = ManifestTable.read(spark, path, version = Some(1L))
+    val rows1 = v1.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    def emptyTyped(df: org.apache.spark.sql.DataFrame): Unit = {
+      assert(df.schema === v1.schema)
+      assert(df.queryExecution.optimizedPlan match {
+        case l: LocalRelation => l.data.isEmpty
+        case _                => false
+      }, df.queryExecution.optimizedPlan.toString)
+      assert(df.count() === 0L)
+    }
+    emptyTyped(ManifestTable.readRange(spark, path, "k", 5000000L,
+      6000000L, version = Some(1L)))
+    emptyTyped(ManifestTable.readBox(spark, path, "k", 1L, 4000L,
+      "v", 5000L, 6000L, version = Some(1L)))
+    val entries1 = ManifestTable.filesDf(spark, path, version = Some(1L))
+      .filter(col("stat_col") === "k").collect()
+      .map(r => (r.getLong(3), r.getLong(4)))
+    val hit = entries1.count { case (lo, hi) => hi >= 1L && lo <= 500L }
+    assert(hit > 0 && hit < entries1.length, entries1.toSeq)
+    assert(rowsOf(ManifestTable.readRange(spark, path, "k", 1L, 500L,
+      version = Some(1L))) ===
+      rows1.filter(r => r._1 >= 1L && r._1 <= 500L).sorted)
+    assert(rowsOf(ManifestTable.readBox(spark, path, "k", 1L, 500L,
+      "v", 100L, 400L, version = Some(1L))) ===
+      rows1.filter(r => r._1 >= 1L && r._1 <= 500L &&
+        r._2 >= 100L && r._2 <= 400L).sorted)
+  }
+
+  test("countRows(version) equals history()'s n_rows for every retained " +
+    "version") {
+    val path = freshDir()
+    val stats = Seq("k")
+    ManifestTable.create(spark, path, part(1, 1000), files = 4,
+      sortCols = stats, statsCols = stats)
+    ManifestTable.append(spark, path, part(1001, 1300), files = 2,
+      statsCols = stats)
+    ManifestTable.deleteRange(spark, path, "k", 200L, 450L, statsCols = stats)
+    ManifestTable.upsert(spark, path, "k", part(1250, 1400), files = 1,
+      statsCols = stats)
+    ManifestTable.compact(spark, path, files = 3, sortCols = stats)
+    ManifestTable.vacuum(spark, path, keepVersions = 4)
+    val h = ManifestTable.history(spark, path).collect()
+      .map(r => r.getLong(0) -> r.getLong(3)).toMap
+    assert(h.keySet === ManifestTable.versions(spark, path).toSet)
+    assert(h.keySet === Set(2L, 3L, 4L, 5L))
+    h.foreach { case (v, n) =>
+      assert(ManifestTable.countRows(spark, path, Some(v)) === n, s"v$v")
+      assert(ManifestTable.read(spark, path, version = Some(v)).count() === n)
+    }
+  }
 }

@@ -2,7 +2,11 @@
 # Paired, interleaved Bench A/B of two revisions over a gate subset.
 #
 # Usage: tools/ab.sh <revA> <revB> <gates> [pairs]
-#   <gates>  comma-separated exact gate names (Bench's SPARK_GRAFT_ONLY)
+#   <gates>  comma-separated gate names, passed as SPARK_GRAFT_ONLY. Bench
+#            and Verify run a gate when its name starts with a listed
+#            entry; no gate name is a prefix of another, so full names
+#            select exactly those gates. Pass full names: each is also
+#            checked for a time on both sides.
 #   [pairs]  A/B pairs to run (default 3)
 # Env passes through to graft.Bench (SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
 # SPARK_GRAFT_ITERS, SPARK_DRIVER_MEM, ...); TMPDIR picks where the
