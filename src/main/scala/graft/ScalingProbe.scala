@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-exponent probe for the perf-tail gates: times each audited gate
@@ -121,36 +121,28 @@ object ScalingProbe {
     // payload builders end in orderBy+LIMIT, whose GlobalLimit collapses
     // everything onto one partition — without the respread the probe
     // would time a ONE-TASK decode pipeline instead of the gate's
-    // distributed mapPartitions shape.
+    // distributed per-payload decode.
     def spread(df: DataFrame): DataFrame = df.repartition(32)
-    Map(
-      "mm08_image_neardup_nx" -> ((s, d) => {
+    // one payload per eligible doc (~n/3), hashed, then the gates'
+    // banded capped Hamming NN
+    def nearDup(payloads: (DataFrame, Int) => DataFrame,
+        hash: DataFrame => Dataset[_]): (SparkSession, String) => DataFrame =
+      (s, d) => {
         val docs = Tables(s, d, "documents")
         val n = (docs.count() / 3).toInt + 1
-        Multimodal.nearestByHamming(
-          Multimodal.imageAHash(
-            spread(Multimodal.imagePayloads(docs, limit = n))).toDF(),
+        Multimodal.nearestByHamming(hash(spread(payloads(docs, n))).toDF(),
           bandBits = 16, numBands = 4, maxBucket = 1000)
-      }),
+      }
+    Map(
+      "mm08_image_neardup_nx" ->
+        nearDup(Multimodal.imagePayloads(_, _), Multimodal.imageAHash),
       // r9: the lossy-codec cousin — JPEG encode AND decode both ride
       // the probe (encode is scan-side in jpegPayloads, decode in
       // imageAHash), so the α covers the full codec round trip
-      "mm13_jpeg_neardup_nx" -> ((s, d) => {
-        val docs = Tables(s, d, "documents")
-        val n = (docs.count() / 3).toInt + 1
-        Multimodal.nearestByHamming(
-          Multimodal.imageAHash(
-            spread(Multimodal.jpegPayloads(docs, limit = n))).toDF(),
-          bandBits = 16, numBands = 4, maxBucket = 1000)
-      }),
-      "mm09_audio_neardup_nx" -> ((s, d) => {
-        val docs = Tables(s, d, "documents")
-        val n = (docs.count() / 3).toInt + 1
-        Multimodal.nearestByHamming(
-          Multimodal.audioAHash(
-            spread(Multimodal.audioPayloads(docs, limit = n))).toDF(),
-          bandBits = 16, numBands = 4, maxBucket = 1000)
-      }),
+      "mm13_jpeg_neardup_nx" ->
+        nearDup(Multimodal.jpegPayloads(_, _), Multimodal.imageAHash),
+      "mm09_audio_neardup_nx" ->
+        nearDup(Multimodal.audioPayloads(_, _), Multimodal.audioAHash),
       // d06 α forensics (r8 verdict #1): the shared sf1x corpus suffixes
       // each WORD with its copy index, which keeps word-shingle spaces
       // disjoint but leaves within-word 8-CHAR grams shared across all
@@ -179,14 +171,8 @@ object ScalingProbe {
           "text", k = 8, w = 6, threshold = 0.5, maxBucket = 500,
           numHashes = 64, bands = 16)
       }),
-      "mm10_video_neardup_nx" -> ((s, d) => {
-        val docs = Tables(s, d, "documents")
-        val n = (docs.count() / 3).toInt + 1
-        Multimodal.nearestByHamming(
-          Multimodal.videoAHash(
-            spread(Multimodal.videoPayloads(docs, limit = n))).toDF(),
-          bandBits = 16, numBands = 4, maxBucket = 1000)
-      }))
+      "mm10_video_neardup_nx" ->
+        nearDup(Multimodal.videoPayloads(_, _), Multimodal.videoAHash))
   }
 
   private val copies = 10

@@ -37,16 +37,20 @@ import org.apache.spark.sql.types.StructType
   * Atomicity contract: publish is `FileSystem.rename` of a fully-written
   * file within one directory — atomic on HDFS and POSIX. HDFS rename
   * also refuses an existing target, making concurrent commits safe
-  * there. The local FileSystem refuses an existing target FILE too
-  * (ManifestTableSpec pins it), but by a check before rename(2), which
-  * itself replaces: two writers can both pass the check. So [[commit]]
-  * adds a per-table JVM mutex that CLOSES the two-writer race for every
-  * writer in one process (the normal single-driver topology — and all
-  * of `local[*]`); losers surface as [[ConcurrentCommitException]] for
-  * [[retryOnConflict]]. Only separate PROCESSES racing on a local FS
-  * remain narrowed-not-closed (exact on HDFS) — single-writer
-  * maintenance windows are exact everywhere, and readers are always
-  * safe: a reader that catches a non-atomic local replace mid-read
+  * there. Local paths depend on the classpath: with Spark's Hive jars,
+  * `file:` resolves to hive-exec's `ProxyLocalFileSystem`, which
+  * refuses an existing target FILE (ManifestTableSpec pins it) but by
+  * a check before rename(2), which itself replaces — two writers can
+  * both pass the check; Hadoop's own `LocalFileSystem` replaces the
+  * target outright. So [[commit]] adds a per-table JVM mutex that
+  * CLOSES the two-writer race for every writer in one process (the
+  * normal single-driver topology — and all of `local[*]`); losers
+  * surface as [[ConcurrentCommitException]] for [[retryOnConflict]],
+  * and so does a commit whose rename was refused because another
+  * process published the same manifest first. Only separate PROCESSES
+  * racing on a local FS remain narrowed-not-closed (exact on HDFS) —
+  * single-writer maintenance windows are exact everywhere, and readers
+  * are always safe: a reader that catches a non-atomic local replace mid-read
   * detects it by the header's file count (the torn-manifest self-check
   * in [[snapshot]]) and fails loudly. Scale shape: a
   * manifest is one line per file — a 100 TB table at healthy file
@@ -849,7 +853,9 @@ object ManifestTable {
       s".${sp.getName}.staged.${stageId()}")
     val out = fs.create(staged, false)
     try out.write(s"$cur\n".getBytes("UTF-8")) finally out.close()
-    fs.delete(sp, false) // rename refuses an existing target (local FS too)
+    // HDFS and hive-exec's ProxyLocalFileSystem refuse an existing
+    // target (Hadoop's LocalFileSystem would replace it)
+    fs.delete(sp, false)
     require(fs.rename(staged, sp),
       s"could not record consumer state at $stateFile")
     cur
@@ -1111,11 +1117,12 @@ object ManifestTable {
     val v = snapshot(spark, path, version).version
     val (fs, p) = fsOf(spark, path)
     val t = new Path(p, s"_tag.$name")
-    require(!fs.exists(t),
+    def taken = new IllegalArgumentException(
       s"tag '$name' already exists on $path — dropTag it first " +
         "(tags never silently move)")
+    if (fs.exists(t)) throw taken
     publish(fs, new Path(p, s".tag.staged.${stageId()}"), t, s"$v\n",
-      s"could not publish tag $t")
+      taken, s"could not publish tag $t")
     v
   }
 
@@ -1436,10 +1443,13 @@ object ManifestTable {
 
   /** Per-table commit mutex (qualified path -> lock). The OCC
     * check-then-rename in [[commit]] is safe cross-process on HDFS
-    * (rename refuses an existing target atomically) but the local FS
-    * refuses by a check before rename(2), which replaces — two
-    * same-version committers could both pass it and silently lose an
-    * update. Serializing the critical section per table CLOSES that
+    * (rename refuses an existing target atomically) but not on a local
+    * path: there the refusal comes from the classpath — hive-exec's
+    * `ProxyLocalFileSystem`, registered for `file:` with Spark's Hive
+    * jars, checks for the target before rename(2), which replaces, and
+    * Hadoop's own `LocalFileSystem` replaces outright — so two
+    * same-version committers could both pass the check and silently
+    * lose an update. Serializing the critical section per table CLOSES that
     * race for every writer in this JVM — which
     * on `local[*]` (and any single-driver deployment, the normal
     * manifest-writer topology) is every writer, period; losers surface
@@ -1491,8 +1501,9 @@ object ManifestTable {
       .getOrElse(snap.map(_.constraints).getOrElse(Nil))
     val next = cur + 1
     val target = new Path(p, s"_manifest.$next")
-    if (fs.exists(target)) throw new ConcurrentCommitException(
+    def taken = new ConcurrentCommitException(
       s"manifest table $path: $target already exists — concurrent writer")
+    if (fs.exists(target)) throw taken
     val header = s"# graft manifest v$next, ${files.size} files\n" +
       s"# op $op\n" +
       txn.map(t => s"# txn $t\n").getOrElse("") +
@@ -1500,7 +1511,7 @@ object ManifestTable {
       constraints.sortBy(_._1)
         .map { case (n, e) => s"# constraint $n $e\n" }.mkString
     publish(fs, new Path(p, s"_manifest.staged.${stageId()}"), target,
-      header + files.sorted.mkString("\n") + "\n",
+      header + files.sorted.mkString("\n") + "\n", taken,
       s"manifest table $path: could not publish $target")
     next
   }
@@ -1512,12 +1523,19 @@ object ManifestTable {
     * name `staged` (`create` with overwrite off refuses a collision),
     * then ONE rename to `target` — readers see no file or the whole
     * file, and a crash in between leaves only staged debris that
-    * [[vacuum]] deletes. `failure` is the refusal when the rename
-    * fails. */
+    * [[vacuum]] deletes. A refused rename onto a `target` that now
+    * exists lost the race to another writer between the caller's
+    * existence check and the rename: it throws `taken`, the caller's
+    * own existence refusal (a [[ConcurrentCommitException]] for
+    * manifests, so [[retryOnConflict]] retries it). Any other refused
+    * rename is `failure`. */
   private def publish(fs: FileSystem, staged: Path, target: Path,
-      text: String, failure: => String): Unit = {
+      text: String, taken: => IllegalArgumentException,
+      failure: => String): Unit = {
     val out = fs.create(staged, false)
     try out.write(text.getBytes("UTF-8")) finally out.close()
-    require(fs.rename(staged, target), failure)
+    val published = fs.rename(staged, target)
+    if (!published && fs.exists(target)) throw taken
+    require(published, failure)
   }
 }

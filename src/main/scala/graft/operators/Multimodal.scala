@@ -1,7 +1,17 @@
 package graft.operators
 
+import java.awt.image.BufferedImage
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import javax.imageio.{ImageIO, ImageReader}
+import javax.imageio.metadata.IIOMetadata
+import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream,
+  AudioSystem}
+
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.w3c.dom.Element
 
 /** Multimodal column plumbing: image/audio/video as opaque BINARY payloads
   * with typed metadata, processed in distributed batches.
@@ -18,8 +28,13 @@ import org.apache.spark.sql.functions._
   *    codec (JNI/FFI or a Python `mapInPandas` stage) plugs into the
   *    same frame-iterator shape.
   * `decodeStub` remains only as the codec-free byte-feature path (mm02)
-  * exercising the batch plumbing on arbitrary payloads. Every decode
-  * path is a `mapPartitions` over (id, payload, meta) batches.
+  * exercising the batch plumbing on arbitrary payloads. Every real
+  * decode and hash is one typed per-payload step (`perPayload`): select
+  * (doc_id, payload), then a typed flatMap that decodes one payload at
+  * a time, scan-side. The fixtures are one builder (`payloadFixture`),
+  * and the codecs one reader/writer each: `readImage` (header dims
+  * bounded before the raster is allocated), `readPcm16`/`writeWav`,
+  * `encodeRgb` and the 32-cell `blockMeanHash`.
   *
   * Scale notes: payloads never pass through a shuffle here — features are
   * computed scan-side and only the (small) feature rows move on. For real
@@ -77,6 +92,42 @@ object Multimodal {
       }
   }
 
+  /** THE payload fixture builder: the first `limit` doc_ids with
+    * `doc_id % 3 == residue` (matching [[fakePayloads]]' kind
+    * assignment: 0 image, 1 audio, 2 video), each carrying
+    * `encode(doc_id)` as its payload. Encoding runs scan-side — payload
+    * bytes are born on the executor and never cross a shuffle. */
+  private def payloadFixture(docs: DataFrame, residue: Int, limit: Int,
+      kind: String)(encode: Long => Array[Byte]): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.select(col("doc_id")).where(col("doc_id") % 3 === residue)
+      .orderBy("doc_id").limit(limit)
+      .as[Long]
+      .map(id => (id, encode(id), kind))
+      .toDF("doc_id", "payload", "kind")
+  }
+
+  /** THE per-payload step of every real decode and hash: (doc_id,
+    * payload) rows, each decoded on its own by `decode` into zero or
+    * more `T` rows, scan-side. */
+  private def perPayload[T <: Product : TypeTag](media: DataFrame)(
+      decode: (Long, Array[Byte]) => IterableOnce[T]): Dataset[T] = {
+    val spark = media.sparkSession
+    import spark.implicits._
+    media.select(col("doc_id"), col("payload"))
+      .as[(Long, Array[Byte])]
+      .flatMap { case (id, bytes) => decode(id, bytes) }
+  }
+
+  /** Refuse a header that declares more than 16M pixels BEFORE anything
+    * is sized from it: one crafted few-hundred-byte file declaring a
+    * 40000x40000 raster (or an Int-overflowing one) would otherwise OOM
+    * the executor before a single pixel is decoded. */
+  private def requireDecodeBound(w: Int, h: Int, what: => String): Unit =
+    require(w.toLong * h <= 16777216L,
+      s"$what ${w}x$h exceeds the 16M-pixel decode bound")
+
   case class ImageFeatures(doc_id: Long, width: Int, height: Int,
       r_sum: Long, g_sum: Long, b_sum: Long, pos_sum: Long,
       r_h0: Long, r_h1: Long, r_h2: Long, r_h3: Long)
@@ -91,26 +142,33 @@ object Multimodal {
   @inline private def pxB(docId: Long, x: Int, y: Int): Int =
     ((x * 11L + y * 17L + docId * 3) % 256).toInt
 
-  /** PNG-encode the synthetic pattern for one doc. PNG is lossless, so
-    * [[decodeImage]] must recover these exact pixels — that round-trip is
-    * what the mm05 gate's closed-form oracle pins. */
-  def syntheticPng(docId: Long, w: Int, h: Int): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+  /** THE RGB raster encoder of [[syntheticPng]] and [[syntheticJpeg]]:
+    * a w×h `TYPE_INT_RGB` image whose pixel (x, y) is `rgb(x, y)`
+    * (0xRRGGBB), written in `format` by `javax.imageio`. */
+  private def encodeRgb(w: Int, h: Int, format: String)(
+      rgb: (Int, Int) => Int): Array[Byte] = {
+    val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
     var y = 0
     while (y < h) {
       var x = 0
       while (x < w) {
-        img.setRGB(x, y,
-          (pxR(docId, x, y) << 16) | (pxG(docId, x, y) << 8) | pxB(docId, x, y))
+        img.setRGB(x, y, rgb(x, y))
         x += 1
       }
       y += 1
     }
-    val out = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", out)
+    val out = new ByteArrayOutputStream()
+    ImageIO.write(img, format, out)
     out.toByteArray
   }
+
+  /** PNG-encode the synthetic pattern for one doc. PNG is lossless, so
+    * [[decodeImage]] must recover these exact pixels — that round-trip is
+    * what the mm05 gate's closed-form oracle pins. */
+  def syntheticPng(docId: Long, w: Int, h: Int): Array[Byte] =
+    encodeRgb(w, h, "png") { (x, y) =>
+      (pxR(docId, x, y) << 16) | (pxG(docId, x, y) << 8) | pxB(docId, x, y)
+    }
 
   /** Smooth per-channel pattern for the JPEG fixtures: doc-keyed
     * gradients + one low-frequency ramp. JPEG's DCT quantization is
@@ -139,64 +197,43 @@ object Multimodal {
     * quantization), so JPEG gates pin the DECODED hash frame through an
     * aux fixture (the d04/t15 two-stage recipe) rather than a
     * closed-form pixel replay. */
-  def syntheticJpeg(docId: Long, w: Int, h: Int): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        img.setRGB(x, y,
-          (pxSmooth(docId, 0, x, y, w, h) << 16) |
-            (pxSmooth(docId, 1, x, y, w, h) << 8) |
-            pxSmooth(docId, 2, x, y, w, h))
-        x += 1
-      }
-      y += 1
+  def syntheticJpeg(docId: Long, w: Int, h: Int): Array[Byte] =
+    encodeRgb(w, h, "jpg") { (x, y) =>
+      (pxSmooth(docId, 0, x, y, w, h) << 16) |
+        (pxSmooth(docId, 1, x, y, w, h) << 8) |
+        pxSmooth(docId, 2, x, y, w, h)
     }
-    val out = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "jpg", out)
-    out.toByteArray
-  }
 
   /** Real-JPEG payload fixture: same image-kind subset and dims as
-    * [[imagePayloads]], JPEG-encoded. Same scan-side mapPartitions
-    * shape — payload bytes never cross a shuffle. */
-  def jpegPayloads(docs: DataFrame, limit: Int = 40): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).where(col("doc_id") % 3 === 0)
-      .orderBy("doc_id").limit(limit)
-      .as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val w = (id % 24 + 8).toInt
-          val h = (id % 16 + 6).toInt
-          (id, syntheticJpeg(id, w, h), "image")
-        }
-      }
-      .toDF("doc_id", "payload", "kind")
-  }
+    * [[imagePayloads]], JPEG-encoded. */
+  def jpegPayloads(docs: DataFrame, limit: Int = 40): DataFrame =
+    payloadFixture(docs, 0, limit, "image")(id =>
+      syntheticJpeg(id, (id % 24 + 8).toInt, (id % 16 + 6).toInt))
 
-  /** Real-PNG payload fixture: the image-kind doc subset (doc_id % 3 == 0,
-    * matching [[fakePayloads]]' kind assignment), each carrying an actual
-    * PNG whose dims derive from doc_id. Encoding runs scan-side in
-    * mapPartitions — payload bytes are born on the executor and never
-    * cross a shuffle. */
-  def imagePayloads(docs: DataFrame, limit: Int = 40): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).where(col("doc_id") % 3 === 0)
-      .orderBy("doc_id").limit(limit)
-      .as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val w = (id % 24 + 8).toInt
-          val h = (id % 16 + 6).toInt
-          (id, syntheticPng(id, w, h), "image")
-        }
-      }
-      .toDF("doc_id", "payload", "kind")
+  /** Real-PNG payload fixture: the image-kind doc subset (doc_id % 3 == 0),
+    * each carrying an actual PNG whose dims derive from doc_id. */
+  def imagePayloads(docs: DataFrame, limit: Int = 40): DataFrame =
+    payloadFixture(docs, 0, limit, "image")(id =>
+      syntheticPng(id, (id % 24 + 8).toInt, (id % 16 + 6).toInt))
+
+  /** THE image read of [[decodeImage]] and [[imageAHash]]: any in-JDK
+    * format (PNG/JPEG/BMP/GIF frame 0), read like `ImageIO.read` but
+    * with the header's dims bounded ([[requireDecodeBound]]) before the
+    * raster is allocated. `label` names the payload in refusals. */
+  private def readImage(bytes: Array[Byte], label: => String): BufferedImage = {
+    val iis = ImageIO.createImageInputStream(new ByteArrayInputStream(bytes))
+    val readers = ImageIO.getImageReaders(iis)
+    require(readers.hasNext, s"undecodable image payload ($label)")
+    val reader = readers.next()
+    try {
+      reader.setInput(iis, /*seekForwardOnly=*/ true, /*ignoreMetadata=*/ true)
+      requireDecodeBound(reader.getWidth(0), reader.getHeight(0),
+        s"image $label")
+      reader.read(0)
+    } finally {
+      reader.dispose()
+      iis.close()
+    }
   }
 
   /** REAL image decode via javax.imageio (in-JDK PNG/JPEG/BMP readers).
@@ -206,8 +243,7 @@ object Multimodal {
     * plain sums would miss, and a 4-bucket histogram of the R channel. */
   def decodeImage(bytes: Array[Byte])
       : (Int, Int, Long, Long, Long, Long, Array[Long]) = {
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-    require(img != null, s"undecodable image payload (${bytes.length} bytes)")
+    val img = readImage(bytes, s"${bytes.length} bytes")
     val (w, h) = (img.getWidth, img.getHeight)
     var (rs, gs, bs, ps) = (0L, 0L, 0L, 0L)
     val hist = new Array[Long](4)
@@ -229,22 +265,14 @@ object Multimodal {
     (w, h, rs, gs, bs, ps, hist)
   }
 
-  /** Distributed decode of real image payloads → pixel-derived features.
-    * Same mapPartitions batch shape as [[extractFeatures]]; the codec is
-    * javax.imageio instead of the stub. */
-  def decodeImageFeatures(media: DataFrame): Dataset[ImageFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, bytes) =>
-          val (w, h, rs, gs, bs, ps, hist) = decodeImage(bytes)
-          ImageFeatures(id, w, h, rs, gs, bs, ps,
-            hist(0), hist(1), hist(2), hist(3))
-        }
-      }
-  }
+  /** Distributed decode of real image payloads → pixel-derived features:
+    * [[decodeImage]] per payload. */
+  def decodeImageFeatures(media: DataFrame): Dataset[ImageFeatures] =
+    perPayload(media) { (id, bytes) =>
+      val (w, h, rs, gs, bs, ps, hist) = decodeImage(bytes)
+      Iterator.single(ImageFeatures(id, w, h, rs, gs, bs, ps,
+        hist(0), hist(1), hist(2), hist(3)))
+    }
 
   case class AudioFeatures(doc_id: Long, n_samples: Int, sample_rate: Int,
       s_sum: Long, abs_sum: Long, s_min: Int, s_max: Int, pos_sum: Long,
@@ -256,47 +284,55 @@ object Multimodal {
   @inline private def smp(docId: Long, i: Int): Int =
     (((i * 31L + docId * 17L) % 4096L) - 2048L).toInt
 
+  /** THE WAV writer of [[syntheticWav]] and [[downsampleWav]]: `samples`
+    * as 16-bit signed little-endian mono PCM at `rate`, via in-JDK
+    * `javax.sound.sampled`. */
+  private def writeWav(samples: Array[Int], rate: Float): Array[Byte] = {
+    val pcm = new Array[Byte](samples.length * 2)
+    var i = 0
+    while (i < samples.length) {
+      pcm(2 * i) = (samples(i) & 0xFF).toByte            // lo byte
+      pcm(2 * i + 1) = ((samples(i) >> 8) & 0xFF).toByte // hi byte
+      i += 1
+    }
+    val fmt = new AudioFormat(rate, 16, 1, /*signed=*/ true,
+      /*bigEndian=*/ false)
+    val out = new ByteArrayOutputStream()
+    AudioSystem.write(new AudioInputStream(new ByteArrayInputStream(pcm),
+      fmt, samples.length.toLong), AudioFileFormat.Type.WAVE, out)
+    out.toByteArray
+  }
+
+  /** THE PCM reader of [[decodeAudio]], [[downsampleWav]] and
+    * [[audioAHash]]: (samples, sample rate) of a 16-bit LE mono PCM
+    * payload. Anything else (8-bit, stereo, big-endian) is refused — its
+    * bytes paired into 16-bit samples would be silent garbage. `label`
+    * names the payload in the refusal. */
+  private def readPcm16(bytes: Array[Byte],
+      label: => String): (Array[Int], Float) = {
+    val ais = AudioSystem.getAudioInputStream(new ByteArrayInputStream(bytes))
+    val fmt = ais.getFormat
+    require(fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1 &&
+      !fmt.isBigEndian, s"expected 16-bit LE mono PCM ($label), got $fmt")
+    val pcm = try ais.readAllBytes() finally ais.close()
+    val samples = Array.tabulate(pcm.length / 2)(i =>
+      (pcm(2 * i + 1) << 8) | (pcm(2 * i) & 0xFF))
+    (samples, fmt.getSampleRate)
+  }
+
   /** WAV-encode the synthetic sample pattern for one doc: 16-bit signed
     * little-endian mono PCM via in-JDK `javax.sound.sampled`. WAV/PCM is
     * lossless, so [[decodeAudio]] must recover these exact samples — the
     * mm06 gate's closed-form oracle pins that round-trip. */
-  def syntheticWav(docId: Long, nSamples: Int, rate: Int = 8000): Array[Byte] = {
-    val pcm = new Array[Byte](nSamples * 2)
-    var i = 0
-    while (i < nSamples) {
-      val s = smp(docId, i)
-      pcm(2 * i) = (s & 0xFF).toByte            // little-endian lo byte
-      pcm(2 * i + 1) = ((s >> 8) & 0xFF).toByte // hi byte (sign-extended)
-      i += 1
-    }
-    val fmt = new javax.sound.sampled.AudioFormat(
-      rate.toFloat, 16, 1, /*signed=*/ true, /*bigEndian=*/ false)
-    val ais = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(pcm), fmt, nSamples.toLong)
-    val out = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(
-      ais, javax.sound.sampled.AudioFileFormat.Type.WAVE, out)
-    out.toByteArray
-  }
+  def syntheticWav(docId: Long, nSamples: Int, rate: Int = 8000): Array[Byte] =
+    writeWav(Array.tabulate(nSamples)(smp(docId, _)), rate.toFloat)
 
-  /** Real-WAV payload fixture: the audio-kind doc subset (doc_id % 3 == 1,
-    * matching [[fakePayloads]]' kind assignment), each carrying an actual
-    * RIFF/WAVE file whose length derives from doc_id. Encoded scan-side in
-    * mapPartitions — payload bytes never cross a shuffle. */
-  def audioPayloads(docs: DataFrame, limit: Int = 40): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).where(col("doc_id") % 3 === 1)
-      .orderBy("doc_id").limit(limit)
-      .as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val n = (id % 300 + 50).toInt
-          (id, syntheticWav(id, n), "audio")
-        }
-      }
-      .toDF("doc_id", "payload", "kind")
-  }
+  /** Real-WAV payload fixture: the audio-kind doc subset (doc_id % 3 == 1),
+    * each carrying an actual RIFF/WAVE file whose length derives from
+    * doc_id. */
+  def audioPayloads(docs: DataFrame, limit: Int = 40): DataFrame =
+    payloadFixture(docs, 1, limit, "audio")(id =>
+      syntheticWav(id, (id % 300 + 50).toInt))
 
   /** REAL audio decode via javax.sound.sampled (in-JDK WAV/AIFF/AU
     * readers). Parses the RIFF header for format (rate/bits/channels),
@@ -307,46 +343,32 @@ object Multimodal {
     * consecutive samples (the classic cheap audio-activity feature). */
   def decodeAudio(bytes: Array[Byte])
       : (Int, Int, Long, Long, Int, Int, Long, Long) = {
-    val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-      new java.io.ByteArrayInputStream(bytes))
-    val fmt = ais.getFormat
-    require(fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1 &&
-      !fmt.isBigEndian,
-      s"expected 16-bit LE mono PCM, got $fmt")
-    val pcm = ais.readAllBytes()
-    ais.close()
-    val n = pcm.length / 2
+    val (smps, rate) = readPcm16(bytes, s"${bytes.length} bytes")
+    val n = smps.length
     var (sum, absSum, posSum, zc) = (0L, 0L, 0L, 0L)
     var (mn, mx) = (Int.MaxValue, Int.MinValue)
-    var prev = 0
     var i = 0
     while (i < n) {
-      val s = ((pcm(2 * i + 1) << 8) | (pcm(2 * i) & 0xFF))
+      val s = smps(i)
       sum += s; absSum += math.abs(s)
       if (s < mn) mn = s
       if (s > mx) mx = s
       posSum += (i + 1L) * s
-      if (i > 0 && ((s < 0) != (prev < 0))) zc += 1
-      prev = s
+      if (i > 0 && ((s < 0) != (smps(i - 1) < 0))) zc += 1
       i += 1
     }
-    (n, fmt.getSampleRate.toInt, sum, absSum,
+    (n, rate.toInt, sum, absSum,
       if (n == 0) 0 else mn, if (n == 0) 0 else mx, posSum, zc)
   }
 
-  /** Distributed decode of real WAV payloads → sample-derived features.
-    * Same mapPartitions batch shape as [[decodeImageFeatures]]. */
-  def decodeAudioFeatures(media: DataFrame): Dataset[AudioFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, bytes) =>
-          val (n, rate, sum, absSum, mn, mx, posSum, zc) = decodeAudio(bytes)
-          AudioFeatures(id, n, rate, sum, absSum, mn, mx, posSum, zc)
-        }
-      }
+  /** Distributed decode of real WAV payloads → sample-derived features:
+    * [[decodeAudio]] per payload. */
+  def decodeAudioFeatures(media: DataFrame): Dataset[AudioFeatures] =
+    perPayload(media)((id, bytes) => Iterator.single(audioFeatures(id, bytes)))
+
+  private def audioFeatures(id: Long, wav: Array[Byte]): AudioFeatures = {
+    val (n, rate, sum, absSum, mn, mx, posSum, zc) = decodeAudio(wav)
+    AudioFeatures(id, n, rate, sum, absSum, mn, mx, posSum, zc)
   }
 
   /** Downsample a 16-bit LE mono WAV by integer `factor`: each output
@@ -359,60 +381,28 @@ object Multimodal {
     * ingest pipeline runs before a fixed-rate feature extractor. */
   def downsampleWav(bytes: Array[Byte], factor: Int): Array[Byte] = {
     require(factor >= 1, "factor must be >= 1")
-    val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-      new java.io.ByteArrayInputStream(bytes))
-    val fmt = ais.getFormat
-    require(fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1 &&
-      !fmt.isBigEndian, s"expected 16-bit LE mono PCM, got $fmt")
-    val pcm = ais.readAllBytes()
-    ais.close()
-    val n = pcm.length / 2
-    val m = (n + factor - 1) / factor
-    val out = new Array[Byte](m * 2)
-    var j = 0
-    while (j < m) {
+    val (smps, rate) = readPcm16(bytes, s"${bytes.length} bytes")
+    val n = smps.length
+    val out = Array.tabulate((n + factor - 1) / factor) { j =>
       val lo = j * factor
       val hi = math.min(lo + factor, n)
       var s = 0L
       var i = lo
-      while (i < hi) {
-        s += ((pcm(2 * i + 1) << 8) | (pcm(2 * i) & 0xFF))
-        i += 1
-      }
-      val v = (s / (hi - lo)).toInt // truncating, = SQL div / //
-      out(2 * j) = (v & 0xFF).toByte
-      out(2 * j + 1) = ((v >> 8) & 0xFF).toByte
-      j += 1
+      while (i < hi) { s += smps(i); i += 1 }
+      (s / (hi - lo)).toInt // truncating, = SQL div / //
     }
-    val ofmt = new javax.sound.sampled.AudioFormat(
-      fmt.getSampleRate / factor, 16, 1, true, false)
-    val oais = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(out), ofmt, m.toLong)
-    val buf = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(
-      oais, javax.sound.sampled.AudioFileFormat.Type.WAVE, buf)
-    buf.toByteArray
+    writeWav(out, rate / factor)
   }
 
   /** Downsample-then-decode features: [[downsampleWav]] composed with
-    * [[decodeAudio]] scan-side in one mapPartitions pass — payload
+    * [[decodeAudio]] scan-side in the one per-payload pass — payload
     * bytes never cross a shuffle, and the re-encoded WAV is itself
     * decoded back (so the gate pins the WHOLE resample round-trip,
     * not just the block arithmetic). */
   def downsampleAudioFeatures(media: DataFrame,
-      factor: Int): Dataset[AudioFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, bytes) =>
-          val (n, rate, sum, absSum, mn, mx, posSum, zc) =
-            decodeAudio(downsampleWav(bytes, factor))
-          AudioFeatures(id, n, rate, sum, absSum, mn, mx, posSum, zc)
-        }
-      }
-  }
+      factor: Int): Dataset[AudioFeatures] =
+    perPayload(media)((id, bytes) =>
+      Iterator.single(audioFeatures(id, downsampleWav(bytes, factor))))
 
   case class VideoFrameFeatures(doc_id: Long, frame_idx: Int, width: Int,
       height: Int, g_sum: Long, pos_sum: Long)
@@ -430,16 +420,14 @@ object Multimodal {
     // identity 256-entry gray palette: index i = color (i,i,i)
     val grays = Array.tabulate(256)(_.toByte)
     val icm = new java.awt.image.IndexColorModel(8, 256, grays, grays, grays)
-    val out = new java.io.ByteArrayOutputStream()
-    val writer =
-      javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(out)
+    val out = new ByteArrayOutputStream()
+    val writer = ImageIO.getImageWritersByFormatName("gif").next()
+    val ios = ImageIO.createImageOutputStream(out)
     writer.setOutput(ios)
     writer.prepareWriteSequence(null)
     var f = 0
     while (f < nFrames) {
-      val img = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, icm)
+      val img = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_INDEXED, icm)
       val raster = img.getRaster
       var y = 0
       while (y < h) {
@@ -459,25 +447,11 @@ object Multimodal {
     out.toByteArray
   }
 
-  /** Real-GIF payload fixture: the video-kind doc subset (doc_id % 3 == 2,
-    * matching [[fakePayloads]]), each an actual multi-frame animated GIF.
-    * Encoded scan-side; payloads never cross a shuffle. */
-  def videoPayloads(docs: DataFrame, limit: Int = 30): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id")).where(col("doc_id") % 3 === 2)
-      .orderBy("doc_id").limit(limit)
-      .as[Long]
-      .mapPartitions { ids =>
-        ids.map { id =>
-          val n = (id % 5 + 2).toInt
-          val w = (id % 20 + 6).toInt
-          val h = (id % 12 + 5).toInt
-          (id, syntheticGif(id, n, w, h), "video")
-        }
-      }
-      .toDF("doc_id", "payload", "kind")
-  }
+  /** Real-GIF payload fixture: the video-kind doc subset (doc_id % 3 == 2),
+    * each an actual multi-frame animated GIF. */
+  def videoPayloads(docs: DataFrame, limit: Int = 30): DataFrame =
+    payloadFixture(docs, 2, limit, "video")(id => syntheticGif(id,
+      (id % 5 + 2).toInt, (id % 20 + 6).toInt, (id % 12 + 5).toInt))
 
   /** REAL video decode via javax.imageio's GIF reader: opens the
     * multi-frame container, COMPOSITES each frame onto the logical
@@ -516,9 +490,8 @@ object Multimodal {
     * synthetic corpus). */
   private def foldCompositedFrames[T](bytes: Array[Byte], label: => String)(
       f: (Array[Int], Int, Int, Int) => T): IndexedSeq[T] = {
-    val iis = javax.imageio.ImageIO.createImageInputStream(
-      new java.io.ByteArrayInputStream(bytes))
-    val readers = javax.imageio.ImageIO.getImageReaders(iis)
+    val iis = ImageIO.createImageInputStream(new ByteArrayInputStream(bytes))
+    val readers = ImageIO.getImageReaders(iis)
     require(readers.hasNext, s"undecodable video payload ($label)")
     val reader = readers.next()
     reader.setInput(iis)
@@ -527,17 +500,14 @@ object Multimodal {
     // pooling a partial raster would fingerprint the delta, not the
     // frame the viewer sees. Fall back to frame-0 dims when the
     // container has no screen descriptor (non-GIF readers).
-    val (sw, sh) = gifLogicalScreen(reader)
+    val stream = metadataTree(reader.getStreamMetadata,
+      "javax_imageio_gif_stream_1.0")
+    val (sw, sh) = gifLogicalScreen(stream)
       .getOrElse((reader.getWidth(0), reader.getHeight(0)))
     require(sw >= 1 && sh >= 1, s"video $label empty logical screen")
-    // the canvas is sized from the HEADER's screen descriptor — bound
-    // it before allocating, or one crafted few-hundred-byte GIF
-    // declaring a 40000x40000 screen (or an Int-overflowing one) OOMs
-    // the executor before any frame is even decoded
-    require(sw.toLong * sh <= 16777216L,
-      s"video $label logical screen ${sw}x$sh exceeds the 16M-pixel " +
-        "decode bound")
-    val bg = gifBackgroundGray(reader) // restore-to-background fill
+    // the canvas is sized from the HEADER's screen descriptor
+    requireDecodeBound(sw, sh, s"video $label logical screen")
+    val bg = gifBackgroundGray(stream) // restore-to-background fill
     val canvas = new Array[Int](sw * sh)
     var prev: Array[Int] = null // restoreToPrevious snapshot
     val out = (0 until n).map { fi =>
@@ -591,24 +561,16 @@ object Multimodal {
 
   /** Distributed frame-level decode of real GIF payloads: one output row
     * per (doc, frame) — frame extraction as data, the real form of the
-    * [[sampleFrames]] plan. Same mapPartitions batch shape as the image
-    * and audio paths. */
-  def decodeVideoFrames(media: DataFrame): Dataset[VideoFrameFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          decodeVideo(bytes).map { case (f, w, h, gs, ps) =>
-            VideoFrameFeatures(id, f, w, h, gs, ps)
-          }
-        }
+    * [[sampleFrames]] plan. */
+  def decodeVideoFrames(media: DataFrame): Dataset[VideoFrameFeatures] =
+    perPayload(media) { (id, bytes) =>
+      decodeVideo(bytes).map { case (f, w, h, gs, ps) =>
+        VideoFrameFeatures(id, f, w, h, gs, ps)
       }
-  }
+    }
 
   /** Metadata-only "resize": the payload is untouched (a real impl would
-    * re-encode in the same mapPartitions pass); target dims recorded. */
+    * re-encode in the per-payload step); target dims recorded. */
   def resizeMeta(media: DataFrame, maxW: Int, maxH: Int): DataFrame = {
     val scale = least(lit(1.0), least(lit(maxW) / col("width"),
       lit(maxH) / col("height")))
@@ -616,75 +578,69 @@ object Multimodal {
       .withColumn("out_height", floor(col("height") * scale).cast("int"))
   }
 
+  /** THE 32-cell block-mean hash of [[imageAHash]] and [[audioAHash]].
+    * `pool` feeds every (cell 0..31, value) pair to the function it is
+    * given; every cell must receive at least one value. Bits 0..31 are
+    * the aHash — cell mean vs the total of the means via the integer
+    * cross-multiply `avg*32 > total`, bit = cell — and bits 32..62 the
+    * chain-adjacent dHash (`avg(i+1) > avg(i)`: gradient bits that
+    * survive a global level shift the aHash half is blind to). 31 dHash
+    * bits, not 32: bit 63 stays clear so the value (and the oracle's
+    * `1<<idx` replay) never overflows a signed 64-bit int. */
+  private def blockMeanHash(pool: ((Int, Long) => Unit) => Unit): Long = {
+    val sum = new Array[Long](32)
+    val cnt = new Array[Long](32)
+    pool { (cell, v) => sum(cell) += v; cnt(cell) += 1 }
+    val avg = new Array[Long](32)
+    var total = 0L
+    var i = 0
+    while (i < 32) { avg(i) = sum(i) / cnt(i); total += avg(i); i += 1 }
+    var hash = 0L
+    i = 0
+    while (i < 32) {
+      if (avg(i) * 32L > total) hash |= 1L << i
+      if (i < 31 && avg(i + 1) > avg(i)) hash |= 1L << (32 + i)
+      i += 1
+    }
+    hash
+  }
+
   case class ImageHash(doc_id: Long, width: Int, height: Int, phash: Long)
 
   /** 63-bit perceptual hash of a decoded image: grayscale `(r+g+b)/3`
     * average-pooled onto an 8×4 grid (pixel→block via `bx = x*8/w`,
-    * `by = y*4/h` — every block non-empty for w≥8, h≥4); bits 0..31 are
-    * the aHash (block mean vs grid total via the integer cross-multiply
-    * `avg*32 > total`, bit `by*8+bx`), bits 32..62 the chain-adjacent
-    * dHash (`avg(i+1) > avg(i)` gradient bits — survive global
-    * brightness shifts the aHash half is blind to). Bit 63 stays clear
-    * (signed-overflow-free on both engines). ALL-INTEGER end to end, so
-    * the DuckDB oracle replays it exactly from the closed-form pixels.
+    * `by = y*4/h` — every block non-empty for w≥8, h≥4), hashed by
+    * [[blockMeanHash]] with cell `by*8+bx`: bits 0..31 the aHash, bits
+    * 32..62 the chain-adjacent dHash, bit 63 clear (signed-overflow-free
+    * on both engines). ALL-INTEGER end to end, so the DuckDB oracle
+    * replays it exactly from the closed-form pixels.
     *
     * This is the image-side near-dup signature (the d03/d04 discipline
     * for pixels): re-encodes, minor crops, and brightness-preserving
     * noise keep most bits, so banded Hamming join finds near-dups
     * without an all-pairs pass. */
-  def imageAHash(media: DataFrame): Dataset[ImageHash] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, bytes) =>
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(bytes))
-          require(img != null, s"undecodable image payload ($id)")
-          val (w, h) = (img.getWidth, img.getHeight)
-          // every 8x4 block must be non-empty or the mean divides by 0
-          require(w >= 8 && h >= 4,
-            s"image $id too small for the 8x4 aHash grid (${w}x$h)")
-          val sum = new Array[Long](32)
-          val cnt = new Array[Long](32)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val rgb = img.getRGB(x, y)
-              val gray = (((rgb >> 16) & 0xFF) + ((rgb >> 8) & 0xFF) +
-                (rgb & 0xFF)) / 3
-              val idx = (y * 4 / h) * 8 + (x * 8 / w)
-              sum(idx) += gray
-              cnt(idx) += 1
-              x += 1
-            }
-            y += 1
+  def imageAHash(media: DataFrame): Dataset[ImageHash] =
+    perPayload(media) { (id, bytes) =>
+      val img = readImage(bytes, id.toString)
+      val (w, h) = (img.getWidth, img.getHeight)
+      // every 8x4 block must be non-empty or the mean divides by 0
+      require(w >= 8 && h >= 4,
+        s"image $id too small for the 8x4 aHash grid (${w}x$h)")
+      val hash = blockMeanHash { add =>
+        var y = 0
+        while (y < h) {
+          var x = 0
+          while (x < w) {
+            val rgb = img.getRGB(x, y)
+            add((y * 4 / h) * 8 + (x * 8 / w), (((rgb >> 16) & 0xFF) +
+              ((rgb >> 8) & 0xFF) + (rgb & 0xFF)) / 3)
+            x += 1
           }
-          val avg = new Array[Long](32)
-          var total = 0L
-          var i = 0
-          while (i < 32) { avg(i) = sum(i) / cnt(i); total += avg(i); i += 1 }
-          var hash = 0L
-          i = 0
-          while (i < 32) {
-            if (avg(i) * 32L > total) hash |= 1L << i
-            i += 1
-          }
-          // bits 32..62: chain-adjacent difference hash (dHash) over the
-          // same block means — brightness-shift-invariant gradient bits.
-          // 31 bits, not 32: bit 63 stays clear so the value (and the
-          // oracle's 1<<idx replay) never overflows a signed 64-bit int.
-          i = 0
-          while (i < 31) {
-            if (avg(i + 1) > avg(i)) hash |= 1L << (32 + i)
-            i += 1
-          }
-          ImageHash(id, w, h, hash)
+          y += 1
         }
       }
-  }
+      Iterator.single(ImageHash(id, w, h, hash))
+    }
 
   /** Banded Hamming nearest neighbor over perceptual hashes: the hash
     * splits into `numBands` bands of `bandBits` bits; only hash pairs
@@ -758,62 +714,26 @@ object Multimodal {
   /** 63-bit audio fingerprint over decoded PCM — the [[imageAHash]]
     * discipline for sound: per-sample |amplitude| average-pooled onto
     * 32 equal time windows (sample→window via `i*32/n`, every window
-    * non-empty for n≥32); bits 0..31 threshold each window's integer
-    * mean energy against the window-mean total (`avg*32 > total`),
+    * non-empty for n≥32), hashed by [[blockMeanHash]] with cell =
+    * window: bits 0..31 threshold each window's integer mean energy,
     * bits 32..62 are the chain-adjacent energy-gradient dHash
     * (level-shift-invariant). All-integer, so the oracle replays it
     * from the closed-form samples. Re-encodes and level-preserving
     * noise keep most bits; band the result with [[nearestByHamming]]. */
-  def audioAHash(media: DataFrame): Dataset[AudioHash] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, bytes) =>
-          val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(bytes))
-          val fmt = ais.getFormat
-          // same contract decodeAudio enforces — an 8-bit/stereo/BE WAV
-          // would otherwise pair bytes into silently-garbage samples
-          require(fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1 &&
-            !fmt.isBigEndian, s"expected 16-bit LE mono PCM for $id, got $fmt")
-          val pcm = ais.readAllBytes()
-          ais.close()
-          val n = pcm.length / 2
-          require(n >= 32, s"audio payload too short for 32 windows ($id)")
-          val sum = new Array[Long](32)
-          val cnt = new Array[Long](32)
-          var i = 0
-          while (i < n) {
-            val s = ((pcm(2 * i + 1) << 8) | (pcm(2 * i) & 0xFF))
-            val w = (i.toLong * 32 / n).toInt
-            sum(w) += math.abs(s)
-            cnt(w) += 1
-            i += 1
-          }
-          val avg = new Array[Long](32)
-          var total = 0L
-          var w = 0
-          while (w < 32) { avg(w) = sum(w) / cnt(w); total += avg(w); w += 1 }
-          var hash = 0L
-          w = 0
-          while (w < 32) {
-            if (avg(w) * 32L > total) hash |= 1L << w
-            w += 1
-          }
-          // bits 32..62: chain-adjacent energy-gradient bits over the
-          // window means (the imageAHash dHash extension; 31 bits so
-          // bit 63 stays clear — see imageAHash)
-          w = 0
-          while (w < 31) {
-            if (avg(w + 1) > avg(w)) hash |= 1L << (32 + w)
-            w += 1
-          }
-          AudioHash(id, n, hash)
+  def audioAHash(media: DataFrame): Dataset[AudioHash] =
+    perPayload(media) { (id, bytes) =>
+      val (smps, _) = readPcm16(bytes, id.toString)
+      val n = smps.length
+      require(n >= 32, s"audio payload too short for 32 windows ($id)")
+      val hash = blockMeanHash { add =>
+        var i = 0
+        while (i < n) {
+          add((i.toLong * 32 / n).toInt, math.abs(smps(i)))
+          i += 1
         }
       }
-  }
+      Iterator.single(AudioHash(id, n, hash))
+    }
 
   case class VideoHash(doc_id: Long, n_frames: Int, phash: Long)
 
@@ -845,107 +765,99 @@ object Multimodal {
     * screen canvas before pooling, so the hash always sees full frames
     * (spec: a delta-encoded GIF hashes equal to its full-frame
     * re-encode). */
-  def videoAHash(media: DataFrame): Dataset[VideoHash] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, bytes) =>
-          val votes = new Array[Int](63)
-          var n = 0
-          foldCompositedFrames(bytes, id.toString) { (canvas, sw, sh, _) =>
-            // every 4x4 cell must be non-empty or the mean divides by 0
-            require(sw >= 4 && sh >= 4,
-              s"video $id logical screen too small for the 4x4 grid " +
-                s"(${sw}x$sh)")
-            // pool the COMPOSITED screen, not the frame raster
-            val sum = new Array[Long](16)
-            val cnt = new Array[Long](16)
-            var y = 0
-            while (y < sh) {
-              var x = 0
-              while (x < sw) {
-                val idx = (y * 4 / sh) * 4 + (x * 4 / sw)
-                sum(idx) += canvas(y * sw + x)
-                cnt(idx) += 1
-                x += 1
-              }
-              y += 1
-            }
-            val avg = new Array[Long](16)
-            var total = 0L
-            var i = 0
-            while (i < 16) { avg(i) = sum(i) / cnt(i); total += avg(i); i += 1 }
-            i = 0
-            while (i < 16) {
-              if (avg(i) * 16L > total) votes(i) += 1
-              i += 1
-            }
-            // bits 16..30: row-major chain gradient (the imageAHash
-            // dHash extension), majority-voted like the aHash bits
-            i = 0
-            while (i < 15) {
-              if (avg(i + 1) > avg(i)) votes(16 + i) += 1
-              i += 1
-            }
-            // bits 31..45: the same chain walked in COLUMN-major order —
-            // col-major position p maps to cell (p%4)*4 + p/4
-            var p = 0
-            while (p < 15) {
-              val ca = (p % 4) * 4 + p / 4
-              val cb = ((p + 1) % 4) * 4 + (p + 1) / 4
-              if (avg(cb) > avg(ca)) votes(31 + p) += 1
-              p += 1
-            }
-            // bits 46..59: second-order row gradient (skip-one slope)
-            i = 0
-            while (i < 14) {
-              if (avg(i + 2) > avg(i)) votes(46 + i) += 1
-              i += 1
-            }
-            // bits 60..62: 2x2-cell quadrant energy comparisons
-            val qs = new Array[Long](4)
-            i = 0
-            while (i < 16) { qs((i / 8) * 2 + (i % 4) / 2) += avg(i); i += 1 }
-            if (qs(0) > qs(3)) votes(60) += 1
-            if (qs(1) > qs(2)) votes(61) += 1
-            if (qs(0) + qs(3) > qs(1) + qs(2)) votes(62) += 1
-            n += 1
+  def videoAHash(media: DataFrame): Dataset[VideoHash] =
+    perPayload(media) { (id, bytes) =>
+      val votes = new Array[Int](63)
+      var n = 0
+      foldCompositedFrames(bytes, id.toString) { (canvas, sw, sh, _) =>
+        // every 4x4 cell must be non-empty or the mean divides by 0
+        require(sw >= 4 && sh >= 4,
+          s"video $id logical screen too small for the 4x4 grid " +
+            s"(${sw}x$sh)")
+        // pool the COMPOSITED screen, not the frame raster
+        val sum = new Array[Long](16)
+        val cnt = new Array[Long](16)
+        var y = 0
+        while (y < sh) {
+          var x = 0
+          while (x < sw) {
+            val idx = (y * 4 / sh) * 4 + (x * 4 / sw)
+            sum(idx) += canvas(y * sw + x)
+            cnt(idx) += 1
+            x += 1
           }
-          var hash = 0L
-          var i = 0
-          while (i < 63) {
-            if (votes(i) * 2 > n) hash |= 1L << i
-            i += 1
-          }
-          VideoHash(id, n, hash)
+          y += 1
         }
+        val avg = new Array[Long](16)
+        var total = 0L
+        var i = 0
+        while (i < 16) { avg(i) = sum(i) / cnt(i); total += avg(i); i += 1 }
+        i = 0
+        while (i < 16) {
+          if (avg(i) * 16L > total) votes(i) += 1
+          i += 1
+        }
+        // bits 16..30: row-major chain gradient (the imageAHash
+        // dHash extension), majority-voted like the aHash bits
+        i = 0
+        while (i < 15) {
+          if (avg(i + 1) > avg(i)) votes(16 + i) += 1
+          i += 1
+        }
+        // bits 31..45: the same chain walked in COLUMN-major order —
+        // col-major position p maps to cell (p%4)*4 + p/4
+        var p = 0
+        while (p < 15) {
+          val ca = (p % 4) * 4 + p / 4
+          val cb = ((p + 1) % 4) * 4 + (p + 1) / 4
+          if (avg(cb) > avg(ca)) votes(31 + p) += 1
+          p += 1
+        }
+        // bits 46..59: second-order row gradient (skip-one slope)
+        i = 0
+        while (i < 14) {
+          if (avg(i + 2) > avg(i)) votes(46 + i) += 1
+          i += 1
+        }
+        // bits 60..62: 2x2-cell quadrant energy comparisons
+        val qs = new Array[Long](4)
+        i = 0
+        while (i < 16) { qs((i / 8) * 2 + (i % 4) / 2) += avg(i); i += 1 }
+        if (qs(0) > qs(3)) votes(60) += 1
+        if (qs(1) > qs(2)) votes(61) += 1
+        if (qs(0) + qs(3) > qs(1) + qs(2)) votes(62) += 1
+        n += 1
       }
-  }
+      var hash = 0L
+      var i = 0
+      while (i < 63) {
+        if (votes(i) * 2 > n) hash |= 1L << i
+        i += 1
+      }
+      Iterator.single(VideoHash(id, n, hash))
+    }
 
-  /** (logicalScreenWidth, logicalScreenHeight) from the GIF stream
-    * metadata, or None when the reader exposes no GIF descriptor. */
-  private def gifLogicalScreen(
-      reader: javax.imageio.ImageReader): Option[(Int, Int)] =
-    for {
-      meta <- Option(reader.getStreamMetadata)
-      tree <- scala.util.Try(meta.getAsTree("javax_imageio_gif_stream_1.0"))
-        .toOption.map(_.asInstanceOf[org.w3c.dom.Element])
-      lsd <- firstChild(tree, "LogicalScreenDescriptor")
-    } yield (lsd.getAttribute("logicalScreenWidth").toInt,
-      lsd.getAttribute("logicalScreenHeight").toInt)
+  /** THE metadata-tree lookup of the GIF stream and frame metadata: the
+    * `format` tree of `meta`, or None when the reader exposes none. */
+  private def metadataTree(meta: IIOMetadata,
+      format: String): Option[Element] =
+    Option(meta).flatMap(m => scala.util.Try(m.getAsTree(format)).toOption)
+      .map(_.asInstanceOf[Element])
+
+  /** (logicalScreenWidth, logicalScreenHeight) from the GIF stream tree,
+    * or None when there is no GIF screen descriptor. */
+  private def gifLogicalScreen(stream: Option[Element]): Option[(Int, Int)] =
+    for (lsd <- stream.flatMap(firstChild(_, "LogicalScreenDescriptor")))
+      yield (lsd.getAttribute("logicalScreenWidth").toInt,
+        lsd.getAttribute("logicalScreenHeight").toInt)
 
   /** The gray value of the GIF's declared background color — the LSD's
     * backgroundColorIndex looked up in the global color table (blue
     * channel; the corpus palettes are gray, r=g=b). 0 when the
     * container declares neither (the pre-GIF89a default). */
-  private def gifBackgroundGray(
-      reader: javax.imageio.ImageReader): Int = {
+  private def gifBackgroundGray(stream: Option[Element]): Int = {
     val bg = for {
-      meta <- Option(reader.getStreamMetadata)
-      tree <- scala.util.Try(meta.getAsTree("javax_imageio_gif_stream_1.0"))
-        .toOption.map(_.asInstanceOf[org.w3c.dom.Element])
+      tree <- stream
       lsd <- firstChild(tree, "LogicalScreenDescriptor")
       idxStr = lsd.getAttribute("backgroundColorIndex")
       if idxStr.nonEmpty
@@ -956,7 +868,7 @@ object Multimodal {
       var g = 0
       var i = 0
       while (i < entries.getLength) {
-        val e = entries.item(i).asInstanceOf[org.w3c.dom.Element]
+        val e = entries.item(i).asInstanceOf[Element]
         if (e.getAttribute("index").toInt == idx)
           g = e.getAttribute("blue").toInt
         i += 1
@@ -968,12 +880,11 @@ object Multimodal {
 
   /** Per-frame (leftPosition, topPosition, disposalMethod) from the GIF
     * image metadata; (0, 0, "none") when the container carries none. */
-  private def gifFramePlacement(reader: javax.imageio.ImageReader,
+  private def gifFramePlacement(reader: ImageReader,
       frame: Int): (Int, Int, String) = {
     val placed = for {
-      meta <- Option(reader.getImageMetadata(frame))
-      tree <- scala.util.Try(meta.getAsTree("javax_imageio_gif_image_1.0"))
-        .toOption.map(_.asInstanceOf[org.w3c.dom.Element])
+      tree <- metadataTree(reader.getImageMetadata(frame),
+        "javax_imageio_gif_image_1.0")
       desc <- firstChild(tree, "ImageDescriptor")
     } yield {
       val disposal = firstChild(tree, "GraphicControlExtension")
@@ -984,10 +895,9 @@ object Multimodal {
     placed.getOrElse((0, 0, "none"))
   }
 
-  private def firstChild(e: org.w3c.dom.Element,
-      name: String): Option[org.w3c.dom.Element] = {
+  private def firstChild(e: Element, name: String): Option[Element] = {
     val kids = e.getElementsByTagName(name)
-    if (kids.getLength > 0) Some(kids.item(0).asInstanceOf[org.w3c.dom.Element])
+    if (kids.getLength > 0) Some(kids.item(0).asInstanceOf[Element])
     else None
   }
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -82,6 +82,12 @@ object MultimodalQueries {
       Multimodal.videoPayloads(Tables(s, dir, "documents")))
       .orderBy("doc_id", "frame_idx").toDF()
 
+  // the near-dup gates' one tail: 4×16-bit-band Hamming NN capped at
+  // 1,000 per (band, value) bucket, in doc_id order
+  private def nearDup(hashes: Dataset[_]): DataFrame =
+    Multimodal.nearestByHamming(hashes.toDF(), bandBits = 16, numBands = 4,
+      maxBucket = 1000).orderBy("doc_id")
+
   // image NEAR-DUP: 63-bit perceptual hash over the decoded pixels
   // (8×4 integer average-pool aHash + chain-gradient dHash bits), then
   // a banded Hamming nearest-neighbor join (4×16-bit bands — an
@@ -93,11 +99,8 @@ object MultimodalQueries {
   // hash, bands, cap, and argmin from the closed-form pixels, so the
   // whole decode→pool→threshold→band→xor pipeline is hash-pinned.
   private def mm08(s: SparkSession, dir: String): DataFrame =
-    Multimodal.nearestByHamming(
-      Multimodal.imageAHash(
-        Multimodal.imagePayloads(Tables(s, dir, "documents"))).toDF(),
-      bandBits = 16, numBands = 4, maxBucket = 1000)
-      .orderBy("doc_id")
+    nearDup(Multimodal.imageAHash(
+      Multimodal.imagePayloads(Tables(s, dir, "documents"))))
 
   // audio NEAR-DUP — the mm08 discipline for sound: 63-bit energy-
   // envelope fingerprint over really-decoded PCM (32 time windows,
@@ -106,11 +109,8 @@ object MultimodalQueries {
   // operator (16-bit bands, capped). With mm08 and d01–d17 this closes
   // near-dup detection across text, image, and audio payloads.
   private def mm09(s: SparkSession, dir: String): DataFrame =
-    Multimodal.nearestByHamming(
-      Multimodal.audioAHash(
-        Multimodal.audioPayloads(Tables(s, dir, "documents"))).toDF(),
-      bandBits = 16, numBands = 4, maxBucket = 1000)
-      .orderBy("doc_id")
+    nearDup(Multimodal.audioAHash(
+      Multimodal.audioPayloads(Tables(s, dir, "documents"))))
 
   // video NEAR-DUP: per-frame 4x4 pooling of the really-decoded
   // (delta-composited) GIF frames expanded to a 63-bit fingerprint
@@ -122,11 +122,8 @@ object MultimodalQueries {
   // 1,024-bucket ceiling. Completes near-dup across every payload
   // modality the engine ships.
   private def mm10(s: SparkSession, dir: String): DataFrame =
-    Multimodal.nearestByHamming(
-      Multimodal.videoAHash(
-        Multimodal.videoPayloads(Tables(s, dir, "documents"))).toDF(),
-      bandBits = 16, numBands = 4, maxBucket = 1000)
-      .orderBy("doc_id")
+    nearDup(Multimodal.videoAHash(
+      Multimodal.videoPayloads(Tables(s, dir, "documents"))))
 
   // hot-bucket cap observability for the Hamming near-dup family (the
   // d08 discipline: caps drop silently so the join never stalls — the
@@ -178,11 +175,8 @@ object MultimodalQueries {
   // cross-engine-checked, the codec stays pinned by MultimodalSpec's
   // PNG-vs-JPEG Hamming-bound test.
   private def mm13(s: SparkSession, dir: String): DataFrame =
-    Multimodal.nearestByHamming(
-      Multimodal.imageAHash(
-        Multimodal.jpegPayloads(Tables(s, dir, "documents"))).toDF(),
-      bandBits = 16, numBands = 4, maxBucket = 1000)
-      .orderBy("doc_id")
+    nearDup(Multimodal.imageAHash(
+      Multimodal.jpegPayloads(Tables(s, dir, "documents"))))
 
   /** Aux fixtures for two-stage oracles (see DedupQueries.auxOutputs). */
   val auxOutputs: Map[String, (SparkSession, String) => DataFrame] = Map(

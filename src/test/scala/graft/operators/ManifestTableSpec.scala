@@ -1288,7 +1288,8 @@ class ManifestTableSpec extends SparkSpec {
     val staged = new org.apache.hadoop.fs.Path(dir, "_manifest.staged.x")
     put(target, "old\n")
     put(staged, "new\n")
-    assert(!fs.rename(staged, target))
+    assert(!fs.rename(staged, target),
+      s"${fs.getClass.getName} replaced an existing target on rename")
     assert(text(target) === "old\n")
     assert(text(staged) === "new\n")
   }
@@ -1356,6 +1357,73 @@ class ManifestTableSpec extends SparkSpec {
     h.foreach { case (v, n) =>
       assert(ManifestTable.countRows(spark, path, Some(v)) === n, s"v$v")
       assert(ManifestTable.read(spark, path, version = Some(v)).count() === n)
+    }
+  }
+
+  test("a publish that loses the rename race to another process is " +
+    "retryable: the refused manifest rename is a ConcurrentCommitException " +
+    "and the refused tag rename keeps its \"already exists\" refusal") {
+    val path = freshDir()
+    ManifestTable.create(spark, path, part(1, 100), files = 2)
+    LostPublishRaceFs.during(spark) { loseNext =>
+      loseNext()
+      val e = intercept[ManifestTable.ConcurrentCommitException] {
+        ManifestTable.append(spark, path, part(101, 150), files = 1)
+      }
+      assert(e.getMessage.contains("_manifest.2 already exists"), e.getMessage)
+      // the other writer's v2 is current now: a retry re-plans on it;
+      // its first attempt loses v3 the same way, its second commits v4
+      loseNext()
+      assert(ManifestTable.retryOnConflict(2) {
+        ManifestTable.append(spark, path, part(151, 160), files = 1)
+      } === 4L)
+      loseNext()
+      val t = intercept[IllegalArgumentException] {
+        ManifestTable.tag(spark, path, "train")
+      }
+      assert(!t.isInstanceOf[ManifestTable.ConcurrentCommitException])
+      assert(t.getMessage.contains("tag 'train' already exists"), t.getMessage)
+    }
+  }
+}
+
+/** The table's local FileSystem with scripted lost publish races: once
+  * armed, the next rename onto a `_manifest.<n>` or `_tag.<name>` target
+  * first copies the staged file there — another writer publishing the
+  * same name first — and then delegates, so the local FS sees an
+  * existing target. */
+class LostPublishRaceFs
+    extends org.apache.hadoop.fs.FilterFileSystem(LostPublishRaceFs.local) {
+  override def getScheme: String = "file"
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean = {
+    if (dst.getName.matches("""_manifest\.\d+|_tag\..+""") &&
+        LostPublishRaceFs.armed.getAndSet(false))
+      org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, getConf)
+    super.rename(src, dst)
+  }
+}
+
+object LostPublishRaceFs {
+  private val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+  @volatile private var local: org.apache.hadoop.fs.FileSystem = _
+
+  /** Run `body` with `file:` paths of the session's Hadoop configuration
+    * resolved to an uncached [[LostPublishRaceFs]] over the FileSystem
+    * they resolved to before; `body`'s argument arms the next race. */
+  def during[T](spark: org.apache.spark.sql.SparkSession)(
+      body: (() => Unit) => T): T = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    local = org.apache.hadoop.fs.FileSystem.newInstance(
+      java.net.URI.create("file:///"), conf)
+    conf.set("fs.file.impl", classOf[LostPublishRaceFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    try body(() => armed.set(true))
+    finally {
+      conf.unset("fs.file.impl")
+      conf.unset("fs.file.impl.disable.cache")
+      armed.set(false)
+      local.close()
     }
   }
 }

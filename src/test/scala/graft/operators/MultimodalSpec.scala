@@ -191,4 +191,74 @@ class MultimodalSpec extends SparkSpec {
       assert(f.s_min >= -2048 && f.s_max <= 2047)
     }
   }
+
+  /** The messages of `body`'s exception and its causes, joined — a
+    * refusal inside a Dataset action arrives wrapped in a SparkException. */
+  private def refusal(body: => Any): String = {
+    val e = intercept[Exception](body)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" <- ")
+  }
+
+  private def one(bytes: Array[Byte]) = Seq((1L, bytes)).toDF("doc_id", "payload")
+
+  test("a PNG header declaring 12000x12000 is refused by decodeImage and " +
+    "imageAHash before the raster is allocated (decode bound)") {
+    // signature + IHDR (12000x12000, 8-bit RGB) with its CRC + IEND: 57
+    // bytes that would make ImageIO.read allocate a 432 MB raster
+    def chunk(kind: String, data: Array[Byte]): Array[Byte] = {
+      val body = kind.getBytes("US-ASCII") ++ data
+      val crc = new java.util.zip.CRC32()
+      crc.update(body)
+      java.nio.ByteBuffer.allocate(4).putInt(data.length).array() ++ body ++
+        java.nio.ByteBuffer.allocate(4).putInt(crc.getValue.toInt).array()
+    }
+    val ihdr = java.nio.ByteBuffer.allocate(13).putInt(12000).putInt(12000)
+      .put(Array[Byte](8, 2, 0, 0, 0)).array()
+    val png = Array(0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A)
+      .map(_.toByte) ++ chunk("IHDR", ihdr) ++ chunk("IEND", Array.empty)
+    val direct = refusal(Multimodal.decodeImage(png))
+    assert(direct.contains("12000x12000") && direct.contains("decode bound"),
+      direct)
+    val hashed = refusal(Multimodal.imageAHash(one(png)).collect())
+    assert(hashed.contains("decode bound"), hashed)
+  }
+
+  test("every decode guard refuses its bad input with its keyword") {
+    val fmt8 = new javax.sound.sampled.AudioFormat(8000f, 8, 1, false, false)
+    val wav8 = {
+      val out = new java.io.ByteArrayOutputStream()
+      javax.sound.sampled.AudioSystem.write(
+        new javax.sound.sampled.AudioInputStream(
+          new java.io.ByteArrayInputStream(new Array[Byte](64)), fmt8, 64L),
+        javax.sound.sampled.AudioFileFormat.Type.WAVE, out)
+      out.toByteArray
+    }
+    // a 1-frame 4x4 GIF whose logical screen descriptor (bytes 6..9,
+    // little-endian) is rewritten to declare 5000x5000
+    val bigGif = Multimodal.syntheticGif(1L, 1, 4, 4).clone()
+    Seq(6, 8).foreach { at =>
+      bigGif(at) = (5000 & 0xFF).toByte
+      bigGif(at + 1) = (5000 >> 8).toByte
+    }
+    val pcm16 = "expected 16-bit LE mono PCM"
+    val guards: Seq[(String, () => Any, String)] = Seq(
+      ("decodeAudio, 8-bit WAV", () => Multimodal.decodeAudio(wav8), pcm16),
+      ("downsampleWav, 8-bit WAV",
+        () => Multimodal.downsampleWav(wav8, 2), pcm16),
+      ("audioAHash, 8-bit WAV",
+        () => Multimodal.audioAHash(one(wav8)).collect(), pcm16),
+      ("imageAHash, 7x3 PNG", () => Multimodal.imageAHash(
+        one(Multimodal.syntheticPng(1L, 7, 3))).collect(), "too small"),
+      ("audioAHash, 20-sample WAV", () => Multimodal.audioAHash(
+        one(Multimodal.syntheticWav(1L, 20))).collect(), "too short"),
+      ("decodeVideo, 5000x5000 GIF screen",
+        () => Multimodal.decodeVideo(bigGif), "16M-pixel"),
+      ("videoAHash, 5000x5000 GIF screen",
+        () => Multimodal.videoAHash(one(bigGif)).collect(), "16M-pixel"))
+    guards.foreach { case (what, run, keyword) =>
+      val msg = refusal(run())
+      assert(msg.contains(keyword), s"$what: $msg")
+    }
+  }
 }
