@@ -7,14 +7,21 @@ import graft.operators.SalesSink
 /** S7 backfill CLI — Spark equivalent of the reference's guarded
   * partitioned delete (`database_service.py:415-475`): remove one
   * (location_id, month) slice from the sales table, optionally loading a
-  * replacement, via dynamic partition overwrite (only the affected
-  * location partition is rewritten).
+  * replacement. The delete drops the slice's partition directory and the
+  * replacement is appended, so no other partition is rewritten.
   *
   * Usage: runMain graft.Backfill <tablePath> <locationId> <month>
   *          [replacementParquet] [--confirm]
   *
   * Without --confirm it only counts matching rows (the reference's
-  * count-first guard) and makes no change.
+  * count-first guard, `database_service.py:443-450`) and makes no
+  * change. Every count it reports is metadata-only
+  * ([[SalesSink.sliceRows]]): the row counts in the parquet footers of
+  * the slice directory's files, read on the driver, so the guard
+  * launches no Spark job. That is the number a scan's `count()` returns:
+  * a filter on both partition columns reads exactly that directory's
+  * data files, and a parquet file's rows are the rows its row groups
+  * record.
   */
 object Backfill {
 
@@ -24,10 +31,7 @@ object Backfill {
       month: String, replacementPath: Option[String],
       confirm: Boolean): String = {
     require(month.matches("""\d{4}-\d{2}"""), s"month must be yyyy-MM, got: $month")
-    import org.apache.spark.sql.functions.col
-    def sliceCount() = spark.read.parquet(path)
-      .filter(col("location_id") === locationId && col("month") === month)
-      .count()
+    def sliceCount() = SalesSink.sliceRows(spark, path, locationId, month)
     val matching = sliceCount()
     if (!confirm)
       s"""{"action":"dry-run","matching_rows":$matching,"hint":"pass --confirm to delete"}"""

@@ -1324,17 +1324,11 @@ object ManifestTable {
     * per file — never a data scan. */
   private def writtenRows(spark: SparkSession, path: String,
       entries: Seq[ManifestEntry]): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val base = new Path(path)
-    entries.map { e =>
-      e.stats.get(RowsStat).map(_._1).getOrElse {
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            resolveFile(base, e.path), conf))
-        try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-        finally reader.close()
-      }
-    }.sum
+    val (stated, unstated) = entries.partitionMap(e =>
+      e.stats.get(RowsStat).map(_._1).toLeft(resolveFile(base, e.path)))
+    stated.sum + ParquetFooters.rowCounts(unstated,
+      spark.sparkContext.hadoopConfiguration).sum
   }
 
   /** Signals [[footerStats]] to fall back to the scan-based stats pass. */
@@ -1405,38 +1399,35 @@ object ManifestTable {
   private def footerStatsOfFile(dir: Path, n: String,
       conf: org.apache.hadoop.conf.Configuration,
       statsCols: Seq[String]): (String, String) = {
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new Path(dir, n), conf))
-    val (rows, ranges) = try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val nRows = blocks.map(_.getRowCount).sum
-      val envelopes = statsCols.map { c =>
-        var lo = Long.MaxValue
-        var hi = Long.MinValue
-        var seen = false
-        blocks.foreach { b =>
-          val chunk = b.getColumns.asScala
-            .find(_.getPath.toDotString == c)
-            .getOrElse(throw FooterBail)
-          val st = chunk.getStatistics
-          if (st == null) throw FooterBail
-          if (st.hasNonNullValue) (st.genericGetMin, st.genericGetMax) match {
-            case (mn: java.lang.Number, mx: java.lang.Number) =>
-              lo = math.min(lo, mn.longValue)
-              hi = math.max(hi, mx.longValue)
-              seen = true
-            case _ => throw FooterBail
-          } else if (!st.isNumNullsSet ||
-            st.getNumNulls != chunk.getValueCount)
-            throw FooterBail // stats absent, not all-NULL: untrustworthy
+    val (rows, ranges) =
+      ParquetFooters.withFooter(new Path(dir, n), conf) { footer =>
+        val blocks = footer.getBlocks.asScala.toSeq
+        val envelopes = statsCols.map { c =>
+          var lo = Long.MaxValue
+          var hi = Long.MinValue
+          var seen = false
+          blocks.foreach { b =>
+            val chunk = b.getColumns.asScala
+              .find(_.getPath.toDotString == c)
+              .getOrElse(throw FooterBail)
+            val st = chunk.getStatistics
+            if (st == null) throw FooterBail
+            if (st.hasNonNullValue) (st.genericGetMin, st.genericGetMax) match {
+              case (mn: java.lang.Number, mx: java.lang.Number) =>
+                lo = math.min(lo, mn.longValue)
+                hi = math.max(hi, mx.longValue)
+                seen = true
+              case _ => throw FooterBail
+            } else if (!st.isNumNullsSet ||
+              st.getNumNulls != chunk.getValueCount)
+              throw FooterBail // stats absent, not all-NULL: untrustworthy
+          }
+          // all-NULL column in this file: no envelope — omit the stat,
+          // the reader keeps the file (conservative, as the scan path)
+          if (seen) Some(s"$c:$lo:$hi") else None
         }
-        // all-NULL column in this file: no envelope — omit the stat,
-        // the reader keeps the file (conservative, as the scan path)
-        if (seen) Some(s"$c:$lo:$hi") else None
+        (ParquetFooters.rowCount(footer), envelopes)
       }
-      (nRows, envelopes)
-    } finally reader.close()
     val parts = ranges.flatten :+ s"$RowsStat:$rows:$rows"
     n -> parts.mkString("|", "|", "")
   }

@@ -1,7 +1,10 @@
 package graft.operators
 
+import java.io.FileNotFoundException
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 
 /** Sinks for the sales fact table.
   *
@@ -27,15 +30,61 @@ object SalesSink {
       mode: SaveMode = SaveMode.Append): Unit =
     sales.write.mode(mode).partitionBy("location_id", "month").parquet(path)
 
+  /** The (location_id, month) slice's directory: where
+    * [[writePartitioned]] puts the slice's rows, with the month escaped
+    * as Spark's writer escapes partition values. */
+  def slicePath(path: String, locationId: Int, month: String): Path =
+    new Path(new Path(path), s"location_id=$locationId/" +
+      ExternalCatalogUtils.getPartitionPathString("month", month))
+
   /** S7 backfill: drop the (location_id, month) slice — a partition
     * directory delete — then append the replacement, if any. */
   def overwriteMonth(spark: SparkSession, path: String, locationId: Int,
       month: String, replacement: Option[DataFrame] = None): Unit = {
-    val slice = new Path(s"$path/location_id=$locationId/month=$month")
+    val slice = slicePath(path, locationId, month)
     val fs = slice.getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(slice, true)
     replacement.foreach(writePartitioned(_, path, SaveMode.Append))
   }
+
+  /** Rows in the (location_id, month) slice, from metadata alone: the
+    * parquet footers of the files in the directory [[overwriteMonth]]
+    * drops, read in parallel on the driver. No Spark job runs.
+    *
+    * It equals `spark.read.parquet(path).filter(location_id, month)
+    * .count()`: that scan reads exactly the slice directory's data
+    * files, and a parquet file's row count is the sum of the row counts
+    * its footer records per row group. Files Spark's file index leaves
+    * out are left out here too ([[skippedByScan]]). A missing slice
+    * holds 0 rows; a missing table path, or a directory inside the
+    * slice (which the scan would read as another partition level), is
+    * refused rather than guessed at. */
+  def sliceRows(spark: SparkSession, path: String, locationId: Int,
+      month: String): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    val table = new Path(path)
+    val fs = table.getFileSystem(conf)
+    if (!fs.exists(table))
+      throw new FileNotFoundException(s"sales table path does not exist: $path")
+    val slice = slicePath(path, locationId, month)
+    val listed =
+      try fs.listStatus(slice).toSeq
+      catch { case _: FileNotFoundException => Nil }
+    val files = listed.filterNot(f => skippedByScan(f.getPath.getName))
+    files.find(_.isDirectory).foreach { d =>
+      throw new IllegalStateException(
+        s"slice $slice holds a directory, ${d.getPath.getName}; " +
+          "sliceRows counts only the data files of a one-level slice")
+    }
+    ParquetFooters.rowCounts(files.map(_.getPath), conf).sum
+  }
+
+  /** The names Spark's file index leaves out of a scan: `_` and `.`
+    * prefixes (job markers, checksums, staging; a `_` name holding `=`
+    * is a partition directory) and in-flight `._COPYING_` uploads. */
+  private def skippedByScan(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) ||
+      name.startsWith(".") || name.endsWith("._COPYING_")
 
   /** Bucketed managed table: rows hash-bucketed (and sorted) by the join
     * key so repeated joins/aggregations on that key skip the shuffle

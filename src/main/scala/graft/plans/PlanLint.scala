@@ -22,6 +22,10 @@ import org.apache.spark.sql.execution.ExplainMode
   *  - `no-codegen`: no WholeStageCodegen stage at all — the hot path
   *    is interpreted (typical cause: a UDF or a non-codegen expression
   *    in every projection).
+  *  - `single-partition-window`: a Window whose input arrives through
+  *    `Exchange SinglePartition` — a window with ORDER BY and no
+  *    PARTITION BY, which Spark runs on one task whatever the input size
+  *    (and logs "No Partition Defined for Window operation!").
   */
 object PlanLint {
 
@@ -86,6 +90,28 @@ object PlanLint {
         "no WholeStageCodegen stage in the plan — the hot path is " +
           "interpreted; replace UDFs/non-codegen expressions with " +
           "built-ins or a doGenCode Expression")
+    // single-partition-window: follow each Window's input down its
+    // chain of first children (the next node in DFS order, when deeper)
+    // past the Sort that window planning inserts. A rank-limited window
+    // reads a WindowGroupLimit or TakeOrderedAndProject instead: its
+    // input is limited before the exchange, so it is not flagged.
+    def input(i: Int): Option[(String, Int, Int)] =
+      Iterator.from(i + 1)
+        .takeWhile(j => j < headerNodes.size &&
+          headerNodes(j)._3 > headerNodes(j - 1)._3)
+        .map(headerNodes)
+        .find(_._1 != "Sort")
+    val onePartition = headerNodes.zipWithIndex.collect {
+      case ((name, id, _), i) if name == "Window" && input(i).exists {
+          case (in, inId, _) => in == "Exchange" &&
+            details.get(inId).exists(_.contains("Arguments: SinglePartition"))
+        } => id
+    }
+    if (onePartition.nonEmpty)
+      out += Finding("single-partition-window",
+        s"Window(s) ${onePartition.sorted.mkString(", ")} read their input " +
+          "through Exchange SinglePartition — a window with ORDER BY and " +
+          "no PARTITION BY runs on one task; partition it or bound its input")
     out.result()
   }
 

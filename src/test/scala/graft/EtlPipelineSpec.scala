@@ -2,7 +2,6 @@ package graft
 
 import java.time.LocalDate
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.operators.SalesEtl
@@ -44,27 +43,14 @@ class EtlPipelineSpec extends SparkSpec {
       LocalDate.of(2025, 11, 1), LocalDate.of(2025, 11, 30))
     val out = tempDir("etl-obs").toString
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+    var stats: EtlPipeline.EtlStats = null
+    val jobs = jobsDuring {
+      stats = EtlPipeline.runPipeline(located, locations, lo, hi, out)
     }
-    spark.sparkContext.addSparkListener(listener)
-    val stats =
-      try {
-        val s = EtlPipeline.runPipeline(located, locations, lo, hi, out)
-        // listener delivery is async; poll until the count is stable
-        var last = -1
-        var tries = 0
-        while (jobs.get() != last && tries < 20) {
-          last = jobs.get(); Thread.sleep(100); tries += 1
-        }
-        s
-      } finally spark.sparkContext.removeSparkListener(listener)
 
     // the whole run: one write action + the broadcast build (and nothing
     // proportional to the number of stats)
-    assert(jobs.get() <= 3, s"expected <=3 jobs, saw ${jobs.get()}")
+    assert(jobs <= 3, s"expected <=3 jobs, saw $jobs")
 
     // independent recomputation, old multi-scan shape
     val windowed = located.filter(

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 import org.apache.commons.io.FileUtils
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.QueryExecution
@@ -50,13 +51,49 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       body
       spark.sql(s"SELECT '$marker'").collect()
-      val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
-      while (!seen.asScala.exists(_.toString.contains(marker))) {
-        assert(System.nanoTime < deadline, "listener never saw the marker")
-        Thread.sleep(20)
-      }
+      awaitMarker(seen.asScala.exists(_.toString.contains(marker)))
     } finally spark.listenerManager.unregister(listener)
     seen.asScala.toSeq.filter(_.toString.contains(tag))
+  }
+
+  /** The number of Spark jobs `body` started. Marker jobs before and
+    * after `body` bound the count on the listener bus, as in [[plansOf]]:
+    * events arrive in order, so the jobs seen between the two markers
+    * are exactly the jobs started between them. */
+  protected def jobsDuring(body: => Unit): Int = {
+    val id = java.util.UUID.randomUUID
+    val (open, close) = (s"jobs-open-$id", s"jobs-close-$id")
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        started.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    def markerJob(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(0), 1).count()
+      finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      markerJob(open)
+      body
+      markerJob(close)
+      awaitMarker(started.contains(close))
+    } finally sc.removeSparkListener(listener)
+    val seen = started.asScala.toSeq
+    seen.indexOf(close) - seen.indexOf(open) - 1
+  }
+
+  /** Waits up to 60 s for a listener to have seen a marker. */
+  private def awaitMarker(seen: => Boolean): Unit = {
+    val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
+    while (!seen) {
+      assert(System.nanoTime < deadline, "listener never saw the marker")
+      Thread.sleep(20)
+    }
   }
 
   override def afterAll(): Unit = {

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
@@ -63,6 +64,89 @@ class SalesSinkSpec extends SparkSpec {
     val loc1 = spark.read.parquet(dir).filter($"location_id" === 1)
       .select("item_name").as[String].collect().toSet
     assert(loc1 === Set("Latte", "Cortado"))
+  }
+
+  // --- metadata-only slice count (the backfill guard) ---
+
+  private def scanCount(dir: String, loc: Int, month: String): Long =
+    spark.read.parquet(dir)
+      .filter($"location_id" === loc && $"month" === month).count()
+
+  /** Three appends of two files a slice; 4 KB row groups make several
+    * row groups a file. */
+  private def multiFileTable(prefix: String): String = {
+    val dir = tempDir(prefix).toString
+    (0 until 3).foreach { i =>
+      spark.range(0, 3000 + i, 1, 2)
+        .select(concat(lit("item-padded-to-fill-row-groups-"),
+            col("id").cast("string")).as("item_name"),
+          col("id").as("qty"), lit("2025-11").as("month"),
+          (col("id") % 2 + 1).cast("int").as("location_id"))
+        .write.mode(SaveMode.Append).option("parquet.block.size", 4096)
+        .partitionBy("location_id", "month").parquet(dir)
+    }
+    dir
+  }
+
+  private def sliceFiles(dir: String): (FileSystem, Seq[Path]) = {
+    val slice = SalesSink.slicePath(dir, 1, "2025-11")
+    val fs = slice.getFileSystem(spark.sessionState.newHadoopConf())
+    (fs, fs.listStatus(slice).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).toSeq)
+  }
+
+  test("sliceRows equals the scan count over several files of several " +
+    "row groups") {
+    val dir = multiFileTable("slice_rows")
+    val (fs, parts) = sliceFiles(dir)
+    assert(parts.size === 6)
+    assert(parts.exists(p => ParquetFooters.withFooter(p, fs.getConf)(
+      _.getBlocks.size) > 1), "the fixture must hold a multi-row-group file")
+    for (loc <- Seq(1, 2))
+      assert(SalesSink.sliceRows(spark, dir, loc, "2025-11") ===
+        scanCount(dir, loc, "2025-11"))
+    assert(SalesSink.sliceRows(spark, dir, 1, "2025-11") === 4502)
+  }
+
+  test("sliceRows skips the names the scan skips: _SUCCESS, .crc, " +
+    "._COPYING_") {
+    val dir = multiFileTable("slice_hidden")
+    val before = SalesSink.sliceRows(spark, dir, 1, "2025-11")
+    val (fs, parts) = sliceFiles(dir)
+    val slice = parts.head.getParent
+    fs.create(new Path(slice, "_SUCCESS")).close()
+    val crc = fs.create(new Path(slice, ".part.crc"))
+    try crc.write("not parquet".getBytes) finally crc.close()
+    // a whole parquet file mid-upload: counted, it would add its rows
+    FileUtil.copy(fs, parts.head, fs,
+      new Path(slice, "x._COPYING_"), false,
+      fs.getConf)
+    assert(SalesSink.sliceRows(spark, dir, 1, "2025-11") === before)
+    assert(scanCount(dir, 1, "2025-11") === before)
+  }
+
+  test("sliceRows: a missing slice counts 0; a missing table refuses") {
+    val dir = tempDir("slice_missing").toString
+    SalesSink.writePartitioned(sampleSales, dir, SaveMode.Overwrite)
+    assert(SalesSink.sliceRows(spark, dir, 1, "2026-01") === 0)
+    assert(SalesSink.sliceRows(spark, dir, 9, "2025-11") === 0)
+    val gone = s"$dir/no_such_table"
+    val e = intercept[java.io.FileNotFoundException] {
+      SalesSink.sliceRows(spark, gone, 1, "2025-11")
+    }
+    assert(e.getMessage.contains(gone))
+  }
+
+  test("sliceRows refuses a directory inside the slice") {
+    val dir = tempDir("slice_nested").toString
+    SalesSink.writePartitioned(sampleSales, dir, SaveMode.Overwrite)
+    val slice = SalesSink.slicePath(dir, 1, "2025-11")
+    val fs = slice.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.mkdirs(new Path(slice, "nested"))
+    val e = intercept[IllegalStateException] {
+      SalesSink.sliceRows(spark, dir, 1, "2025-11")
+    }
+    assert(e.getMessage.contains("nested"))
   }
 
   // --- JDBC retry (reference database_service.py:241-245,304-324) ---

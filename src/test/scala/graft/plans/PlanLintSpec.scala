@@ -46,6 +46,24 @@ class PlanLintSpec extends SparkSpec {
     assert(!rules(scan.filter(col("k") === 3)).contains("unpushed-filter"))
   }
 
+  test("an ORDER BY-only window flags single-partition-window; a " +
+      "partitioned window does not") {
+    import org.apache.spark.sql.expressions.Window
+    val df = spark.range(1000).select(col("id"), (col("id") % 7).as("k"))
+    assert(rules(df.withColumn("rn", row_number().over(
+      Window.orderBy("id")))).contains("single-partition-window"))
+    // numbering a top-k (the SkewReport/AssocRules shape) or a
+    // rank-limited window: k rows reach the Window, not the input
+    assert(!rules(df.orderBy("id").limit(3).withColumn("rn",
+      row_number().over(Window.orderBy("id"))))
+      .contains("single-partition-window"))
+    assert(!rules(df.withColumn("r", rank().over(Window.orderBy("k")))
+      .filter(col("r") <= 3)).contains("single-partition-window"))
+    assert(!rules(df.withColumn("rn", row_number().over(
+      Window.partitionBy("k").orderBy("id"))))
+      .contains("single-partition-window"))
+  }
+
   test("filtered scan joined to an unfiltered dimension scan is clean") {
     // precision: the dimension scan legitimately pushes nothing (no
     // predicate on it); the fact-side Filter must not be blamed for it
@@ -232,6 +250,14 @@ class PlanLintSpec extends SparkSpec {
         // the pruning already happened driver-side in the manifest
         "p30_shallow_clone"),
       "no-codegen" -> Set.empty,
+      // ORDER BY-only windows, each run on one task: Kaplan-Meier risk
+      // sets, the mSPRT running sums, the skyline prefix max, the
+      // histogram cumulative counts and the changepoint prefix sums.
+      // ROADMAP "Carried over" lists their sites; each needs its own
+      // oracle-checked change
+      "single-partition-window" -> Set("f13_kaplan_meier", "f26_msprt",
+        "q41_skyline", "q43_histo_quantile", "q48_histo_merge",
+        "q59_changepoint"),
     )
     val dir = "/root/testdata/sf0.001"
     val broken = Seq.newBuilder[String]
