@@ -50,7 +50,7 @@ object Bench {
         n = 3, numHashes = 64, bands = 32, threshold = 0.5).count()
       operators.Dedup.winnowOverlapPairs(warm, "doc_id", "text").count()
       // The iterative-graph family compiles a codegen/JIT surface
-      // (K chained join+agg rounds, persist + localCheckpoint plumbing)
+      // (K chained join+agg rounds, GraphLoop pins and round cuts)
       // the dedup warm-up never touches. In a full sweep ~50 earlier
       // gates warm it for free; in SMALL ISOLATED BATCHES — the floors
       // discipline — the g-family gates paid it themselves, which is

@@ -62,6 +62,9 @@ object GraftSession {
     .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
     .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+    // TIMESTAMP(NANOS) parquet columns (the events table's ts) read as
+    // LongType nanos instead of failing; Tables truncates them to µs
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   /** Local-mode builder (tests, CLIs, single-node runs). */
   def builder(appName: String = "graft"): SparkSession.Builder = {

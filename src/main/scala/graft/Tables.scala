@@ -18,9 +18,9 @@ object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") {
       // events.ts is TIMESTAMP(NANOS) parquet, which Spark 4 rejects by
-      // default. Read nanos as LongType and truncate to the microsecond
-      // (matching DuckDB's CAST(ts_ns AS TIMESTAMP) truncation).
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // default; GraftSession.configure reads nanos as LongType, and
+      // this truncates them to the microsecond (matching DuckDB's
+      // CAST(ts_ns AS TIMESTAMP) truncation).
       val df = spark.read.parquet(s"$dir/$name.parquet")
       if (df.schema("ts").dataType == LongType)
         df.withColumn("ts", timestamp_micros(expr("ts div 1000")))

@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions._
   * Per round: one equi-join of the current frontier against the
   * src-partitioned edge list, one distinct, one anti-join against the
   * visited set — all hash-partitioned on node keys, no global
-  * ordering anywhere. The edge list is repartitioned by src and
-  * materialized ONCE (every round's join reuses the layout — at
-  * 100 TB, pre-bucket by src and the per-round shuffle is frontier-
-  * sized only). Frontier and visited frames are node-sized; lineage is
+  * ordering anywhere. The edge list is materialized ONCE
+  * ([[GraphLoop.pin]]), so no round re-runs its upstream (at 100 TB,
+  * pre-bucket it by src so the per-round shuffle is frontier-sized
+  * only). Frontier and visited frames are node-sized; lineage is
   * cut per round (localCheckpoint), the same discipline as
   * [[ConnectedComponents]] / [[PageRank]]. Rounds are bounded by
   * `maxHops`, with early exit on an empty frontier (the isEmpty probe
@@ -33,9 +33,7 @@ object Bfs {
     * both directions for an undirected graph. */
   def layers(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src"))
-      .localCheckpoint()
+    val e = GraphLoop.pin(edges, "src")
     var visited = seeds.select(col("node")).distinct()
       .withColumn("hop", lit(0))
       .localCheckpoint()

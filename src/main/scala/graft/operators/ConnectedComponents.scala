@@ -21,9 +21,10 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   * Scale shape: each round is two shuffled joins + an aggregation, all
   * keyed equi-joins (no cross products); `localCheckpoint` cuts the
   * lineage so plan size stays constant across rounds. Edges are
-  * symmetrized once and cached. This is the DataFrame-native analogue
-  * of the large-star/small-star MapReduce formulation (Kiveris et al.,
-  * "Connected Components in MapReduce and Beyond", SoCC'14).
+  * symmetrized once and materialized ([[GraphLoop.pin]]). This is the
+  * DataFrame-native analogue of the large-star/small-star MapReduce
+  * formulation (Kiveris et al., "Connected Components in MapReduce and
+  * Beyond", SoCC'14).
   */
 object ConnectedComponents {
 
@@ -56,21 +57,21 @@ object ConnectedComponents {
       pairs.unpersist()
       return out
     }
-    val sym = pairs
+    val sym = GraphLoop.pin(pairs
       .union(pairs.select(col("b").as("a"), col("a").as("b")))
       .distinct()
-      .persist()
+      .select(col("a").as("src"), col("b").as("dst")), "dst")
 
-    var comp = sym.select(col("a").as("id")).distinct()
+    var comp = sym.select(col("src").as("id")).distinct()
       .withColumn("comp", col("id"))
       .localCheckpoint(true)
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIter) {
       // min over neighbor labels
-      val nbrMin = sym.join(comp.withColumnRenamed("id", "b"), "b")
-        .groupBy("a").agg(min("comp").as("ncomp"))
-        .withColumnRenamed("a", "id")
+      val nbrMin = sym.join(comp.withColumnRenamed("id", "dst"), "dst")
+        .groupBy("src").agg(min("comp").as("ncomp"))
+        .withColumnRenamed("src", "id")
       val lowered = comp.join(nbrMin, Seq("id"), "left")
         .select(col("id"), col("comp").as("old"),
           least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp"))
@@ -89,7 +90,6 @@ object ConnectedComponents {
       comp = jumped.drop("old")
       iter += 1
     }
-    sym.unpersist()
     pairs.unpersist()
     comp
   }

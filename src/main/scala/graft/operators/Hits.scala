@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   * positive scalings of the same sums).
   *
   * Scale shape, per iteration: two equi-joins of the edge frame
-  * against node-sized score frames (edge frame repartitioned once per
-  * join side and persisted — only the score side moves), two sum
+  * against node-sized score frames (edge frame materialized once per
+  * join side by [[GraphLoop.pin]]), two sum
   * shuffles, and two 1-row max riders as broadcast cross joins. Scores
   * never touch the driver; lineage is cut per iteration like
   * PageRank's.
@@ -38,20 +38,14 @@ object Hits {
     * src node a hub score. Initial hub = [[One]] for every src. */
   def scores(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "at least one iteration")
-    // TWO pinned edge layouts (the PageRank persisted-edge discipline,
-    // doubled because HITS probes the edge frame from both ends): the
-    // authority step equi-joins on src, the hub step on dst — each
-    // persisted frame keeps its hash partitioning visible to Catalyst,
-    // so per iteration only the node-sized score side shuffles and the
-    // edge frame never re-exchanges (the naive shape reshuffled the
-    // edge list twice per round: measured 11.2 s vs 2.9 s at sf0.1).
-    val e = edges.select(col("src"), col("dst"))
-    val eSrc = e.repartition(col("src")).persist()
-    eSrc.count()
-    // the dst layout derives from the CACHED src layout — one upstream
-    // computation of the edge frame, two pinned partitionings
-    val eDst = eSrc.repartition(col("dst")).persist()
-    eDst.count()
+    // TWO pinned edge frames (PageRank's pinned edge frame, doubled
+    // because HITS probes the edge frame from both ends): the
+    // authority step equi-joins on src, the hub step on dst (the
+    // naive shape measured 11.2 s vs 2.9 s at sf0.1). The dst pin
+    // derives from the PINNED src frame — one upstream computation of
+    // the edge frame.
+    val eSrc = GraphLoop.pin(edges, "src")
+    val eDst = GraphLoop.pin(eSrc, "dst")
     def normalized(raw: DataFrame): DataFrame = {
       // materialize the NODE-SIZED sum before the max rider: the rider
       // and the normalize both read `raw`, and un-materialized both
@@ -81,7 +75,6 @@ object Hits {
       // materialized the node-sized sums, and what rides above them is
       // a 1-row broadcast + a projection — lineage stays shallow
     }
-    eSrc.unpersist(); eDst.unpersist()
     auth.select(lit("auth").as("side"), col("n").as("node"),
         col("s").as("score"))
       .unionByName(hub.select(lit("hub").as("side"), col("n").as("node"),

@@ -21,9 +21,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape per round: one degree aggregate keyed src + one
   * semi-join of the edge frame against the survivor set on EACH
-  * endpoint — all hash-partitioned equi-joins on node keys, edge frame
-  * lineage cut per round (localCheckpoint), survivor frame node-sized.
-  * Nothing global, nothing driver-side.
+  * endpoint — all hash-partitioned equi-joins on node keys. The edge
+  * frame is materialized once ([[GraphLoop.pin]]) and its lineage is
+  * cut every round ([[GraphLoop.rounds]]); the survivor frame is
+  * node-sized. Nothing global, nothing driver-side.
   */
 object KCore {
 
@@ -33,25 +34,21 @@ object KCore {
     * of the symmetrized frame). */
   def peel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, "k and rounds must be >= 1")
-    var e = edges.select(col("src"), col("dst")).localCheckpoint()
-    var deg = e.groupBy(col("src").as("node"))
+    def deg(e: DataFrame) = e.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"))
-    for (_ <- 0 until rounds) {
+    val peeled = GraphLoop.rounds(GraphLoop.pin(edges, "src"), rounds,
+        every = 1, aqeOff = false) { e =>
       // keep is node-sized and referenced by BOTH endpoint semi-joins;
       // left lazy, each reference re-runs the full edge-frame degree
       // aggregate (measured: the r6 shape spent ~2/3 of g04's sf1x
       // wall on those re-aggregations — 57 s → ~20 s with the pin)
-      val keep = deg.filter(col("deg") >= k).select("node")
+      val keep = deg(e).filter(col("deg") >= k).select("node")
         .localCheckpoint()
-      e = e
-        .join(keep.withColumnRenamed("node", "src"), Seq("src"),
+      e.join(keep.withColumnRenamed("node", "src"), Seq("src"),
           "left_semi")
         .join(keep.withColumnRenamed("node", "dst"), Seq("dst"),
           "left_semi")
-        .localCheckpoint()
-      deg = e.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("deg"))
     }
-    deg.filter(col("deg") >= k)
+    deg(peeled).filter(col("deg") >= k)
   }
 }

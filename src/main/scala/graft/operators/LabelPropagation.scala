@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * node-sized label frame on src, one (dst, label) count aggregate,
   * and one per-node argmax — a hash-agg max_by over the (count,
   * -label) key, partially aggregated map-side, never a global sort.
-  * The edge frame is materialized once (localCheckpoint); per-round
+  * The edge frame is materialized once ([[GraphLoop.pin]]); per-round
   * state is node-sized. Nothing driver-side.
   */
 object LabelPropagation {
@@ -34,15 +34,15 @@ object LabelPropagation {
     * dst rows it appears in as src's partner. */
   def propagate(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
-    // pin the src hash layout BEFORE the checkpoint: LogicalRDD keeps
-    // the physical partitioning visible to Catalyst, so every round's
-    // join reuses the edge layout and only the node-sized label frame
-    // moves (unpinned, both sides re-shuffled every round)
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).localCheckpoint()
-    var labels = e.select(col("src").as("node")).distinct()
+    val e = GraphLoop.pin(edges, "src")
+    val init = e.select(col("src").as("node")).distinct()
       .withColumn("lbl", col("node"))
-    for (r <- 1 to rounds) {
+    // PageRank's cadence, re-A/B'd here (g05, sf0.1, min-of-4 warm):
+    // every round 2.03 s vs every 2nd 2.02 s — a measured TIE at the
+    // gate's round count (the checkpoint job and one lazy re-derive
+    // cost about the same on a node-sized frame). Kept at every-2nd
+    // for family consistency with PageRank.
+    GraphLoop.rounds(init, rounds, every = 2, aqeOff = false) { labels =>
       val counted = e
         .join(labels.withColumnRenamed("node", "src"), Seq("src"))
         .groupBy(col("dst").as("node"), col("lbl"))
@@ -55,18 +55,9 @@ object LabelPropagation {
       // Only the count (always a long) is negated, so the tie-break
       // stays type-generic: string labels order lexically, and no
       // label value is ever negated (no Long.MinValue overflow).
-      labels = counted.groupBy("node")
+      counted.groupBy("node")
         .agg(min_by(col("lbl"), struct(-col("c"), col("lbl"))).as("lbl"))
-      // PageRank's cadence, re-A/B'd here (g05, sf0.1, min-of-4 warm):
-      // every round 2.03 s vs every 2nd 2.02 s — a measured TIE at the
-      // gate's round count (the checkpoint job and one lazy re-derive
-      // cost about the same on a node-sized frame). Kept at every-2nd
-      // for family consistency with PageRank/personalizedRanks; the
-      // final round always materializes so callers get a lineage-free
-      // node-sized frame.
-      if (r % 2 == 0 || r == rounds) labels = labels.localCheckpoint()
     }
-    labels
   }
 
   /** Community rollup of [[propagate]]: (community, size, min_node,

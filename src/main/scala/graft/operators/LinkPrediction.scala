@@ -45,8 +45,7 @@ object LinkPrediction {
   def adamicAdar(edges: DataFrame, maxDegree: Int = 0): DataFrame = {
     // read 3×: degrees, both adjacency directions, the final anti-join
     val e0 = edges.select(col("a"), col("b")).localCheckpoint()
-    val deg = e0.select(explode(array(col("a"), col("b"))).as("n"))
-      .groupBy("n").agg(count(lit(1)).as("deg"))
+    val deg = Triangles.degrees(e0)
     val witnesses =
       if (maxDegree > 0) deg.filter(col("deg") <= maxDegree) else deg
     // quantize the ln term once per witness node, BEFORE the wedge

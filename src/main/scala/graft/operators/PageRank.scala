@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** PageRank (Brin & Page 1998) in EXACT fixed-point arithmetic — the
@@ -20,25 +21,23 @@ import org.apache.spark.sql.functions._
   * reproducibility.
   *
   * Scale shape: per iteration, one equi-join of the edge list against
-  * the node-sized rank frame (both hash-partitioned on the join key —
-  * at 100 TB pre-bucket the edge list by src and the join never
-  * re-shuffles it) and one sum shuffle keyed dst. Ranks are a
-  * node-sized frame, never driver-side; lineage is cut per iteration
-  * (localCheckpoint) exactly like [[ConnectedComponents]]' pointer
-  * jumping. Dangling nodes contribute nothing (standard simplification;
-  * symmetrize the edge list and none exist).
+  * the node-sized rank frame (the edge list and its degrees are
+  * materialized once by [[GraphLoop.pin]]; at 100 TB pre-bucket it by
+  * src) and one sum shuffle keyed dst. Ranks are
+  * a node-sized frame, never driver-side. Dangling nodes contribute
+  * nothing (standard simplification; symmetrize the edge list and none
+  * exist).
   *
-  * AQE is DISABLED inside the iteration loop ([[IterativeLoop]] — the
-  * ONLY operator where the A/B favored it; the other iterative loops
-  * measured worse and keep AQE, see that scaladoc): the layouts are pinned
-  * by construction — the persisted edge frame keeps its src hash
-  * partitioning, the rank frame exits each round hash-partitioned on
-  * node — so adaptive re-planning has nothing to improve and its
-  * per-stage materialize/replan overhead is pure constant on the K
-  * small fixed-shape rounds (r14 A/B at sf0.1, min-of-4, stable warm
-  * neighbor: g01 3.99 s → 2.86 s). The every-2nd-round checkpoint
-  * cadence survives AQE-off on its own (every-3rd re-measured 4.5 s —
-  * the r13 cliff was lineage depth, not only AQE replanning).
+  * Both variants run one loop on [[GraphLoop.rounds]]; only the initial
+  * frame and the teleport term differ. The rank frame is materialized
+  * every SECOND round. The cadence is measured (sf0.1, min-of-4 warm
+  * runs): every round 4.3 s, every 2nd 3.2 s, every 3rd 9.2 s — one
+  * lazy round costs less than its checkpoint job, two lazy rounds tip
+  * AQE into replanning/re-shuffling the doubled tree (the fully-lazy
+  * DAG was 3x slower still). The cadence survives AQE-off on its own
+  * (every-3rd re-measured 4.5 s — the r13 cliff was lineage depth, not
+  * only AQE replanning). AQE is off in the rounds unless the caller
+  * measured otherwise (see [[GraphLoop]]).
   */
 object PageRank {
 
@@ -62,67 +61,12 @@ object PageRank {
     * lower the fixed-point scale (e.g. 10⁹) — the oracle replays
     * whatever scale is chosen. */
   def ranks(edges: DataFrame, iters: Int,
-      aqeOff: Boolean = true, dedupEdges: Boolean = false): DataFrame = {
-    require(iters >= 1, "at least one iteration")
-    // The edge list with its source degree riding along — every
-    // iteration equi-joins this frame, nothing else.
-    val e = edges.select(col("src"), col("dst"))
-    // degree via a window over the SAME src hash layout the iteration
-    // join needs — one exchange builds both, where the groupBy+self-join
-    // form paid two extra shuffles of the edge list (measured ~0.9 s of
-    // g01's sf0.1 constant)
-    //
-    // dedupEdges folds the caller's edge-dedup into that same exchange:
-    // dropDuplicates AFTER repartition(src) runs partition-local
-    // (hash(src) satisfies the (src, dst) clustering requirement), so a
-    // caller passing a raw multi-edge frame pays ONE edge exchange where
-    // a pre-distinct'd frame pays two — its distinct's hash(src, dst)
-    // exchange, then this hash(src) one. One Exchange removed from the
-    // plan; the r16 interleaved A/B on g01's bipartite graph was a WASH
-    // at sf0.1 (pairs 5.32/6.48, 3.54/3.60, 3.04/3.45 — the saved
-    // exchange of ~1.2M rows ≈ the added partition-local dedup pass),
-    // kept for the scale shape: at 100 TB shuffled bytes dominate a
-    // local hash-dedup, and low-duplication edge streams shuffle the
-    // same bytes once instead of twice. Default off: callers that
-    // already hold distinct edges skip the redundant dedup pass; a
-    // heavily-duplicated raw stream should also pre-distinct (the
-    // partial aggregate then shrinks what the exchange carries).
-    val eDeg = (if (dedupEdges)
-      e.repartition(col("src")).dropDuplicates("src", "dst")
-    else
-      e.repartition(col("src"))) // pin the join layout: every iteration
-      .withColumn("deg", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("src")))
-      .persist()               // reuses it, only the rank side moves.
-    // persist (not localCheckpoint): the cached plan keeps its
-    // hash-partitioning visible to Catalyst, so the per-iteration join
-    // reuses the layout instead of re-shuffling the edge side.
-    eDeg.count()
-    var rank = eDeg.select(col("src").as("node")).distinct()
-      .withColumn("rank", lit(One))
-    // aqeOff is the CALLER's measured choice — see
-    // IterativeLoop.maybeWithoutAqe (g01 wins off, t21 wins on)
-    IterativeLoop.maybeWithoutAqe(edges.sparkSession, aqeOff) {
-      for (i <- 1 to iters) {
-        rank = eDeg.join(rank, eDeg("src") === rank("node"))
-          .select(col("dst"), expr("rank div deg").as("contrib"))
-          .groupBy(col("dst").as("node_"))
-          .agg(expr(s"${3 * One / 20} + (17 * sum(contrib)) div 20")
-            .as("rank"))
-          .select(col("node_").as("node"), col("rank"))
-        // Materialize the node-sized rank frame every SECOND round. The
-        // cadence is measured (sf0.1, min-of-4 warm runs): every round
-        // 4.3 s, every 2nd 3.2 s, every 3rd 9.2 s — one lazy round costs
-        // less than its checkpoint job, two lazy rounds tip AQE into
-        // replanning/re-shuffling the doubled tree (the fully-lazy DAG
-        // was 3x slower still). The checkpoint writes a node-sized
-        // frame — cheap relative to the edge joins it caps.
-        if (i % 2 == 0 || i == iters) rank = rank.localCheckpoint()
-      }
-    }
-    eDeg.unpersist() // final rank is checkpointed — lineage-free
-    rank
-  }
+      aqeOff: Boolean = true): DataFrame =
+    loop(edges, iters, aqeOff)(
+      _.select(col("src").as("node")).distinct()
+        .withColumn("rank", lit(One)))(
+      _.select(col("node_").as("node"),
+        (lit(3 * One / 20) + col("damped")).as("rank")))
 
   /** PERSONALIZED PageRank (Jeh & Widom 2003): the teleport mass
     * returns to a SEED set instead of every node — the propagate-
@@ -142,33 +86,36 @@ object PageRank {
     * seeded nor reached stay absent. */
   def personalizedRanks(edges: DataFrame, seeds: DataFrame,
       iters: Int): DataFrame = {
-    require(iters >= 1, "at least one iteration")
-    val e = edges.select(col("src"), col("dst"))
-    val eDeg = e
-      .repartition(col("src"))
-      .withColumn("deg", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("src")))
-      .persist()
-    eDeg.count()
     // seeds are read every iteration (the reset join) — tiny, pin once
     val s = seeds.select(col("node")).distinct().localCheckpoint()
-    var rank = s.withColumn("rank", lit(One))
-    IterativeLoop.withoutAqe(edges.sparkSession) {
-      for (i <- 1 to iters) {
-        val damped = eDeg.join(rank, eDeg("src") === rank("node"))
-          .select(col("dst"), expr("rank div deg").as("contrib"))
-          .groupBy(col("dst").as("node_"))
-          .agg(expr("(17 * sum(contrib)) div 20").as("damped"))
-        rank = damped
-          .join(s.withColumn("reset", lit(3 * One / 20)),
-            col("node_") === col("node"), "full_outer")
-          .select(coalesce(col("node_"), col("node")).as("node"),
-            (coalesce(col("damped"), lit(0L)) +
-              coalesce(col("reset"), lit(0L))).as("rank"))
-        if (i % 2 == 0 || i == iters) rank = rank.localCheckpoint()
-      }
+    loop(edges, iters, aqeOff = true)(_ => s.withColumn("rank", lit(One)))(
+      _.join(s.withColumn("reset", lit(3 * One / 20)),
+          col("node_") === col("node"), "full_outer")
+        .select(coalesce(col("node_"), col("node")).as("node"),
+          (coalesce(col("damped"), lit(0L)) +
+            coalesce(col("reset"), lit(0L))).as("rank")))
+  }
+
+  /** The shared iteration: per round, every node's rank is split over
+    * its out-edges (`rank div deg`), summed per destination and damped
+    * (`(17 · Σ) div 20`) into (node_, damped); `teleport` turns that
+    * into the next (node, rank) frame. `init` builds round 0's ranks
+    * from the pinned (src, dst, deg) frame. */
+  private def loop(edges: DataFrame, iters: Int, aqeOff: Boolean)(
+      init: DataFrame => DataFrame)(
+      teleport: DataFrame => DataFrame): DataFrame = {
+    require(iters >= 1, "at least one iteration")
+    // out-degree as a window over the pin's own src exchange — one
+    // exchange builds both, where the groupBy+self-join form paid two
+    // extra shuffles of the edge list (measured ~0.9 s of g01's sf0.1
+    // constant)
+    val eDeg = GraphLoop.pin(edges, "src",
+      count(lit(1)).over(Window.partitionBy("src")).as("deg"))
+    GraphLoop.rounds(init(eDeg), iters, every = 2, aqeOff) { rank =>
+      teleport(eDeg.join(rank, eDeg("src") === rank("node"))
+        .select(col("dst"), expr("rank div deg").as("contrib"))
+        .groupBy(col("dst").as("node_"))
+        .agg(expr("(17 * sum(contrib)) div 20").as("damped")))
     }
-    eDeg.unpersist()
-    rank
   }
 }

@@ -49,8 +49,9 @@ object Triangles {
     perNodeCountsOn(e0, degrees(e0))
   }
 
-  /** Node degrees of an undirected-distinct (a, b) edge frame. */
-  private def degrees(e0: DataFrame): DataFrame =
+  /** Node degrees (n, deg) of an undirected-distinct (a, b) edge frame;
+    * shared with [[LinkPrediction]]. */
+  private[operators] def degrees(e0: DataFrame): DataFrame =
     e0.select(explode(array(col("a"), col("b"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("deg"))
 

@@ -73,18 +73,14 @@ object AnalyticsQueries {
   // would use. Top 20 nodes.
   private def g01(s: SparkSession, dir: String): DataFrame = {
     val li = Tables(s, dir, "lineitem")
-    // RAW pairs both ways — dedup rides the operator's own src-keyed
-    // exchange (ranks(dedupEdges = true)): one edge shuffle instead of
-    // a hash(src, dst) distinct followed by the hash(src) repartition.
-    // Content identical (same distinct pairs, same degrees, bit-
-    // identical ranks); a local WASH in the r16 interleaved A/B, kept
-    // for the one-fewer-Exchange scale shape — see ranks() scaladoc
+    // distinct order->part pairs, both ways (orders are even, parts
+    // odd, so the two directions never collide)
     val fwd = li.select(
       (col("l_orderkey") * 2).as("src"),
-      (col("l_partkey") * 2 + 1).as("dst"))
+      (col("l_partkey") * 2 + 1).as("dst")).distinct()
     val edges = fwd.unionByName(
       fwd.select(col("dst").as("src"), col("src").as("dst")))
-    PageRank.ranks(edges, iters = 5, dedupEdges = true)
+    PageRank.ranks(edges, iters = 5)
       .select(col("node"), col("rank").as("pr"))
       .orderBy(col("pr").desc, col("node"))
       .limit(20)
@@ -750,6 +746,37 @@ object AnalyticsQueries {
       "SELECT side, node, score, CAST(rk AS INT) AS rank FROM t " +
       "WHERE rk <= 20 ORDER BY side, rank"
 
+  // The co-purchase graph every graph oracle replays (the Spark side's
+  // coPurchase4/coPurchase4Sym): op = the (order, part) pairs of every
+  // `every`-th order, eu = the undirected distinct part edges (a < b),
+  // e = eu symmetrized as (src, dst).
+  private[queries] def coPurchaseSql(every: Int): String =
+    "op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p " +
+      s"FROM lineitem WHERE l_orderkey % $every = 0), " +
+      "eu AS (SELECT DISTINCT x.p AS a, y.p AS b FROM op x JOIN op y " +
+      "ON x.o = y.o AND x.p < y.p), " +
+      "e AS (SELECT a AS src, b AS dst FROM eu " +
+      "UNION ALL SELECT b, a FROM eu)"
+
+  // g02/g06's triangle replay over the every-4th co-purchase graph: d =
+  // node degrees, eo = each edge oriented by (deg, node) as Triangles
+  // does, tri = every triangle once as an ordered wedge + closing edge,
+  // pn = one row per (triangle, member node)
+  private[queries] val trianglesSql: String =
+    coPurchaseSql(4) + ", " +
+      "d AS (SELECT n, count(*) AS deg FROM " +
+      "(SELECT a AS n FROM eu UNION ALL SELECT b FROM eu) GROUP BY n), " +
+      "eo AS (SELECT CASE WHEN (da.deg, eu.a) < (db.deg, eu.b) " +
+      "THEN eu.a ELSE eu.b END AS src, " +
+      "CASE WHEN (da.deg, eu.a) < (db.deg, eu.b) " +
+      "THEN eu.b ELSE eu.a END AS dst " +
+      "FROM eu JOIN d da ON da.n = eu.a JOIN d db ON db.n = eu.b), " +
+      "tri AS (SELECT e1.src AS u, e1.dst AS v, e2.dst AS w " +
+      "FROM eo e1 JOIN eo e2 ON e1.dst = e2.src " +
+      "JOIN eo e3 ON e3.src = e1.src AND e3.dst = e2.dst), " +
+      "pn AS (SELECT u AS node FROM tri UNION ALL " +
+      "SELECT v FROM tri UNION ALL SELECT w FROM tri)"
+
   private[queries] def pagerankUnrollSql(iters: Int): String = {
     val init =
       "d AS (SELECT src, count(*) AS deg FROM e GROUP BY src), " +
@@ -771,13 +798,8 @@ object AnalyticsQueries {
     val k = 4
     val rounds = 3
     val head =
-      "WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p " +
-        "FROM lineitem WHERE l_orderkey % 4 = 0), " +
-        "eu AS (SELECT DISTINCT x.p AS a, y.p AS b FROM op x JOIN op y " +
-        "ON x.o = y.o AND x.p < y.p), " +
-        "e0 AS (SELECT a AS src, b AS dst FROM eu " +
-        "UNION ALL SELECT b, a FROM eu), " +
-        s"d0 AS (SELECT src AS node, count(*) AS deg FROM e0 GROUP BY src), " +
+      "WITH " + coPurchaseSql(4) + ", e0 AS (SELECT src, dst FROM e), " +
+        "d0 AS (SELECT src AS node, count(*) AS deg FROM e0 GROUP BY src), " +
         s"k0 AS (SELECT node FROM d0 WHERE deg >= $k)"
     val stages = (1 to rounds).map { i =>
       s"e$i AS (SELECT e.src, e.dst FROM e${i - 1} e " +
@@ -796,14 +818,8 @@ object AnalyticsQueries {
   // identical deterministic tie-break as the Spark side
   private val labelPropSql: String = {
     val rounds = 3
-    val head =
-      "WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p " +
-        "FROM lineitem WHERE l_orderkey % 4 = 0), " +
-        "eu AS (SELECT DISTINCT x.p AS a, y.p AS b FROM op x JOIN op y " +
-        "ON x.o = y.o AND x.p < y.p), " +
-        "e AS (SELECT a AS src, b AS dst FROM eu " +
-        "UNION ALL SELECT b, a FROM eu), " +
-        "l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM e)"
+    val head = "WITH " + coPurchaseSql(4) +
+      ", l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM e)"
     val stages = (1 to rounds).map { i =>
       s"c$i AS (SELECT e.dst AS node, l.lbl, count(*) AS c " +
         s"FROM e JOIN l${i - 1} l ON e.src = l.node " +
@@ -823,12 +839,7 @@ object AnalyticsQueries {
   private val pprSql: String = {
     val iters = 3
     val head =
-      "WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p " +
-        "FROM lineitem WHERE l_orderkey % 4 = 0), " +
-        "eu AS (SELECT DISTINCT x.p AS a, y.p AS b FROM op x JOIN op y " +
-        "ON x.o = y.o AND x.p < y.p), " +
-        "e AS (SELECT a AS src, b AS dst FROM eu " +
-        "UNION ALL SELECT b, a FROM eu), " +
+      "WITH " + coPurchaseSql(4) + ", " +
         "s AS (SELECT DISTINCT p AS node FROM op WHERE p % 500 = 0), " +
         "d AS (SELECT src, count(*) AS deg FROM e GROUP BY src), " +
         "r0 AS (SELECT node, CAST(1000000000000 AS BIGINT) AS pr FROM s)"
@@ -957,12 +968,7 @@ object AnalyticsQueries {
     // recursive frontier expansion; UNION (distinct) bounds the
     // explored (node, hop) pairs, min(hop) = shortest distance
     "g03_bfs_layers" ->
-      ("WITH RECURSIVE op AS (SELECT DISTINCT l_orderkey AS o, " +
-        "l_partkey AS p FROM lineitem WHERE l_orderkey % 4 = 0), " +
-        "e0 AS (SELECT DISTINCT x.p AS a, y.p AS b FROM op x JOIN op y " +
-        "ON x.o = y.o AND x.p < y.p), " +
-        "e AS (SELECT a AS src, b AS dst FROM e0 " +
-        "UNION ALL SELECT b, a FROM e0), " +
+      ("WITH RECURSIVE " + coPurchaseSql(4) + ", " +
         "s AS (SELECT DISTINCT p AS node FROM op WHERE p % 500 = 0), " +
         "bfs(node, hop) AS (SELECT node, 0 FROM s " +
         "UNION SELECT e.dst, bfs.hop + 1 FROM bfs JOIN e " +
@@ -1008,23 +1014,20 @@ object AnalyticsQueries {
     // round(1e9/ln(deg)) quantized terms -> exact integer pair sums ->
     // non-edge anti-join; term sums cast to BIGINT (HUGEINT)
     "g08_link_predict" ->
-      ("WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p " +
-        "FROM lineitem WHERE l_orderkey % 8 = 0), " +
-        "e0 AS (SELECT DISTINCT x.p AS a, y.p AS b FROM op x JOIN op y " +
-        "ON x.o = y.o AND x.p < y.p), " +
+      ("WITH " + coPurchaseSql(8) + ", " +
         "deg AS (SELECT n, count(*) AS d FROM " +
-        "(SELECT a AS n FROM e0 UNION ALL SELECT b FROM e0) GROUP BY n), " +
+        "(SELECT a AS n FROM eu UNION ALL SELECT b FROM eu) GROUP BY n), " +
         "wt AS (SELECT n AS w, CAST(round(1000000000.0 / " +
         "ln(CAST(d AS DOUBLE))) AS BIGINT) AS term FROM deg " +
         "WHERE d >= 2 AND d <= 48), " +
-        "adj AS (SELECT a AS u, b AS w FROM e0 " +
-        "UNION ALL SELECT b, a FROM e0), " +
+        "adj AS (SELECT a AS u, b AS w FROM eu " +
+        "UNION ALL SELECT b, a FROM eu), " +
         "cap AS (SELECT adj.u, adj.w, wt.term FROM adj JOIN wt USING (w)), " +
         "cand AS (SELECT p.u AS a, q.u AS b, count(*) AS cn, " +
         "CAST(sum(p.term) AS BIGINT) AS aa_e9 FROM cap p JOIN cap q " +
         "ON p.w = q.w AND p.u < q.u GROUP BY p.u, q.u) " +
-        "SELECT cand.a, cand.b, cn, aa_e9 FROM cand LEFT JOIN e0 " +
-        "ON cand.a = e0.a AND cand.b = e0.b WHERE e0.a IS NULL " +
+        "SELECT cand.a, cand.b, cn, aa_e9 FROM cand LEFT JOIN eu " +
+        "ON cand.a = eu.a AND cand.b = eu.b WHERE eu.a IS NULL " +
         "ORDER BY aa_e9 DESC, cand.a, cand.b LIMIT 20"),
     // identical quantize -> hi/lo long-split conditional sums ->
     // the same fixed-shape Welch t / Satterthwaite df double chain
@@ -1088,14 +1091,9 @@ object AnalyticsQueries {
     // the kcore/g02 edge CTE -> degrees -> (deg desc, node) rank ->
     // t27's decimal-quantized log-log OLS chain verbatim
     "g10_degree_zipf" ->
-      ("WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p " +
-        "FROM lineitem WHERE l_orderkey % 4 = 0), " +
-        "eu AS (SELECT DISTINCT x.p AS a, y.p AS b FROM op x JOIN op y " +
-        "ON x.o = y.o AND x.p < y.p), " +
-        "e0 AS (SELECT a AS src, b AS dst FROM eu " +
-        "UNION ALL SELECT b, a FROM eu), " +
+      ("WITH " + coPurchaseSql(4) + ", " +
         "d AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg " +
-        "FROM e0 GROUP BY 1), " +
+        "FROM e GROUP BY 1), " +
         "r AS (SELECT deg, row_number() OVER " +
         "(ORDER BY deg DESC, node) AS rank FROM d), " +
         "xy AS (SELECT deg, ln(CAST(rank AS DOUBLE)) AS x, " +
@@ -1199,43 +1197,13 @@ object AnalyticsQueries {
     // same (deg, node) orientation -> every triangle counted exactly
     // once as an ordered wedge + closing edge
     "g02_triangles" ->
-      ("WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p " +
-        "FROM lineitem WHERE l_orderkey % 4 = 0), " +
-        "e0 AS (SELECT DISTINCT x.p AS a, y.p AS b FROM op x JOIN op y " +
-        "ON x.o = y.o AND x.p < y.p), " +
-        "d AS (SELECT n, count(*) AS deg FROM " +
-        "(SELECT a AS n FROM e0 UNION ALL SELECT b FROM e0) GROUP BY n), " +
-        "eo AS (SELECT CASE WHEN (da.deg, e0.a) < (db.deg, e0.b) " +
-        "THEN e0.a ELSE e0.b END AS src, " +
-        "CASE WHEN (da.deg, e0.a) < (db.deg, e0.b) " +
-        "THEN e0.b ELSE e0.a END AS dst " +
-        "FROM e0 JOIN d da ON da.n = e0.a JOIN d db ON db.n = e0.b), " +
-        "tri AS (SELECT e1.src AS u, e1.dst AS v, e2.dst AS w " +
-        "FROM eo e1 JOIN eo e2 ON e1.dst = e2.src " +
-        "JOIN eo e3 ON e3.src = e1.src AND e3.dst = e2.dst), " +
-        "pn AS (SELECT u AS node FROM tri UNION ALL " +
-        "SELECT v FROM tri UNION ALL SELECT w FROM tri) " +
+      ("WITH " + trianglesSql + " " +
         "SELECT node, count(*) AS triangles FROM pn GROUP BY node " +
         "ORDER BY triangles DESC, node LIMIT 20"),
     // g02's orientation replay + the degree/coefficient tail: exact
     // ppm integer division in both engines, deg >= 2 contract
     "g06_clustering_coeff" ->
-      ("WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p " +
-        "FROM lineitem WHERE l_orderkey % 4 = 0), " +
-        "e0 AS (SELECT DISTINCT x.p AS a, y.p AS b FROM op x JOIN op y " +
-        "ON x.o = y.o AND x.p < y.p), " +
-        "d AS (SELECT n, count(*) AS deg FROM " +
-        "(SELECT a AS n FROM e0 UNION ALL SELECT b FROM e0) GROUP BY n), " +
-        "eo AS (SELECT CASE WHEN (da.deg, e0.a) < (db.deg, e0.b) " +
-        "THEN e0.a ELSE e0.b END AS src, " +
-        "CASE WHEN (da.deg, e0.a) < (db.deg, e0.b) " +
-        "THEN e0.b ELSE e0.a END AS dst " +
-        "FROM e0 JOIN d da ON da.n = e0.a JOIN d db ON db.n = e0.b), " +
-        "tri AS (SELECT e1.src AS u, e1.dst AS v, e2.dst AS w " +
-        "FROM eo e1 JOIN eo e2 ON e1.dst = e2.src " +
-        "JOIN eo e3 ON e3.src = e1.src AND e3.dst = e2.dst), " +
-        "pn AS (SELECT u AS node FROM tri UNION ALL " +
-        "SELECT v FROM tri UNION ALL SELECT w FROM tri), " +
+      ("WITH " + trianglesSql + ", " +
         "tc AS (SELECT node, CAST(count(*) AS BIGINT) AS triangles " +
         "FROM pn GROUP BY node) " +
         "SELECT d.n AS node, CAST(d.deg AS BIGINT) AS deg, " +

@@ -17,6 +17,7 @@ class SessionConfigSpec extends SparkSpec {
     assert(conf.get("spark.sql.extensions") == "graft.plans.GraftExtensions")
     assert(conf.get("spark.sql.codegen.cache.maxEntries") ==
       GraftSession.CodegenCacheEntries.toString)
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
   }
 
   test("no program file other than GraftSession builds a SparkSession") {

@@ -20,6 +20,12 @@ class SparkEntrySpec extends SparkSpec {
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
+  test("reading every table leaves the session's settings unchanged") {
+    val before = spark.conf.getAll
+    Tables.names.foreach(n => Tables(spark, dir, n).schema)
+    assert(spark.conf.getAll === before)
+  }
+
   test("oracleSql keys are a subset of queries keys; entry returns rows") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracle entries without queries: $orphans")

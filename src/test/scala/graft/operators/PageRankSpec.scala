@@ -8,8 +8,7 @@ class PageRankSpec extends SparkSpec {
   import spark.implicits._
 
   /** Local integer reference: identical fixed-point update. */
-  private def local(edges: Seq[(String, String)],
-      iters: Int): Map[String, Long] = {
+  private def local[N](edges: Seq[(N, N)], iters: Int): Map[N, Long] = {
     val deg = edges.groupBy(_._1).map { case (s, es) => s -> es.size.toLong }
     var rank = deg.keys.map(_ -> PageRank.One).toMap
     for (_ <- 0 until iters) {
@@ -24,7 +23,7 @@ class PageRankSpec extends SparkSpec {
     rank
   }
 
-  private def sym(e: Seq[(String, String)]) = e ++ e.map(_.swap)
+  private def sym[N](e: Seq[(N, N)]) = e ++ e.map(_.swap)
 
   test("distributed == local integer reference on a random graph") {
     val rnd = new scala.util.Random(7)
@@ -33,6 +32,25 @@ class PageRankSpec extends SparkSpec {
     val got = PageRank.ranks(edges.toDF("src", "dst"), iters = 4)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got === local(edges, 4))
+  }
+
+  test("g01's distinct bipartite edges over a multi-edge input: the " +
+    "reference's ranks and top 20") {
+    // order -> part pairs with repeats (one per line item), tagged as
+    // g01 tags them: orders even, parts odd
+    val rnd = new scala.util.Random(11)
+    val raw = (1 to 400).map(_ =>
+      (2L * rnd.nextInt(60), 2L * rnd.nextInt(25) + 1))
+    assert(raw.distinct.size < raw.size)
+    val fwd = raw.toDF("src", "dst").distinct()
+    val edges = fwd.unionByName(fwd.select($"dst".as("src"), $"src".as("dst")))
+    val got = PageRank.ranks(edges, iters = 5)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val want = local(sym(raw.distinct), 5)
+    assert(got === want)
+    def top20(m: Map[Long, Long]) =
+      m.toSeq.sortBy { case (n, r) => (-r, n) }.take(20)
+    assert(top20(got) === top20(want))
   }
 
   test("star graph: the hub outranks every leaf; leaves tie exactly") {

@@ -12,10 +12,10 @@
 # SPARK_GRAFT_ITERS, SPARK_DRIVER_MEM, ...); TMPDIR picks where the
 # worktrees go (default /tmp).
 #
-# Each revision is checked out into its own detached git worktree and
-# runs `SPARK_GRAFT_ONLY=<gates> tools/bench.sh` there, pairs in ABAB
-# order with the side that goes first alternating (A B, B A, A B, ...),
-# so drift in the host's load lands on both sides. Every record is
+# Each revision is checked out into its own detached git worktree
+# (tools/worktrees.sh) and runs `SPARK_GRAFT_ONLY=<gates> tools/bench.sh`
+# there, pairs in ABAB order with the side that goes first alternating
+# (A B, B A, A B, ...), so drift in the host's load lands on both sides. Every record is
 # written inside a worktree: the main checkout's committed
 # bench_last.json / bench_subset.json are never touched. It prints, per
 # gate, each side's min seconds over the pairs, the B/A ratio of those
@@ -30,17 +30,8 @@ if [ $# -lt 3 ]; then
   exit 2
 fi
 revA=$1 revB=$2 gates=$3 pairs=${4:-3}
-repo=$(cd "$(dirname "$0")/.." && pwd)
-work=$(mktemp -d "${TMPDIR:-/tmp}/graft-ab.XXXXXX")
-cleanup() {
-  for side in a b; do
-    git -C "$repo" worktree remove --force "$work/$side" 2>/dev/null || true
-  done
-  rm -rf "$work"
-}
-trap cleanup EXIT
-git -C "$repo" worktree add --detach -q "$work/a" "$revA"
-git -C "$repo" worktree add --detach -q "$work/b" "$revB"
+. "$(dirname "$0")/worktrees.sh"
+worktrees ab "$revA" "$revB"
 
 for i in $(seq 1 "$pairs"); do
   if [ $((i % 2)) -eq 1 ]; then order="a b"; else order="b a"; fi
